@@ -18,7 +18,6 @@ which is the 100 TB path (SURVEY §7 "hard parts").
 
 from __future__ import annotations
 
-import contextlib
 import glob
 import os
 import shutil
@@ -35,6 +34,7 @@ from csv2parquet_spark.converter.schema_json import (
     arrow_json_to_struct,
     struct_to_arrow_json,
 )
+from csv2parquet_spark.session import conf_override
 
 #: flag → (spark writer option, hadoop conf) for the W1-W10 table.
 _CODECS = {"uncompressed", "snappy", "gzip", "lzo", "brotli", "lz4", "zstd"}
@@ -137,7 +137,6 @@ def _effective_multiline(csv_path: str, opts: ConvertOptions) -> bool:
     return False
 
 
-@contextlib.contextmanager
 def _tuned_splits(spark: SparkSession, csv_path: str):
     """Right-size ``spark.sql.files.maxPartitionBytes`` to the input so a
     splittable CSV fans out to ~2× the core count (clamped to
@@ -151,20 +150,11 @@ def _tuned_splits(spark: SparkSession, csv_path: str):
     # Only worth it when the file can actually feed every core ≥16 MB
     # splits (≈1 GB at 32 cores) — below that, fixed job overhead
     # dominates and the default split size is fine.
-    if size is None or size < 2 * para * (16 << 20):
-        yield
-        return
-    tgt = min(max(size // (2 * para), 16 << 20), 128 << 20)
-    key = "spark.sql.files.maxPartitionBytes"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, str(tgt))
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+    pins = {}
+    if size is not None and size >= 2 * para * (16 << 20):
+        tgt = min(max(size // (2 * para), 16 << 20), 128 << 20)
+        pins["spark.sql.files.maxPartitionBytes"] = str(tgt)
+    return conf_override(spark.conf, pins)
 
 
 def _resolve_schema(
@@ -200,8 +190,8 @@ def read_csv(spark: SparkSession, csv_path: str, opts: ConvertOptions) -> DataFr
     return reader.csv(csv_path)
 
 
-def _apply_writer_conf(spark: SparkSession, opts: ConvertOptions) -> dict[str, str | None]:
-    """W1-W9 → parquet-mr Hadoop confs; returns prior values to restore.
+def _writer_conf(opts: ConvertOptions) -> dict[str, str]:
+    """W1-W9 → the parquet-mr Hadoop confs to pin for the write.
 
     W2 (forced column encodings) maps to parquet-mr's nearest knobs
     (writer version + dictionary toggle) — residual gaps documented on
@@ -210,7 +200,6 @@ def _apply_writer_conf(spark: SparkSession, opts: ConvertOptions) -> dict[str, s
     statistics=none became reachable with parquet-mr 1.16
     (parquet.column.statistics.enabled) and is wired below.
     """
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     dictionary = opts.dictionary
     writer_version = None
     if opts.encoding in {
@@ -267,15 +256,7 @@ def _apply_writer_conf(spark: SparkSession, opts: ConvertOptions) -> dict[str, s
             f"parquet-mr; {fallback}",
             stacklevel=3,
         )
-    # Record None for keys that were UNSET so restore can conf.unset()
-    # them — restoring as "" would make a later parquet write in the same
-    # JVM feed Hadoop's Configuration.getInt an empty string (NFE).
-    prior: dict[str, str | None] = {}
-    for k, v in wanted.items():
-        if v is not None:
-            prior[k] = conf.get(k)
-            conf.set(k, v)
-    return prior
+    return {k: v for k, v in wanted.items() if v is not None}
 
 
 def convert(
@@ -381,17 +362,9 @@ def write_parquet(
             if opts.compression not in _CODECS:
                 raise ValueError(f"unknown codec {opts.compression!r}")
             writer = writer.option("compression", opts.compression)
-        prior = _apply_writer_conf(spark, opts)
-        try:
-            with _tuned_splits(spark, src_path):
-                writer.mode("overwrite").parquet(parquet_path)
-        finally:
-            conf = spark.sparkContext._jsc.hadoopConfiguration()
-            for k, v in prior.items():
-                if v is None:
-                    conf.unset(k)
-                else:
-                    conf.set(k, v)
+        hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+        with conf_override(hadoop, _writer_conf(opts)), _tuned_splits(spark, src_path):
+            writer.mode("overwrite").parquet(parquet_path)
         _verify_statistics_dropped(parquet_path, opts)
         _apply_created_by(parquet_path, opts)
         return
@@ -420,19 +393,11 @@ def write_parquet(
     for col in opts.bloom_filter_columns or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
 
-    prior = _apply_writer_conf(spark, opts)
-    try:
-        # Split tuning must be live at ACTION time (FilePartition sizing
-        # reads the session conf when the scan is planned for execution).
-        with _tuned_splits(spark, src_path):
-            _run_write(spark, writer, opts, parquet_path)
-    finally:
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        for k, v in prior.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+    # Split tuning must be live at ACTION time (FilePartition sizing
+    # reads the session conf when the scan is planned for execution).
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    with conf_override(hadoop, _writer_conf(opts)), _tuned_splits(spark, src_path):
+        _run_write(spark, writer, opts, parquet_path)
     _verify_statistics_dropped(parquet_path, opts)
     _apply_created_by(parquet_path, opts)
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from csv2parquet_spark.session import no_aqe
+
 # One-shot latch for the SPARK_GRAFT_DIM_GUARD=0 warning below.
 _DIM_GUARD_WARNED = False
 
@@ -86,13 +88,8 @@ def localcheckpoint_partitioned(df: DataFrame) -> DataFrame:
 
     if os.environ.get("SPARK_GRAFT_CKPT_PART", "1") == "0":  # A/B + debug
         return df.localCheckpoint()
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with no_aqe(df.sparkSession):
         return df.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def assert_dim_sized(

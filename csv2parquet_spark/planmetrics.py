@@ -25,11 +25,21 @@ import re
 
 from pyspark.sql import DataFrame
 
+from csv2parquet_spark.session import conf_override
+
 # Run-varying tokens inside a physical plan string: expression ids
 # (`l_orderkey#123`), plan ids (`[plan_id=456]`), and exchange/subquery
 # ids (`[id=#78]`) all come from JVM-global counters that differ run to
 # run while the plan SHAPE is identical. Strip them before hashing.
 _PLAN_ID_NOISE = re.compile(r"#\d+|plan_id=\d+|\[id=[^\]]*\]")
+
+
+def _capture_conf(df: DataFrame, shuffle_partitions: int | None):
+    """AQE off (and shuffle partitions pinned, if given) for a capture."""
+    pins = {"spark.sql.adaptive.enabled": "false"}
+    if shuffle_partitions is not None:
+        pins["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    return conf_override(df.sparkSession.conf, pins)
 
 
 def plan_signature(df: DataFrame, shuffle_partitions: int | None = None) -> str:
@@ -51,21 +61,8 @@ def plan_signature(df: DataFrame, shuffle_partitions: int | None = None) -> str:
     ``hashpartitioning(...)`` nodes, so a conf drift changes the
     signature — which is correct, because it changes the volume too).
     """
-    spark = df.sparkSession
-    pins = {"spark.sql.adaptive.enabled": "false"}
-    if shuffle_partitions is not None:
-        pins["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    prev = {k: spark.conf.get(k, None) for k in pins}
-    for k, v in pins.items():
-        spark.conf.set(k, v)
-    try:
+    with _capture_conf(df, shuffle_partitions):
         raw = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return hashlib.sha256(_PLAN_ID_NOISE.sub("", raw).encode()).hexdigest()
 
 
@@ -141,23 +138,10 @@ def executed_shuffle_metrics(
         if "QueryStage" in name:  # pragma: no cover - AQE off
             walk(node.plan())
 
-    spark = df.sparkSession
-    pins = {"spark.sql.adaptive.enabled": "false"}
-    if shuffle_partitions is not None:
-        pins["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    prev = {k: spark.conf.get(k, None) for k in pins}
-    for k, v in pins.items():
-        spark.conf.set(k, v)
-    try:
+    with _capture_conf(df, shuffle_partitions):
         qe = df._jdf.queryExecution()
         qe.executedPlan().execute().count()
         walk(qe.executedPlan())
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return {"records": int(rec), "bytes": int(byt)}
 
 

@@ -399,7 +399,7 @@ def logreg_gd_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_quantity") / F.lit(50.0)).alias("x1"),
         (F.col("l_discount") * F.lit(10.0)).alias("x2"),
     )
-    from csv2parquet_spark.queries.helpers import no_aqe
+    from csv2parquet_spark.session import no_aqe
 
     # single-file fixtures scan as ONE task; spread the checkpointed
     # training set so every gradient pass runs on all cores (A/B'd
@@ -417,7 +417,7 @@ def logreg_gd_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     out: list[tuple[int, float, float, float]] = []
     # no_aqe: AQE splits each 1-row gradient aggregate into two
     # driver-sequenced stage-jobs (13 jobs → 7 for the key; loop median
-    # 1.82 → 1.53 s interleaved) with nothing to re-plan — see helpers.
+    # 1.82 → 1.53 s interleaved) with nothing to re-plan — see session.no_aqe.
     with no_aqe(spark):
         for it in range(1, _GD_ITERS + 1):
             z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")

@@ -61,34 +61,6 @@ def sql_davg(expr: str, alias: str) -> str:
     )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def no_aqe(spark):
-    """Disable AQE around a driver-side iterative collect loop.
-
-    AQE submits every query stage as its OWN driver-sequenced job, so
-    a model-sized two-stage aggregate (partial over the checkpointed
-    training set → 1-row final) costs two job round-trips per
-    iteration instead of one — pure scheduler latency, since there is
-    nothing for AQE to re-plan in a fixed-shape scalar aggregate over
-    a checkpoint (no joins, no skew, nothing to coalesce that the
-    static shuffle.partitions doesn't already size). Measured on the
-    logreg GD loop (5 iterations, sf0.1, interleaved ×6): median
-    1.82 → 1.53 s, identical weights. Restores the previous setting on
-    exit; use ONLY around model-sized collect loops — the returned
-    DataFrame a query hands the bench must be planned under the
-    session's normal AQE conf.
-    """
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
 def local_result_df(spark, rows, ddl_schema: str):
     """Model-sized driver-computed result rows → DataFrame as a pure-JVM
     LocalRelation (SQL VALUES), NOT ``spark.createDataFrame(list)``.

@@ -498,13 +498,13 @@ def kmeans_train_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).when(F.col("dc2") <= F.col("dc3"), 2).otherwise(3)
         return d.select("vec_id", "embedding", cl.alias("cluster"))
 
-    from csv2parquet_spark.queries.helpers import no_aqe
+    from csv2parquet_spark.session import no_aqe
 
     assigned = None
     mrows: list = []
     # no_aqe around the training loop: each per-iteration mean
     # aggregate is a fixed-shape two-stage collect; AQE only adds a
-    # second driver-sequenced stage-job per iteration (see helpers).
+    # second driver-sequenced stage-job per iteration (see session.no_aqe).
     with no_aqe(spark):
         for _ in range(_KM_ITER):
             assigned = assign(cents)

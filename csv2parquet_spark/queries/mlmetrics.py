@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv2parquet_spark.operators.ranking import global_cumsum
-from csv2parquet_spark.operators.scan import parallelize_scan as _ps
 from csv2parquet_spark.queries.registry import register
 from csv2parquet_spark.tables import table
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from csv2parquet_spark.queries.helpers import sql_dsum
 from csv2parquet_spark.queries.registry import register
-from csv2parquet_spark.tables import table
+from csv2parquet_spark.tables import ensure_session_confs, table
 
 
 def footer_stats_session(spark: SparkSession) -> SparkSession:
@@ -45,8 +45,7 @@ def footer_stats_session(spark: SparkSession) -> SparkSession:
     s2 = spark.newSession()
     s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     s2.conf.set("spark.sql.sources.useV1SourceList", "")
-    s2.conf.set("spark.sql.session.timeZone", "UTC")
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_session_confs(s2)
     return s2
 
 
@@ -189,8 +188,7 @@ def bloom_join_session(spark: SparkSession) -> SparkSession:
         "1KB",
     )
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.session.timeZone", "UTC")
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_session_confs(s2)
     return s2
 
 

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from csv2parquet_spark.session import ENGINE_CONFS
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -31,12 +33,11 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
-    """Runtime-settable confs every query depends on, set defensively so
-    results are correct even under a caller-provided SparkSession:
-    UTC session TZ (timestamp value parity) and nanos-as-long parquet
-    reads (events.ts is TIMESTAMP(NANOS), unreadable otherwise)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Set :data:`~csv2parquet_spark.session.ENGINE_CONFS` defensively,
+    so results are correct even under a caller-provided or child
+    SparkSession."""
+    for k, v in ENGINE_CONFS.items():
+        spark.conf.set(k, v)
 
 
 # Resolved-relation memo (r11 optimization): `spark.read.parquet` builds
@@ -50,7 +51,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
 # resolved DataFrame (a logical plan handle — NOT data, NOT results;
 # every action still scans parquet), keyed by (applicationId, path,
 # mtime_ns, size) so a rewritten fixture or a new SparkContext misses.
-# SPARK_GRAFT_TABLE_MEMO=0 disables it for debugging.
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -59,46 +59,43 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    memo_on = os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") == "1"
-    key = None
-    if memo_on:
-        try:
-            st = os.stat(path)
-            # Directory fixtures: a file rewritten IN PLACE inside the
-            # directory leaves the dir's own mtime/size unchanged, so
-            # the key also folds in the contained entries' stats
-            # (count, total size, max mtime — a shallow scandir, the
-            # same metadata the file listing reads anyway; ADVICE r11).
-            dir_sig: tuple = ()
-            if os.path.isdir(path):
-                n = tot = newest = 0
-                with os.scandir(path) as it:
-                    for entry in it:
-                        est = entry.stat()
-                        n += 1
-                        tot += est.st_size
-                        newest = max(newest, est.st_mtime_ns)
-                dir_sig = (n, tot, newest)
-            # id(spark) scopes the memo to the exact SparkSession
-            # wrapper: a child session (newSession — own SQLConf, e.g.
-            # scanopt's DSv2 session) must never be handed a relation
-            # resolved under another session's confs.
-            key = (
-                id(spark),
-                spark.sparkContext.applicationId,
-                os.path.abspath(path),
-                st.st_mtime_ns,
-                st.st_size,
-                dir_sig,
-            )
-        except OSError:
-            key = None  # unstat-able (remote URI): build fresh
-        if key is not None and key in _TABLE_MEMO:
-            # LRU touch: re-insertion keeps hot relations inside the
-            # size bound below.
-            df = _TABLE_MEMO.pop(key)
-            _TABLE_MEMO[key] = df
-            return df
+    try:
+        st = os.stat(path)
+        # Directory fixtures: a file rewritten IN PLACE inside the
+        # directory leaves the dir's own mtime/size unchanged, so the
+        # key also folds in the contained entries' stats (count, total
+        # size, max mtime — a shallow scandir, the same metadata the
+        # file listing reads anyway; ADVICE r11).
+        dir_sig: tuple = ()
+        if os.path.isdir(path):
+            n = tot = newest = 0
+            with os.scandir(path) as it:
+                for entry in it:
+                    est = entry.stat()
+                    n += 1
+                    tot += est.st_size
+                    newest = max(newest, est.st_mtime_ns)
+            dir_sig = (n, tot, newest)
+        # id(spark) scopes the memo to the exact SparkSession wrapper: a
+        # child session (newSession — own SQLConf, e.g. scanopt's DSv2
+        # session) must never be handed a relation resolved under
+        # another session's confs.
+        key = (
+            id(spark),
+            spark.sparkContext.applicationId,
+            os.path.abspath(path),
+            st.st_mtime_ns,
+            st.st_size,
+            dir_sig,
+        )
+    except OSError:
+        key = None  # unstat-able (remote URI): build fresh
+    if key is not None and key in _TABLE_MEMO:
+        # LRU touch: re-insertion keeps hot relations inside the size
+        # bound below.
+        df = _TABLE_MEMO.pop(key)
+        _TABLE_MEMO[key] = df
+        return df
     df = spark.read.parquet(path)
     # Parquet naive timestamps surface as TIMESTAMP_NTZ in Spark 4; with
     # the session pinned to UTC, casting to TIMESTAMP (LTZ) is

@@ -1,12 +1,19 @@
-"""Unit tests for queries/helpers.py and the tables.py relation memo —
-the r12 hardening of shared infrastructure (VERDICT r11 item 7 /
-ADVICE r11)."""
+"""Unit tests for queries/helpers.py, session.conf_override and the
+tables.py relation memo — the r12 hardening of shared infrastructure
+(VERDICT r11 item 7 / ADVICE r11)."""
 
 from __future__ import annotations
 
 import math
+import sys
+import threading
 
-from csv2parquet_spark.queries.helpers import local_result_df, no_aqe
+import pytest
+
+from csv2parquet_spark.queries.helpers import local_result_df
+from csv2parquet_spark.session import conf_override, no_aqe
+
+AQE = "spark.sql.adaptive.enabled"
 
 
 def test_local_result_df_empty_rows(spark):
@@ -45,11 +52,146 @@ def test_local_result_df_repr_roundtrip(spark):
         assert got[i] == v
 
 
-def test_no_aqe_restores_setting(spark):
-    before = spark.conf.get("spark.sql.adaptive.enabled")
+def _nested_same_key(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with conf_override(spark.conf, {key: "7"}):
+        with conf_override(spark.conf, {key: "9"}):
+            assert spark.conf.get(key) == "9"
+        assert spark.conf.get(key) == "7"
+    assert spark.conf.get(key) == before
+
+
+def _unset_stays_unset(spark):
+    key = "spark.graft.test.unsetKey"
+    assert spark.conf.get(key, None) is None
+    with conf_override(spark.conf, {key: "x"}):
+        assert spark.conf.get(key) == "x"
+    assert spark.conf.get(key, None) is None  # unset again, not ""
+
+
+def _hadoop_conf(spark):
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "graft.test.hadoopKey"
+    assert conf.get(key, None) is None
+    with conf_override(conf, {key: "x"}):
+        assert conf.get(key) == "x"
+        with conf_override(conf, {key: "y"}):
+            assert conf.get(key) == "y"
+        assert conf.get(key) == "x"
+    assert conf.get(key, None) is None
+
+
+def _exception_in_body(spark):
+    with pytest.raises(RuntimeError, match="boom"):
+        with no_aqe(spark):
+            assert spark.conf.get(AQE) == "false"
+            raise RuntimeError("boom")
+
+
+def _two_threads_overlap(spark):
+    """Thread B asks for its override while A's is live. Without the
+    lock B saves A's "false" as its prior and restores it after A has
+    restored "true"; with it, B waits until A is done."""
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+
+    def b():
+        assert a_in.wait(10)
+        with no_aqe(spark):
+            b_in.set()
+            a_out.wait(10)
+
+    t = threading.Thread(target=b)
+    t.start()
     with no_aqe(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before
+        a_in.set()
+        b_in.wait(0.5)  # times out when B is held at the lock
+    a_out.set()
+    t.join(10)
+    assert not t.is_alive()
+
+
+def _threads_stress(spark):
+    """More threads than cores, fast switching, nested overrides: every
+    body sees its own pin and the session ends where it began."""
+    seen = []
+
+    def worker():
+        for _ in range(20):
+            with no_aqe(spark):
+                with conf_override(spark.conf, {AQE: "true"}):
+                    seen.append(spark.conf.get(AQE) == "true")
+                seen.append(spark.conf.get(AQE) == "false")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 8 * 20 * 2 and all(seen)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _nested_same_key,
+        _unset_stays_unset,
+        _hadoop_conf,
+        _exception_in_body,
+        _two_threads_overlap,
+        _threads_stress,
+    ],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_conf_override_restores(spark, case):
+    assert spark.conf.get(AQE) == "true"
+    case(spark)
+    assert spark.conf.get(AQE) == "true"
+
+
+def test_no_hand_rolled_conf_restore():
+    """Tripwire: only session.py may unset a conf, or set/unset one in a
+    ``finally:`` block. Every other module pins conf through
+    ``conf_override``, the one restore that is reentrant, serialized
+    across threads and unsets keys that were unset before."""
+    import ast
+    import pathlib
+
+    import csv2parquet_spark
+
+    root = pathlib.Path(csv2parquet_spark.__file__).parent
+
+    def conf_call(node, names):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in names
+            and "conf" in ast.unparse(node.func.value).lower()
+        )
+
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "session.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if conf_call(node, {"unset"}):
+                hits.append(f"{path.relative_to(root)}:{node.lineno} unset")
+            if isinstance(node, ast.Try):
+                for stmt in node.finalbody:
+                    for sub in ast.walk(stmt):
+                        if conf_call(sub, {"set", "unset"}):
+                            hits.append(
+                                f"{path.relative_to(root)}:{sub.lineno} "
+                                "conf restore in finally"
+                            )
+    assert not hits, hits
 
 
 def test_table_memo_bounded(spark, sf_dir, tmp_path):

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from csv2parquet_spark.queries.registry import REGISTRY
+from csv2parquet_spark.session import conf_override
 
 
 def _plan(df) -> str:
@@ -155,19 +156,17 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     # Disable auto-broadcast: at test scale the dimension side fits under
     # the threshold and the bucketing would be moot; the property under
     # test is the big-big join path.
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ob, lb = spark.table("o_bkt"), spark.table("l_bkt")
-        joined = ob.join(lb, ob.o_orderkey == lb.l_orderkey).select(
-            "o_orderkey", "l_linenumber"
-        )
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
+        with conf_override(spark.conf, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            ob, lb = spark.table("o_bkt"), spark.table("l_bkt")
+            joined = ob.join(lb, ob.o_orderkey == lb.l_orderkey).select(
+                "o_orderkey", "l_linenumber"
+            )
+            plan = _plan(joined)
+            assert "Exchange" not in plan, plan
+            assert "SortMergeJoin" in plan
+            assert joined.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
         spark.sql("DROP TABLE IF EXISTS o_bkt")
         spark.sql("DROP TABLE IF EXISTS l_bkt")
         import shutil
@@ -222,19 +221,17 @@ def test_bucketed_join_has_no_shuffle_exchange(spark, sf_dir, tmp_path):
         customer.withColumnRenamed("c_custkey", "o_custkey"),
         "customer_bkt", "o_custkey", 8, path=str(tmp_path / "cb"),
     )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        bkt = _plan(
-            spark.table("orders_bkt").join(spark.table("customer_bkt"), "o_custkey")
-        )
-        plain = _plan(
-            orders.join(
-                customer.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
+        with conf_override(spark.conf, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            bkt = _plan(
+                spark.table("orders_bkt").join(spark.table("customer_bkt"), "o_custkey")
             )
-        )
+            plain = _plan(
+                orders.join(
+                    customer.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
+                )
+            )
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS orders_bkt")
         spark.sql("DROP TABLE IF EXISTS customer_bkt")
     assert "SortMergeJoin" in bkt
@@ -364,12 +361,8 @@ def test_salted_join_condition_carries_salt(spark, sf_dir):
     """With broadcast disabled, skew_join_salted must plan a shuffled
     join whose key set includes the salt column — the property that
     spreads one hot key over r reducers."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_override(spark.conf, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = _plan(REGISTRY["skew_join_salted"].fn(spark, sf_dir))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "__salt" in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
@@ -484,18 +477,15 @@ def test_bucket_pruning_point_lookup(spark, sf_dir, tmp_path):
     o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").mode(
         "overwrite"
     ).saveAsTable("o_bkt_prune")
-    prior = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    pins = {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
     try:
-        key = o.select("o_orderkey").head()[0]
-        q = spark.table("o_bkt_prune").where(F.col("o_orderkey") == key)
-        plan = _plan(q)
-        assert "SelectedBucketsCount: 1 out of 8" in plan, plan
-        assert q.count() >= 1
+        with conf_override(spark.conf, pins):
+            key = o.select("o_orderkey").head()[0]
+            q = spark.table("o_bkt_prune").where(F.col("o_orderkey") == key)
+            plan = _plan(q)
+            assert "SelectedBucketsCount: 1 out of 8" in plan, plan
+            assert q.count() >= 1
     finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", prior
-        )
         spark.sql("DROP TABLE IF EXISTS o_bkt_prune")
         import shutil
 
@@ -522,22 +512,13 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
     absorbed — and it needs NO code change, only honest shuffle stats.
     Note: the skew flag only exists on the df's own executed QE (a
     count()/noop write executes a different QueryExecution)."""
-    priors = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        )
+    pins = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
     }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-    try:
+    with conf_override(spark.conf, pins):
         left = spark.range(200_000).select(
             F.when(F.col("id") % 10 != 0, F.lit(7))
             .otherwise(F.col("id"))
@@ -555,9 +536,6 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
         assert "skewed" in plan  # AQEShuffleRead split the hot partition
         # result unaffected: 180k hot-key rows + 100 cold matches
         assert rows == 180_100
-    finally:
-        for k, v in priors.items():
-            spark.conf.set(k, v)
 
 
 def test_join_strategy_hints_select_physical_operators(spark, sf_dir):

@@ -25,6 +25,7 @@ from csv2parquet_spark.planmetrics import (
     plan_signature,
 )
 from csv2parquet_spark.queries.registry import REGISTRY
+from csv2parquet_spark.session import conf_override
 
 # Fast path (VERDICT r9 item 6 — the 286-key full-capture lint costs
 # ~5.5 min of every suite run): a key whose NORMALIZED plan-string
@@ -70,13 +71,9 @@ def pinned_conf(spark):
     4 to 32, and 27 text-heavy keys "grew" 20-50% against the pin. The
     pin wraps the query-fn construction too: internal localCheckpoints
     materialize under the live conf, not at capture time."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(_BASELINE["shuffle_partitions"]))
-    try:
+    pins = {"spark.sql.shuffle.partitions": str(_BASELINE["shuffle_partitions"])}
+    with conf_override(spark.conf, pins):
         yield spark
-    finally:
-        spark.conf.set(key, prev)
 
 
 @pytest.mark.parametrize("name", sorted(_BASELINE["keys"]))
