@@ -158,9 +158,10 @@ def _tuned_splits(spark: SparkSession, csv_path: str):
 
 
 def _resolve_schema(
-    spark: SparkSession, csv_path: str, opts: ConvertOptions
+    spark: SparkSession, csv_path: str, opts: ConvertOptions, multiline: bool
 ) -> T.StructType:
-    """Schema resolution, three modes (SURVEY §1.2 / main.rs:126-159)."""
+    """Schema resolution, three modes (SURVEY §1.2 / main.rs:126-159).
+    ``multiline`` is the file's :func:`_effective_multiline`."""
     if opts.schema_file:
         with open(opts.schema_file) as f:
             return arrow_json_to_struct(f.read())
@@ -168,7 +169,7 @@ def _resolve_schema(
         raw = spark.read.options(
             header=opts.header,
             sep=opts.delimiter,
-            multiLine=_effective_multiline(csv_path, opts),
+            multiLine=multiline,
             escape='"',
         ).csv(csv_path)
         return infer_schema(raw, opts.max_read_records)
@@ -177,12 +178,13 @@ def _resolve_schema(
 def read_csv(spark: SparkSession, csv_path: str, opts: ConvertOptions) -> DataFrame:
     """O1: CSV scan with the resolved, frozen schema; FAILFAST like the
     reference's first-error abort (main.rs:253)."""
-    schema = _resolve_schema(spark, csv_path, opts)
+    multiline = _effective_multiline(csv_path, opts)
+    schema = _resolve_schema(spark, csv_path, opts, multiline)
     reader = spark.read.options(
         header=opts.header,
         sep=opts.delimiter,
         mode=opts.parse_mode,
-        multiLine=_effective_multiline(csv_path, opts),
+        multiLine=multiline,
         escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
         timestampFormat="yyyy-MM-dd[[ ]['T']HH:mm:ss]",
         enforceSchema=True,
@@ -272,7 +274,8 @@ def convert(
     Returns the resolved schema (None only on unreachable paths).
     """
     opts = opts or ConvertOptions()
-    schema = _resolve_schema(spark, csv_path, opts)
+    multiline = _effective_multiline(csv_path, opts)
+    schema = _resolve_schema(spark, csv_path, opts, multiline)
 
     if opts.print_schema or opts.dry:
         # main.rs:161-168: banner on stderr, JSON on stdout.
@@ -285,7 +288,7 @@ def convert(
         header=opts.header,
         sep=opts.delimiter,
         mode=opts.parse_mode,
-        multiLine=_effective_multiline(csv_path, opts),
+        multiLine=multiline,
         escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
         timestampFormat="yyyy-MM-dd[[ ]['T']HH:mm:ss]",
     ).schema(schema).csv(csv_path)

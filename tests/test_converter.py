@@ -81,6 +81,87 @@ def test_inference_nulls(spark, tmp):
     assert schema["i"].dataType == T.LongType()
 
 
+@pytest.mark.parametrize("multiline", [True, False])
+def test_inference_misleading_sample(spark, tmp, multiline):
+    """The first HINT_ROWS rows only order each column's regex tests:
+    when later rows break the sampled class, full-pass inference still
+    gives the full-file type (the late_type.csv shape, per column)."""
+    import io
+
+    from csv2parquet_spark.converter import inference as I
+
+    n = I.HINT_ROWS
+    head = [
+        (str(k), str(k), "true" if k % 2 else "False", f"2020-01-{k % 28 + 1:02d}",
+         f"2020-01-01 00:00:{k % 60:02d}", "", "w")
+        for k in range(n)
+    ]
+    # the quoted cell keeps the multiLine parse on when it is asked for
+    tail = [
+        ("1.5", "abc", "7", "2020-01-01 00:00:00", "2020-01-01", "5", '"q, x"'),
+        ("3", "4", "true", "2020-01-02", "2020-01-01T00:00:01", "-6", "w"),
+    ]
+    lines = ["int_float,int_text,bool_int,d32_d64,d64_d32,empty_int,text"]
+    lines += [",".join(r) for r in head + tail]
+    src = _write(tmp, "misleading.csv", "\n".join(lines) + "\n")
+
+    # the premise: every hint is wrong (or absent) for its column
+    hints = I._sample_hints(_raw(spark, src).take(n), len(head[0]))
+    assert hints == [I._INT, I._INT, I._BOOL, I._D32, I._D64, 0, I._UTF8]
+
+    opts = ConvertOptions(dry=True, multiline=multiline)
+    schema = convert(
+        spark, src, os.path.join(tmp, "never.parquet"), opts,
+        out=io.StringIO(), err=io.StringIO(),
+    )
+    assert [f.dataType for f in schema.fields] == [
+        T.DoubleType(),
+        T.StringType(),
+        T.StringType(),
+        T.StringType(),
+        T.StringType(),
+        T.LongType(),
+        T.StringType(),
+    ]
+
+
+def test_classify_plan_is_hint_ordered_regex(spark, tmp, monkeypatch):
+    """Tripwire for the one-regex-per-cell classifier: the classify
+    aggregate has no translate-based predicates, an int-looking
+    column's CASE opens with the INT regex, and a text column's with
+    the union guard (a miss is Utf8 after one regex)."""
+    import re
+
+    from csv2parquet_spark.converter import inference as I
+
+    p = _write(tmp, "plan.csv", "i,s\n1,hello\n-22,x y\n333,\n")
+    raw = _raw(spark, p)
+    aggs = []
+    real_agg = type(raw).agg
+
+    def recording_agg(self, *exprs):
+        aggs.append(real_agg(self, *exprs))
+        return aggs[-1]
+
+    monkeypatch.setattr(type(raw), "agg", recording_agg)
+    schema = infer_schema(raw)
+    assert [f.dataType for f in schema.fields] == [T.LongType(), T.StringType()]
+    assert len(aggs) == 1
+    plan = re.sub(r"#\d+", "", aggs[0]._jdf.queryExecution().optimizedPlan().toString())
+    assert "translate(" not in plan
+
+    def first_branch(col):
+        m = re.search(
+            rf"isnotnull\({col}\) AND NOT \({col} = \)\) THEN CASE WHEN (.*?) THEN ",
+            plan,
+        )
+        assert m, plan
+        return m.group(1)
+
+    assert first_branch("i") == r"RLIKE(i, \A(?:-?\d+)\z)"
+    assert first_branch("s") == f"NOT RLIKE(s, {I._UNION_RE})"
+
+
 def test_roundtrip_typed(spark, tmp):
     src = _write(tmp, "typed.csv", TYPED_CSV)
     out = os.path.join(tmp, "typed.parquet")
@@ -1629,9 +1710,10 @@ def test_schema_json_ntz_and_map_roundtrip(spark, tmp):
 
 
 def test_boolean_re_compiles_under_python_re(spark):
-    """The exported lattice regexes are valid in BOTH engines: Java
-    rlike (used in the classifier twin) and Python re (the natural
-    consumer of a module-level constant)."""
+    """The exported lattice regexes are the classifier's pattern table
+    spelled for Python re (the natural consumer of a module-level
+    constant): they compile and match whole values only. The classifier
+    itself wraps the same bodies for Java rlike."""
     import re
 
     from csv2parquet_spark.converter import inference as I
@@ -1640,6 +1722,7 @@ def test_boolean_re_compiles_under_python_re(spark):
         re.compile(pat)
     assert re.match(I.BOOLEAN_RE, "TRUE")
     assert not re.match(I.BOOLEAN_RE, "yes")
+    assert not re.match(I.INTEGER_RE, "12\n")
 
 
 def test_to_orc_csv_uses_engine_read_path(spark, tmp):

@@ -40,47 +40,63 @@ BOOLS = st.booleans()
 
 
 CLASSIFIER_CHARS = st.text(
-    alphabet=list("0123456789-.:eE+ Ttruefals/"), min_size=0, max_size=20
+    alphabet=list("0123456789-.:eE+ Ttruefals/\n"), min_size=0, max_size=20
 )
 EDGE_VALUES = [
     "", "-", "--", "+5", " 5", "5 ", "-0", "007", "5.", ".5", "-.5", ".",
     "1e5", "1E+5", "1e-5", ".5e3", "5.e3", "e5", "1e", "1.2.3", "1-2",
-    "true", "False", "tRuE", "truefalse",
+    "true", "False", "tRuE", "truefalse", "falſe",
     "2020-01-01", "2020-1-01", "0000-00-00", "9999-99-99", "2020-01-011",
     "2020-01-01 00:00:00", "2020-01-01T00:00:00", "2020-01-01t00:00:00",
     "2020-01-01 0:00:00", "2020-01-01 00-00-00",
     "9223372036854775808123", "٥",
+    "1\n", "true\n", "2020-01-01\n", "\n5",
 ]
+CLASS_HINTS = (0, 1, 2, 4, 8, 16, 32)
 
 
 @SETTINGS
 @given(vals=st.lists(CLASSIFIER_CHARS, min_size=1, max_size=30))
 def test_fast_classifiers_match_reference_regexes(spark, vals):
-    """The regex-free classify predicates (translate/LIKE) must assign
-    every value the same lattice class as the reference arrow-csv
-    regexes. Newlines are excluded: a java-regex `$` matches before a
-    trailing newline while the string predicates (and rust-regex, which
-    the reference actually uses) do not."""
+    """Whatever the column's sample hint, the hint-ordered classify CASE
+    must give every value the class of the reference CASE (the anchored
+    arrow-csv regexes in lattice-priority order), and the driver-side
+    hint classifier (Python re) must agree with Java rlike. Values
+    ending in a newline are Utf8: the reference's rust-regex `$` (and
+    `\\z` here) matches only at the true end of the string."""
     import pyspark.sql.functions as F
 
     import csv2parquet_spark.converter.inference as I
 
-    rows = [(v,) for v in {*vals, *EDGE_VALUES}]
-    df = spark.createDataFrame(rows, "v string")
+    vals = sorted({*vals, *EDGE_VALUES})
+    df = spark.createDataFrame([(v,) for v in vals], "v string")
     c = F.col("v")
-    regex_bit = (
-        F.when(c.rlike(I.INTEGER_RE), 2)
-        .when(c.rlike(I.FLOAT_RE), 4)
-        .when(c.rlike(I.DATE32_RE), 8)
-        .when(c.rlike(I.DATE64_RE), 16)
-        .when(c.rlike(I.BOOLEAN_RE), 1)
+    ref = (
+        F.when(c.rlike(r"^-?(\d+)\z"), 2)
+        .when(c.rlike(r"^-?(\d+\.\d+|\d+\.|\.\d+|\d+)([eE][-+]?\d+)?\z"), 4)
+        .when(c.rlike(r"^\d{4}-\d{2}-\d{2}\z"), 8)
+        .when(c.rlike(r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}\z"), 16)
+        .when(c.rlike(r"(?i)^(true|false)\z"), 1)
         .otherwise(32)
     )
     got = df.select(
-        "v", regex_bit.alias("ref"), I._value_class_bit(c).alias("fast")
+        "v",
+        ref.alias("ref"),
+        *[I._value_class_bit(c, h).alias(f"h{h}") for h in CLASS_HINTS],
     ).collect()
-    bad = [(r.v, r.ref, r.fast) for r in got if r.ref != r.fast]
-    assert not bad, f"classifier divergence: {bad[:10]}"
+    bad = [
+        (r.v, r.ref, h, r[f"h{h}"])
+        for r in got
+        for h in CLASS_HINTS
+        if r[f"h{h}"] != r.ref
+    ]
+    assert not bad, f"classifier divergence (value, ref, hint, got): {bad[:10]}"
+    py_bad = [
+        (r.v, r.ref, I._py_class_bit(r.v))
+        for r in got
+        if I._py_class_bit(r.v) != r.ref
+    ]
+    assert not py_bad, f"driver hint classifier divergence: {py_bad[:10]}"
 
 
 def _write_csv(path: str, header: list[str], rows: list[tuple]) -> None:
