@@ -120,8 +120,8 @@ def _value_class_bit(c: F.Column, hint: int) -> F.Column:
 
 
 def _py_class_bit(v: str) -> int:
-    """Driver-side twin of :func:`_value_class_bit` for one non-empty
-    value (Python ``re`` over the same pattern table)."""
+    """Driver-side twin of :func:`_value_class_bit` for one value
+    (Python ``re`` over the same pattern table)."""
     for bit, rx in _PY_PATTERNS.items():
         if rx.fullmatch(v):
             return bit
