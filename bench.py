@@ -3,8 +3,10 @@
 
 The FINAL stdout line is ONE compact JSON object:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
-Per-query spreads and the conversion-benchmark blocks go to a sidecar
+   "n_queries": <n>, "sf": <sf>, "queries_detail": "BENCH_DETAIL.json",
+   "canary_box_ratio_vs_r8": <ratio, sf0.1 runs only>}
+The line before it carries the 2dp per-query map. Per-query spreads,
+calibration, rotation and conversion-benchmark blocks go to a sidecar
 file (BENCH_DETAIL.json next to this script) and an EARLIER stdout
 line — the round-3 all-in-one line outgrew the driver's tail capture
 (BENCH_r03 "parsed": null), so the parseable summary now comes last
@@ -24,15 +26,29 @@ the reported number); `n_runs` says how hard each query fought the box.
 
 from __future__ import annotations
 
+import glob
 import json
+import math
 import os
+import re
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import duckdb
 
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+from csv2parquet_spark.converter import ConvertOptions, convert  # noqa: E402
+from csv2parquet_spark.planmetrics import executed_shuffle_metrics  # noqa: E402
 from csv2parquet_spark.queries import REGISTRY  # noqa: E402
 from csv2parquet_spark.session import get_spark  # noqa: E402
+
+# Fixture CSVs and conversion outputs (generation is setup, not timed).
+WORK = "/tmp/spark_graft_bench"
+# Non-HEADLINE keys timed per round by the rotation tier.
+ROTATION_KEYS = 30
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -112,32 +128,21 @@ HEADLINE = [
     # round-5 fifth wave (calibration / survival)
     "isotonic_calibration_exact",
     "km_reorder_survival",
-    # round-6: graph loops promoted into HEADLINE after the superstep
-    # rework (VERDICT r5 item 3): map-side pair expansion + fused
-    # repartition/aggregate edge build, shuffle_hash state joins (a
-    # checkpointed state frame has no stats, so the planner re-SORTED
-    # the edges every superstep), observe-fused dangling mass
-    # (pagerank_fixed), and lineage checkpoints every 2+ supersteps.
-    # Isolated sf0.1: lpa 8.2→4.3, bfs 6.0→3.7, textrank 6.9→3.6.
+    # round-6: graph loops, promoted after the superstep rework
+    # (VERDICT r5 item 3), and winnowing, after its single-task fix
     "lpa_copurchase_communities",
     "bfs_hops_copurchase",
     "textrank_tokens",
-    # round-6: winnowing promoted after the 38 s single-task fix
-    # (gated scan rebalance + vectorized numpy kernel → 0.72 s).
     "winnowing_fingerprints",
     # round-5 eighth wave (inference completion)
     "ks_test_two_sample",
     "cuped_adjusted_ab_test",
     "revenue_concentration_report",
-    # round-7 additions: continuous-ingestion reconcile over the
-    # incremental converter's batch=*/ output, the t-closeness
-    # governance sheet, and the grid-bucketed spatial radius join.
+    # round-7 additions (ingest reconcile / governance / spatial join)
     "incremental_ingest_latest",
     "t_closeness_report",
     "spatial_radius_join_grid",
-    # round-8 additions: deterministic seeded epoch shuffle (two-pass
-    # global ranking over md5 order) and the compaction+GC'd ingest
-    # layout readback.
+    # round-8 additions (seeded epoch shuffle / compacted ingest)
     "epoch_shuffle_seeded",
     "incremental_ingest_after_gc",
 ]
@@ -149,8 +154,8 @@ HEADLINE = [
 # drift and a real regression were indistinguishable because the bench
 # had no in-run yardstick. These keys are FROZEN trivial queries
 # (scan+filter, top-k sort, exact dedup, running-sum window, JSON
-# funcs — code untouched since r1/r2); their per-round driver times are
-# pinned below, so every future run carries its own box-speed ratio:
+# funcs — code untouched since r1/r2); their driver times are pinned
+# below, so every future run carries its own box-speed ratio:
 #   normalized_ratio(key, rN) = (t_now/t_rN) / canary_ratio_vs_rN.
 # A normalized ratio ≈1 with a high raw ratio = box drift; a high
 # normalized ratio = a real regression. Medians, not means — any one
@@ -161,14 +166,11 @@ CANARY_KEYS = [
     "dedup_exact",
     "window_running_sum",
     "json_funcs",
-    # r9 widening (VERDICT r8 item 2): five keys was too few against
-    # 1.5-2.5x host-noise phases — the r8 canary median (0.914 vs r7)
-    # disagreed with the 74-shared-key median (1.09) by 19%. These five
-    # additions span the suite's RUN ORDER (positions ~9/27/43/56/72 of
-    # HEADLINE, vs the original five's 1-21) and the engine's execution
-    # families (streaming-twin agg, text kernel, Arrow/Pandas-UDF
-    # multimodal, dedup self-join, governance report), all code-frozen,
-    # all r7->r8 raw drift within 3% of the like-for-like median.
+    # r9 widening (VERDICT r8 item 2): five keys were too few against
+    # 1.5-2.5x host-noise phases. These five span HEADLINE's run order
+    # and the engine's execution families (streaming-twin agg, text
+    # kernel, Arrow/Pandas-UDF multimodal, dedup self-join, governance
+    # report), all code-frozen.
     "stream_tumbling_window",
     "token_entropy_quality",
     "video_frame_sample_real",
@@ -176,9 +178,7 @@ CANARY_KEYS = [
     "t_closeness_report",
 ]
 # Driver-measured seconds at sf0.1 (BENCH_DETAIL.json as committed by
-# the driver each round; r6 = commit 859528f, r7 = commit 710cbed,
-# r8 = commit ff40f08). The r6/r7 pins predate the r9 widening and
-# carry only the original five keys; r8 onward pins all ten.
+# the driver, r8 = commit ff40f08), all ten keys.
 #
 # WHICH NORMALIZER IS AUTHORITATIVE (VERDICT r8 item 2): the canary
 # median over the ten frozen keys. The all-shared-keys median is the
@@ -189,20 +189,6 @@ CANARY_KEYS = [
 # and probe the disagreement (isolated quiet-box protocol, ROUND8.md
 # §1) rather than averaging the normalizers.
 CANARY_REF = {
-    "r6": {
-        "filter_project": 0.287,
-        "topk_orders_by_price": 0.158,
-        "dedup_exact": 0.217,
-        "window_running_sum": 0.682,
-        "json_funcs": 0.420,
-    },
-    "r7": {
-        "filter_project": 0.357,
-        "topk_orders_by_price": 0.157,
-        "dedup_exact": 0.233,
-        "window_running_sum": 0.582,
-        "json_funcs": 0.542,
-    },
     "r8": {
         "filter_project": 0.286,
         "topk_orders_by_price": 0.144,
@@ -227,7 +213,6 @@ CANARY_REF = {
 # a code regression moves both, while page-cache/writeback phases hit
 # only the GB-scale job.
 CONV_CANARY_REF = {
-    "r7": {"single_file_sec": 3.250, "parallel_sec": 2.017},
     "r8": {"single_file_sec": 3.227, "parallel_sec": 1.955},
 }
 
@@ -241,55 +226,27 @@ MID_CONV_CANARY_REF = {
 }
 
 
-def _inter_key_cleanup(spark) -> None:
-    """JMH-style forced GC between benchmark keys — OFF by default
-    (SPARK_GRAFT_BENCH_GC=1 opts in); kept as a documented NEGATIVE
-    result from the round-8 late-suite-heat investigation.
-
-    Hypothesis: queries leave localCheckpoint blocks/broadcasts that
-    ContextCleaner only releases after a JVM GC, so late-suite keys
-    inherit predecessor heap debt. One A/B on this box supported it
-    dramatically (probes after 40 un-collected keys: tfidf 2.6→1.0 s,
-    bfs 8.8→3.8 s with forced GC). But the effect did NOT reproduce:
-    a same-protocol re-run hours later measured the no-cleanup arm at
-    the GOOD numbers (tfidf 0.88, bfs 4.6), and two full-bench runs
-    WITH inter-key GC (83.3, 86.4 s) came out slower than the
-    committed no-GC run (76.3 s) — a System.gc() full GC shrinks the
-    G1 heap and drops soft-referenced caches, so each next key repays
-    heap growth inside its timed runs. Verdict: the original A/B
-    caught a contended host phase, not a mechanism; box-phase noise
-    (the canary section's job) dominates any cleanup effect. Default
-    stays off so driver rounds remain methodology-comparable."""
-    import gc as _gc
-
-    _gc.collect()  # drop py4j refs so the JVM side becomes collectable
-    spark.sparkContext._jvm.System.gc()
-
-
-_GC_BETWEEN_KEYS = os.environ.get("SPARK_GRAFT_BENCH_GC", "0") == "1"
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+def _ratios(
+    times: dict, ref: dict[str, float]
+) -> tuple[dict[str, float], float | None]:
+    """``times[k] / ref[k]`` for every pinned key with a numeric time, and
+    their median. A key missing from ``times`` is skipped; with none
+    present the median is None — a HEADLINE edit or a failed bench
+    degrades to an explicit marker, never a crash."""
+    ratios = {
+        k: round(times[k] / r, 3)
+        for k, r in ref.items()
+        if isinstance(times.get(k), (int, float)) and r
+    }
+    box = round(statistics.median(ratios.values()), 3) if ratios else None
+    return ratios, box
 
 
 def canary_section(times: dict[str, float]) -> dict:
     """Per-reference-round box-speed ratio from this run's canary times."""
     out: dict = {"keys": CANARY_KEYS, "ref": CANARY_REF}
     for rnd, ref in CANARY_REF.items():
-        ratios = {
-            k: round(times[k] / ref[k], 3)
-            for k in CANARY_KEYS
-            if k in times and ref.get(k)
-        }
-        out[f"ratios_vs_{rnd}"] = ratios
-        # guard: a HEADLINE edit that drops canary keys must degrade to
-        # an explicit marker, not crash the whole canary section
-        out[f"box_ratio_vs_{rnd}"] = (
-            round(_median(list(ratios.values())), 3) if ratios else None
-        )
+        out[f"ratios_vs_{rnd}"], out[f"box_ratio_vs_{rnd}"] = _ratios(times, ref)
     missing = [k for k in CANARY_KEYS if k not in times]
     if missing:
         out["missing_keys"] = missing
@@ -314,43 +271,44 @@ def conv_canary_section(conv: dict, mid: dict | None = None) -> dict:
         out["small_skipped"] = f"conv bench unavailable: {conv!r}"[:200]
     if not mid_ok:
         out["mid_skipped"] = f"mid conv canary unavailable: {mid!r}"[:200]
-    for rnd, ref in CONV_CANARY_REF.items():
-        ratios = {
-            k: round(conv[k] / ref[k], 3)
-            for k in ("single_file_sec", "parallel_sec")
-            if conv_ok
-            and isinstance(conv.get(k), (int, float))
-            and ref.get(k)
-        }
-        out[f"ratios_vs_{rnd}"] = ratios
-        out[f"box_ratio_vs_{rnd}"] = (
-            round(_median(list(ratios.values())), 3) if ratios else None
-        )
-    for rnd, ref in MID_CONV_CANARY_REF.items():
-        ratios = {
-            k: round(mid[k] / ref[k], 3)
-            for k in ("single_file_sec", "parallel_sec")
-            if mid_ok
-            and isinstance(mid.get(k), (int, float))
-            and ref.get(k)
-        }
-        out[f"mid_ratios_vs_{rnd}"] = ratios
-        out[f"mid_box_ratio_vs_{rnd}"] = (
-            round(_median(list(ratios.values())), 3) if ratios else None
-        )
+    for pre, src, refs in (
+        ("", conv if conv_ok else {}, CONV_CANARY_REF),
+        ("mid_", mid if mid_ok else {}, MID_CONV_CANARY_REF),
+    ):
+        for rnd, ref in refs.items():
+            out[f"{pre}ratios_vs_{rnd}"], out[f"{pre}box_ratio_vs_{rnd}"] = _ratios(src, ref)
     return out
 
 
-def _bench_round() -> int:
-    """This run's driver round = one past the newest recorded bench."""
-    import glob as _glob
+def _archived(prefix: str, root: str = ROOT) -> dict[int, str]:
+    """``{round: path}`` of the ``{prefix}{N}.json`` files in ``root``.
+    Suffixed names (BENCH_r11_c8.json, a core-count variant) are not
+    rounds."""
+    return {
+        int(m.group(1)): p
+        for p in glob.glob(os.path.join(root, f"{prefix}*.json"))
+        if (m := re.search(rf"{prefix}(\d+)\.json$", p))
+    }
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(p.rsplit("_r", 1)[1].split(".")[0])
-        for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-    ]
-    return (max(rounds) + 1) if rounds else 1
+
+def _round(root: str = ROOT) -> int:
+    """This run's driver round: one past the newest BENCH_r{N}.json — the
+    driver writes BENCH_r{N} for the round being closed AFTER running
+    this script."""
+    return max(_archived("BENCH_r", root), default=0) + 1
+
+
+def _secs(fn, *args) -> float:
+    """Wall seconds of one ``fn(*args)`` call."""
+    t0 = time.perf_counter()
+    fn(*args)
+    return time.perf_counter() - t0
+
+
+def _noop(fn, spark, sf_dir: str) -> None:
+    """Build query ``fn``'s frame and execute its full plan through the
+    noop sink."""
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
 def bench_rotation(spark, sf_dir: str, headline: list[str]) -> dict:
@@ -358,100 +316,82 @@ def bench_rotation(spark, sf_dir: str, headline: list[str]) -> dict:
     the other ~210 registered queries had NO recorded wall time, so a
     constant-factor regression there (AQE flip, stray exchange with
     unchanged operators) was invisible between correctness rounds. Each
-    round times a ~30-key slice of the non-HEADLINE registry in stable
-    alphabetical order, keyed off the round number — every registered
-    query gets a recorded time within any 7-round span. Warm once +
-    best-of-2 (cheaper than HEADLINE's adaptive best-of-N: this tier
-    exists to catch step-function regressions, not to be a precision
-    yardstick)."""
-    slice_size = int(os.environ.get("SPARK_GRAFT_ROTATION_KEYS", "30"))
-    if slice_size <= 0:
-        return {}
+    round times a ROTATION_KEYS slice of the non-HEADLINE registry in
+    stable alphabetical order, keyed off the round number — every
+    registered query gets a recorded time within any 7-round span. Warm
+    once + best-of-2 (cheaper than HEADLINE's adaptive best-of-N: this
+    tier exists to catch step-function regressions, not to be a
+    precision yardstick)."""
     rest = sorted(n for n in REGISTRY if n not in set(headline))
-    if not rest:
-        return {}
-    rnd = _bench_round()
-    start = ((rnd - 8) * slice_size) % len(rest)  # r8 = first slice
-    picked = [rest[(start + i) % len(rest)] for i in range(min(slice_size, len(rest)))]
+    rnd = _round()
+    start = ((rnd - 8) * ROTATION_KEYS) % len(rest)  # r8 = first slice
+    picked = [rest[(start + i) % len(rest)] for i in range(min(ROTATION_KEYS, len(rest)))]
     times: dict[str, float] = {}
     for name in picked:
         fn = REGISTRY[name].fn
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            times[name] = round(best, 3)
+            _noop(fn, spark, sf_dir)  # warm
+            times[name] = round(min(_secs(_noop, fn, spark, sf_dir) for _ in range(2)), 3)
         except Exception as exc:  # pragma: no cover — never lose the round
             times[name] = -1.0
             print(f"rotation {name} failed: {exc!r}", file=sys.stderr)
-        if _GC_BETWEEN_KEYS:
-            _inter_key_cleanup(spark)
-    return {
-        "round": rnd,
-        "start_index": start,
-        "of_total": len(rest),
-        "keys": times,
-    }
+    return {"round": rnd, "start_index": start, "of_total": len(rest), "keys": times}
+
+
+def _lineitem_csv(sf_dir: str) -> str:
+    """The sf lineitem table as a headed CSV, cached in WORK across runs."""
+    os.makedirs(WORK, exist_ok=True)
+    path = os.path.join(WORK, f"lineitem_{os.path.basename(sf_dir)}.csv")
+    if not os.path.exists(path):
+        duckdb.sql(
+            f"COPY (SELECT * FROM read_parquet('{sf_dir}/lineitem.parquet')) "
+            f"TO '{path}' (HEADER, DELIMITER ',')"
+        )
+    return path
+
+
+def _convert_best_of_2(spark, src: str, dst: str, settle: bool) -> dict:
+    """Steady-state like the queries: per mode (single-file, then
+    parallel) one warm conversion, then the best of two timed runs (this
+    box's I/O variance is ±2×). ``settle`` flushes the filesystem before
+    each timed run."""
+    out = {}
+    for label, opts in (
+        ("single_file_sec", ConvertOptions()),
+        ("parallel_sec", ConvertOptions(single_file=False)),
+    ):
+        convert(spark, src, dst, opts)  # warm
+        runs = []
+        for _ in range(2):
+            if settle:
+                _fs_settle()
+            runs.append(_secs(convert, spark, src, dst, opts))
+        out[label] = round(min(runs), 3)
+    return out
 
 
 def bench_conversion(spark, sf_dir: str) -> dict:
     """The reference's actual workload: CSV→Parquet, timed both in CLI
     parity mode (single output file, full-pass schema inference — the
     reference's default behavior) and the scale path (multi-part write,
-    parallel across input splits). CSV generation is setup, not timed."""
-    import duckdb
-
-    from csv2parquet_spark.converter import ConvertOptions, convert
-
-    work = "/tmp/spark_graft_bench"
-    os.makedirs(work, exist_ok=True)
-    csv_path = os.path.join(work, f"lineitem_{os.path.basename(sf_dir)}.csv")
-    if not os.path.exists(csv_path):
-        duckdb.sql(
-            f"COPY (SELECT * FROM read_parquet('{sf_dir}/lineitem.parquet')) "
-            f"TO '{csv_path}' (HEADER, DELIMITER ',')"
-        )
+    parallel across input splits)."""
+    csv_path = _lineitem_csv(sf_dir)
     size_mb = os.path.getsize(csv_path) / 1e6
-    # Steady-state like the queries: first run warms codegen, then record
-    # the best of two timed runs (this box's I/O variance is ±2×).
-    def timed(opts=None):
-        args = (spark, csv_path, os.path.join(work, "out_bench.parquet"))
-        convert(*args, *( [opts] if opts else [] ))
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            convert(*args, *( [opts] if opts else [] ))
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    t_single = timed()
-    t_multi = timed(ConvertOptions(single_file=False))
+    t = _convert_best_of_2(
+        spark, csv_path, os.path.join(WORK, "out_bench.parquet"), settle=False
+    )
     return {
         "input_mb": round(size_mb, 1),
-        "single_file_sec": round(t_single, 3),
-        "parallel_sec": round(t_multi, 3),
-        "parallel_mb_per_sec": round(size_mb / t_multi, 1),
+        **t,
+        "parallel_mb_per_sec": round(size_mb / t["parallel_sec"], 1),
     }
 
 
 def _replicated_csv(sf_dir: str, target_mb: int) -> str:
     """Deterministic CSV fixture: the sf lineitem CSV body replicated to
-    ~target_mb MB, cached in /tmp across runs (generation is setup, not
-    timed)."""
-    import duckdb
-
-    work = "/tmp/spark_graft_bench"
-    os.makedirs(work, exist_ok=True)
-    base = os.path.join(work, f"lineitem_{os.path.basename(sf_dir)}.csv")
-    if not os.path.exists(base):
-        duckdb.sql(
-            f"COPY (SELECT * FROM read_parquet('{sf_dir}/lineitem.parquet')) "
-            f"TO '{base}' (HEADER, DELIMITER ',')"
-        )
-    big = os.path.join(work, f"big_lineitem_{target_mb}.csv")
+    ~target_mb MB, cached in WORK across runs."""
+    base = _lineitem_csv(sf_dir)
+    big = os.path.join(WORK, f"big_lineitem_{target_mb}.csv")
     if (
         not os.path.exists(big)
         or abs(os.path.getsize(big) - target_mb * 1e6) > 0.1 * target_mb * 1e6
@@ -468,17 +408,10 @@ def _replicated_csv(sf_dir: str, target_mb: int) -> str:
 
 def _fs_settle() -> None:
     """Flush dirty pages and give writeback a beat before a timed I/O
-    run. The r8 driver bench generated a 2 GB CSV immediately before
-    timing the first conversion over it — that run raced the kernel's
-    writeback of its own input (and each subsequent mode raced the
-    previous mode's parquet output), which is the leading mechanical
-    suspect for the r8 2.5x big-conversion swing on untouched code
-    (VERDICT r8 "What's missing" #1). sync() makes every timed mode
-    start from the same clean-page state."""
-    try:
-        os.sync()
-    except (AttributeError, OSError):  # pragma: no cover
-        pass
+    run, so no timed conversion races the kernel's writeback of its own
+    input or of the previous mode's output (the suspected cause of the
+    r8 2.5x big-conversion swing, VERDICT r8 "What's missing" #1)."""
+    os.sync()
     time.sleep(1.0)
 
 
@@ -488,28 +421,14 @@ def bench_conversion_canary(spark, sf_dir: str) -> dict:
     best-of-2 with an fs-settle before every timed run. Large enough
     that parse+encode dominates job overhead (the 39 MB pinned canary
     is overhead-dominated), small enough that a timed run is seconds.
-    Driver-measured r9 times become the pinned reference for r10+ in
-    CONV_CANARY_REF / BASELINE.md."""
-    from csv2parquet_spark.converter import ConvertOptions, convert
-
+    Driver-measured r9 times are the pinned reference in
+    MID_CONV_CANARY_REF / BASELINE.md."""
     path = _replicated_csv(sf_dir, 128)
-    size_mb = os.path.getsize(path) / 1e6
-    out = {"input_mb": round(size_mb, 1)}
-    for label, opts in (
-        ("single_file_sec", None),
-        ("parallel_sec", ConvertOptions(single_file=False)),
-    ):
-        dst = os.path.join("/tmp/spark_graft_bench", "canary_conv.parquet")
-        args = [spark, path, dst] + ([opts] if opts else [])
-        convert(*args)  # warm
-        best = float("inf")
-        for _ in range(2):
-            _fs_settle()
-            t0 = time.perf_counter()
-            convert(*args)
-            best = min(best, time.perf_counter() - t0)
-        out[label] = round(best, 3)
-    return out
+    dst = os.path.join(WORK, "canary_conv.parquet")
+    return {
+        "input_mb": round(os.path.getsize(path) / 1e6, 1),
+        **_convert_best_of_2(spark, path, dst, settle=True),
+    }
 
 
 def bench_conversion_big(spark, sf_dir: str) -> dict:
@@ -520,54 +439,82 @@ def bench_conversion_big(spark, sf_dir: str) -> dict:
 
     The input is the sf lineitem CSV body replicated to
     $SPARK_GRAFT_BENCH_BIG_MB (default 2048 MB; 0 skips). Timed once per
-    mode — at GB scale codegen warm-up is noise — but since r9 each
-    timed mode starts from a SETTLED filesystem (_fs_settle): the r8
-    protocol let mode N race the writeback of mode N-1's output (and
-    the first mode race its own input's generation), which made the
-    number partly measure kernel flush scheduling."""
-    from csv2parquet_spark.converter import ConvertOptions, convert
-
+    mode — at GB scale codegen warm-up is noise — each from a SETTLED
+    filesystem (_fs_settle)."""
     target_mb = int(os.environ.get("SPARK_GRAFT_BENCH_BIG_MB", "2048"))
     if target_mb <= 0:
         return {}
-    work = "/tmp/spark_graft_bench"
     big = _replicated_csv(sf_dir, target_mb)
     size_mb = os.path.getsize(big) / 1e6
-    _fs_settle()
-    t0 = time.perf_counter()
-    convert(
-        spark, big, os.path.join(work, "big_multi.parquet"), ConvertOptions(single_file=False)
-    )
-    t_multi = time.perf_counter() - t0
-    # Sampled inference (the realistic at-scale knob: --max-read-records):
+    out = {"input_mb": round(size_mb, 1)}
+    # Sampled inference (the realistic at-scale knob: --max-read-records)
     # isolates the cost of the reference-default full-pass inference.
-    _fs_settle()
-    t0 = time.perf_counter()
-    convert(
-        spark,
-        big,
-        os.path.join(work, "big_multi.parquet"),
-        ConvertOptions(single_file=False, max_read_records=65536),
-    )
-    t_sampled = time.perf_counter() - t0
-    _fs_settle()
-    t0 = time.perf_counter()
-    convert(spark, big, os.path.join(work, "big_single.parquet"))
-    t_single = time.perf_counter() - t0
+    for label, dst, opts in (
+        ("parallel", "big_multi.parquet", ConvertOptions(single_file=False)),
+        (
+            "parallel_sampled_infer",
+            "big_multi.parquet",
+            ConvertOptions(single_file=False, max_read_records=65536),
+        ),
+        ("single_file", "big_single.parquet", ConvertOptions()),
+    ):
+        _fs_settle()
+        sec = _secs(convert, spark, big, os.path.join(WORK, dst), opts)
+        out[f"{label}_sec"] = round(sec, 3)
+        out[f"{label}_mb_per_sec"] = round(size_mb / sec, 1)
+    return out
+
+
+def vs_prev_section(times: dict[str, float], root: str = ROOT) -> dict:
+    """Repo-side round-over-round comparison (VERDICT r11 item 3's
+    intent, robust to the driver's 2 KB tail): diff this run's per-query
+    map against the NEWEST archived BENCH_DETAIL_r{M}.json so n_common /
+    improved / regressed exist as artifacts even when the driver-side
+    PERF tooling cannot reconstruct them. Purely informational — wall
+    ratios across rounds carry box phase; the canary ratios of both runs
+    ride along for normalization."""
+    archived = _archived("BENCH_DETAIL_r", root)
+    if not archived:
+        return {"skipped": "no archived detail"}
+    prev_path = archived[max(archived)]
+    with open(prev_path) as f:
+        prev = json.load(f)
+    pq = prev.get("queries", {})
+    common = [k for k in times if k in pq and pq[k] > 0]
+    ratios = [times[k] / pq[k] for k in common]
     return {
-        "input_mb": round(size_mb, 1),
-        "single_file_sec": round(t_single, 3),
-        "single_file_mb_per_sec": round(size_mb / t_single, 1),
-        "parallel_sec": round(t_multi, 3),
-        "parallel_mb_per_sec": round(size_mb / t_multi, 1),
-        "parallel_sampled_infer_sec": round(t_sampled, 3),
-        "parallel_sampled_infer_mb_per_sec": round(size_mb / t_sampled, 1),
+        "prev_round_file": os.path.basename(prev_path),
+        "prev_total": prev.get("value"),
+        "prev_canary_box_ratio_vs_r8": (prev.get("canary") or {}).get(
+            "box_ratio_vs_r8"
+        ),
+        "n_common": len(common),
+        "geomean_ratio": (
+            round(statistics.geometric_mean(ratios), 3) if ratios else None
+        ),
+        "improved_gt10pct": sum(1 for r in ratios if r < 0.9),
+        "regressed_gt10pct": sum(1 for r in ratios if r > 1.1),
     }
+
+
+def _guarded(fn, *args) -> dict:
+    """``fn(*args)``, or ``{"error": repr(exc)}`` if it raises: the
+    calibration, rotation and conversion tiers must never cost the round
+    its headline numbers, and each fails on its own (ADVICE r9) so one
+    failure cannot overwrite another tier's result."""
+    try:
+        return fn(*args)
+    except Exception as exc:  # pragma: no cover - defensive
+        return {"error": repr(exc)}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    # Every pinned reference (canaries, archived round details) is sf0.1,
+    # the driver's bench SF; at any other SF their ratios are meaningless.
+    at_ref_sf = isinstance(sf_val, float) and math.isclose(sf_val, 0.1)
     # Progress bars write \r-frames to stdout; under the driver's capture
     # they flood the tail and can push the JSON summary line out of the
     # window — disable them for a clean machine-readable stream.
@@ -580,18 +527,15 @@ def main() -> None:
     bench_shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # Warm the JVM/codegen once with the flagship query.
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    _noop(REGISTRY["q1_pricing_summary"].fn, spark, sf_dir)
 
     times: dict[str, float] = {}
     spread: dict[str, float] = {}
     nruns: dict[str, int] = {}
     shuffle: dict[str, dict[str, int]] = {}
-    capture_shuffle = os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "1") == "1"
     for name in HEADLINE:
         fn = REGISTRY[name].fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # codegen warm
+        _noop(fn, spark, sf_dir)  # codegen warm
         # Adaptive best-of-N (VERDICT r4 item 3: the r4 driver run was
         # contended, with spreads larger than the measurement): keep
         # timing until the two FASTEST runs agree within min(0.3 s, 30%
@@ -601,9 +545,7 @@ def main() -> None:
         # contended the box was, which is noise we're discarding).
         runs: list[float] = []
         for _ in range(6):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+            runs.append(_secs(_noop, fn, spark, sf_dir))
             if len(runs) >= 3:
                 s = sorted(runs)
                 if s[1] - s[0] < min(0.3, 0.3 * s[0]):
@@ -612,70 +554,30 @@ def main() -> None:
         times[name] = round(s[0], 3)
         spread[name] = round(s[1] - s[0], 3)
         nruns[name] = len(runs)
-        if capture_shuffle:
-            # Box-noise-IMMUNE plan signal (VERDICT r8 item 8): shuffle
-            # write volume is deterministic where wall time is not. One
-            # untimed extra execution per key, on a FRESH frame so the
-            # timed QEs above aren't double-counted. Never let a metric
-            # walk cost the round its timings.
-            try:
-                from csv2parquet_spark.planmetrics import (
-                    executed_shuffle_metrics,
-                )
-
-                shuffle[name] = executed_shuffle_metrics(
-                    fn(spark, sf_dir), shuffle_partitions=bench_shuffle_parts
-                )
-            except Exception as exc:  # pragma: no cover - defensive
-                shuffle[name] = {"error": repr(exc)}  # type: ignore[dict-item]
-        if _GC_BETWEEN_KEYS:
-            _inter_key_cleanup(spark)
+        # Box-noise-IMMUNE plan signal (VERDICT r8 item 8): shuffle
+        # write volume is deterministic where wall time is not. One
+        # untimed extra execution per key, on a FRESH frame so the
+        # timed QEs above aren't double-counted. Never let a metric
+        # walk cost the round its timings.
+        try:
+            shuffle[name] = executed_shuffle_metrics(
+                fn(spark, sf_dir), shuffle_partitions=bench_shuffle_parts
+            )
+        except Exception as exc:  # pragma: no cover - defensive
+            shuffle[name] = {"error": repr(exc)}  # type: ignore[dict-item]
 
     total = round(sum(times.values()), 3)
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # The calibration and rotation tiers must never cost the round its
-    # headline numbers; same for the long I/O-bound conversion benches.
-    try:
-        # Reference times are sf0.1 (the driver's bench SF) — at any
-        # other SF the ratios would be meaningless.
-        canary = (
-            canary_section(times)
-            if sf_val == 0.1
-            else {"skipped": f"canary refs are sf0.1, ran sf{sf_val}"}
-        )
-    except Exception as exc:  # pragma: no cover - defensive
-        canary = {"error": repr(exc)}
-    try:
-        rotation = bench_rotation(spark, sf_dir, HEADLINE)
-    except Exception as exc:  # pragma: no cover - defensive
-        rotation = {"error": repr(exc)}
-    # Each conversion bench fails independently (ADVICE r9): a shared
-    # try block let a canary/big-path failure overwrite an
-    # already-successful small-fixture result and silently skip the
-    # conversion-canary calibration.
-    try:
-        conv = bench_conversion(spark, sf_dir)
-    except Exception as exc:  # pragma: no cover - defensive
-        conv = {"error": repr(exc)}
-    try:
-        conv_canary = bench_conversion_canary(spark, sf_dir)
-    except Exception as exc:  # pragma: no cover - defensive
-        conv_canary = {"error": repr(exc)}
-    try:
-        conv_big = bench_conversion_big(spark, sf_dir)
-    except Exception as exc:  # pragma: no cover - defensive
-        conv_big = {"error": repr(exc)}
-    try:
-        # Per-family gating lives INSIDE conv_canary_section (ADVICE
-        # r10); the only section-level skip is the wrong-SF case where
-        # no ref family is comparable.
-        conv_cal = (
-            conv_canary_section(conv, conv_canary)
-            if sf_val == 0.1
-            else {"skipped": f"conv canary refs are sf0.1, ran sf{sf_val}"}
-        )
-    except Exception as exc:  # pragma: no cover - defensive
-        conv_cal = {"error": repr(exc)}
+    rotation = _guarded(bench_rotation, spark, sf_dir, HEADLINE)
+    conv = _guarded(bench_conversion, spark, sf_dir)
+    conv_canary = _guarded(bench_conversion_canary, spark, sf_dir)
+    conv_big = _guarded(bench_conversion_big, spark, sf_dir)
+    if at_ref_sf:
+        canary = _guarded(canary_section, times)
+        # Per-family gating lives INSIDE conv_canary_section (ADVICE r10).
+        conv_cal = _guarded(conv_canary_section, conv, conv_canary)
+        vs_prev = _guarded(vs_prev_section, times)
+    else:
+        canary = conv_cal = vs_prev = {"skipped": f"refs are sf0.1, ran sf{sf_val}"}
     detail = {
         "metric": "headline_query_wall_sec",
         "value": total,
@@ -684,10 +586,6 @@ def main() -> None:
         "spread": spread,
         "n_runs": nruns,
         "sf": sf_val,
-        # Records whether the opt-in inter-key forced GC ran (default
-        # off — see _inter_key_cleanup for the negative result that
-        # keeps it off). All driver rounds compare like-for-like.
-        "gc_between_keys": _GC_BETWEEN_KEYS,
         "canary": canary,
         "shuffle": shuffle,
         "shuffle_partitions": bench_shuffle_parts,
@@ -696,99 +594,27 @@ def main() -> None:
         "csv_to_parquet_canary": conv_canary,
         "csv_to_parquet_canary_calibration": conv_cal,
         "csv_to_parquet_big": conv_big,
+        "vs_prev": vs_prev,
     }
-    # Repo-side round-over-round comparison (VERDICT r11 item 3's
-    # intent, robust to the driver's 2 KB tail): diff this run's
-    # per-query map against the NEWEST archived BENCH_DETAIL_r{M}.json
-    # so n_common / improved / regressed exist as artifacts even when
-    # the driver-side PERF tooling cannot reconstruct them. Purely
-    # informational — wall ratios across rounds carry box phase; the
-    # canary ratios of both runs ride along for normalization.
-    try:
-        import glob as _g
-        import re as _re
-
-        root = os.path.dirname(os.path.abspath(__file__))
-        archived = sorted(
-            (
-                (int(m.group(1)), p)
-                for p in _g.glob(os.path.join(root, "BENCH_DETAIL_r*.json"))
-                if (m := _re.search(r"BENCH_DETAIL_r(\d+)\.json$", p))
-            )
-        )
-        if archived and sf_val == 0.1:
-            prev_round, prev_path = archived[-1]
-            with open(prev_path) as f:
-                prev = json.load(f)
-            pq = prev.get("queries", {})
-            common = [k for k in times if k in pq and pq[k] > 0]
-            import math as _math
-
-            ratios = [times[k] / pq[k] for k in common]
-            vs_prev = {
-                "prev_round_file": os.path.basename(prev_path),
-                "prev_total": prev.get("value"),
-                "prev_canary_box_ratio_vs_r8": (prev.get("canary") or {}).get(
-                    "box_ratio_vs_r8"
-                ),
-                "n_common": len(common),
-                "geomean_ratio": (
-                    round(
-                        _math.exp(sum(_math.log(r) for r in ratios) / len(ratios)),
-                        3,
-                    )
-                    if ratios
-                    else None
-                ),
-                "improved_gt10pct": sum(1 for r in ratios if r < 0.9),
-                "regressed_gt10pct": sum(1 for r in ratios if r > 1.1),
-            }
-        else:
-            vs_prev = {"skipped": "no archived detail or non-sf0.1 run"}
-    except Exception as exc:  # pragma: no cover - defensive
-        vs_prev = {"error": repr(exc)}
-    detail["vs_prev"] = vs_prev
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as f:
+    with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1)
     # Self-archive (ADVICE/VERDICT r10 item 5): BENCH_DETAIL.json is
     # overwritten every run, which made per-key round-over-round
-    # comparison impossible from artifacts. Infer the CURRENT round as
-    # max(BENCH_r{N}.json)+1 — the driver writes BENCH_r{N} for the
-    # round being closed AFTER running this script — and keep a
-    # per-round copy. Re-runs within a round just refresh the same file.
+    # comparison impossible from artifacts — keep a per-round copy.
+    # Re-runs within a round just refresh the same file.
     try:
-        import glob
-        import re
-
-        root = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(root, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        rnd = (max(rounds) + 1) if rounds else 1
-        with open(
-            os.path.join(root, f"BENCH_DETAIL_r{rnd:02d}.json"), "w"
-        ) as f:
+        with open(os.path.join(ROOT, f"BENCH_DETAIL_r{_round():02d}.json"), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError:
         pass  # archiving is best-effort; the driver contract line matters
-    # Earlier line: full detail for humans/archaeology. Final line: the
-    # compact driver contract. The driver's tail capture is 2000 bytes
-    # (len(BENCH_r11.tail) == 2000 exactly) and a 76-key per-query map
-    # is ≥2.2 KB COMPACT (the key names alone are ~1.8 KB), so putting
-    # the map back in the final line would front-truncate it and break
-    # the parse — the BENCH_r05 "parsed": null failure mode (VERDICT r5
-    # item 5). VERDICT r11 item 3's fallback is used instead: a SECOND
-    # machine-readable line right before the final one carries the
-    # 2dp-rounded map for any capture window larger than the map (and
-    # for the repo's own artifacts); the final line stays small, last,
-    # and parseable, and additionally carries the canary box-speed
-    # ratio so a future driver swing arrives pre-adjudicated without
-    # the sidecar.
+    # Earlier line: full detail. Final line: the compact driver contract.
+    # The driver's tail capture is 2000 bytes and a 76-key per-query map
+    # is ≥2.2 KB compact, so the map in the final line would
+    # front-truncate it and break the parse (BENCH_r05 "parsed": null).
+    # The map rides on a SECOND line right before the final one, for any
+    # capture window larger than the map; the final line stays small and
+    # carries the canary box-speed ratio so a future driver swing
+    # arrives pre-adjudicated without the sidecar.
     print(json.dumps(detail))
     print(
         json.dumps(
@@ -809,7 +635,7 @@ def main() -> None:
         "sf": sf_val,
         "queries_detail": "BENCH_DETAIL.json",
     }
-    if isinstance(canary, dict) and canary.get("box_ratio_vs_r8") is not None:
+    if canary.get("box_ratio_vs_r8") is not None:
         final["canary_box_ratio_vs_r8"] = canary["box_ratio_vs_r8"]
     print(json.dumps(final))
 

@@ -35,10 +35,6 @@ def parallelize_scan(df: DataFrame) -> DataFrame:
     on the driver on every call — fine once per query, pure overhead
     when repeated (VERDICT r8 nit).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCAN_REBALANCE", "1") == "0":  # A/B + debug
-        return df
     sc = df.sparkSession.sparkContext
     try:
         nparts = df.rdd.getNumPartitions()
@@ -80,14 +76,7 @@ def localcheckpoint_partitioned(df: DataFrame) -> DataFrame:
     checkpoint their per-iteration STATE every superstep (each
     materialization job then references the edge relation exactly
     once), not every k supersteps.
-
-    ``SPARK_GRAFT_CKPT_PART=0`` falls back to the plain checkpoint
-    (A/B + debugging).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CKPT_PART", "1") == "0":  # A/B + debug
-        return df.localCheckpoint()
     with no_aqe(df.sparkSession):
         return df.localCheckpoint()
 

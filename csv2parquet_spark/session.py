@@ -75,11 +75,8 @@ def get_spark(
         # floor). 64k keeps parallelismFirst able to reach
         # defaultParallelism on small relations; at cluster scale
         # partitions are orders of magnitude above either floor, so the
-        # setting is inert there (and tunable via env either way).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # setting is inert there (extra_conf overrides it).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow batch transfer for pandas UDF / toPandas paths.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

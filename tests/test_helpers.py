@@ -194,6 +194,69 @@ def test_no_hand_rolled_conf_restore():
     assert not hits, hits
 
 
+# Deployment and run-size settings, plus the switch plan-only tooling
+# (scripts/dump_plans.py) needs; nothing else may read the environment.
+ENV_ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_DIM_GUARD"}
+
+
+def test_no_ab_env_switch():
+    """Tripwire: the package reads no environment variable outside
+    ENV_ALLOWED. A/B or kill-switch variables that every caller leaves
+    at the default are dead configurations no test covers."""
+    import ast
+    import pathlib
+
+    import csv2parquet_spark
+
+    root = pathlib.Path(csv2parquet_spark.__file__).parent
+
+    def env_name(node):
+        if isinstance(node, ast.Call) and ast.unparse(node.func) in {
+            "os.environ.get",
+            "os.getenv",
+        }:
+            key = node.args[0]
+        elif isinstance(node, ast.Subscript) and ast.unparse(node.value) == "os.environ":
+            key = node.slice
+        else:
+            return None
+        return key.value if isinstance(key, ast.Constant) else ast.unparse(key)
+
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            name = env_name(node)
+            if name is not None and name not in ENV_ALLOWED:
+                hits.append(f"{path.relative_to(root)}:{node.lineno} {name}")
+    assert not hits, hits
+
+
+def test_localcheckpoint_partitioned_keeps_layout(spark):
+    """Tripwire for the graph supersteps' structural win: a relation
+    hash-partitioned on ``k`` and materialized through
+    ``localcheckpoint_partitioned`` keeps that layout, so a shuffle-hash
+    join on ``k`` exchanges only the other side. A plain
+    ``localCheckpoint()`` under AQE records UnknownPartitioning and the
+    join re-exchanges the checkpointed relation too."""
+    import re
+
+    from csv2parquet_spark.operators import scan
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    left = scan.localcheckpoint_partitioned(
+        spark.range(200).selectExpr("id % 50 AS k", "id AS a").repartition(n, "k")
+    )
+    right = spark.range(100).selectExpr("id % 50 AS k", "id AS b")
+    joined = left.join(right.hint("shuffle_hash"), "k")
+    joined.collect()
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ShuffledHashJoin" in final, plan
+    (left_k,) = re.findall(r"Scan ExistingRDD\[(k#\d+)", final)
+    exchanged = re.findall(r"Exchange hashpartitioning\((k#\d+)", final)
+    assert len(exchanged) == 1 and exchanged[0] != left_k, plan
+
+
 def test_table_memo_bounded(spark, sf_dir, tmp_path):
     """The memo evicts LRU past its bound instead of pinning every
     (session, path, mtime) keyed plan for process lifetime."""
