@@ -15,23 +15,15 @@ reachable from the handle (round-4 gotcha). Instead the capture runs
 the df's OWN executed plan once — ``executedPlan().execute().count()``
 drives the full pipeline JVM-side without transferring rows to Python —
 then walks that same plan tree (through AQE wrapper and query stages)
-summing the Exchange write metrics.
+summing the Exchange write metrics. The shuffle lint
+(tests/test_shuffle_baseline.py) runs this capture for every key.
 """
 
 from __future__ import annotations
 
-import hashlib
-import re
-
 from pyspark.sql import DataFrame
 
 from csv2parquet_spark.session import conf_override
-
-# Run-varying tokens inside a physical plan string: expression ids
-# (`l_orderkey#123`), plan ids (`[plan_id=456]`), and exchange/subquery
-# ids (`[id=#78]`) all come from JVM-global counters that differ run to
-# run while the plan SHAPE is identical. Strip them before hashing.
-_PLAN_ID_NOISE = re.compile(r"#\d+|plan_id=\d+|\[id=[^\]]*\]")
 
 
 def _capture_conf(df: DataFrame, shuffle_partitions: int | None):
@@ -40,30 +32,6 @@ def _capture_conf(df: DataFrame, shuffle_partitions: int | None):
     if shuffle_partitions is not None:
         pins["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     return conf_override(df.sparkSession.conf, pins)
-
-
-def plan_signature(df: DataFrame, shuffle_partitions: int | None = None) -> str:
-    """Hash of ``df``'s STATIC physical plan with run-varying ids
-    normalized away — the cheap plan-identity check behind the shuffle
-    lint's fast path (VERDICT r9 item 6).
-
-    Shuffle volume is a pure function of (plan, data, conf); on frozen
-    data under pinned conf, an UNCHANGED plan string implies an
-    unchanged volume, so the lint can skip the full executed-plan
-    capture (one complete query run) whenever this signature matches
-    the pinned one. Materializing ``executedPlan`` runs NO jobs — the
-    signature costs milliseconds where the capture costs the query.
-
-    Same determinism rules as ``executed_shuffle_metrics``: AQE is
-    disabled for the materialization (the AdaptiveSparkPlan wrapper
-    string mutates as stages finish) and ``shuffle_partitions`` should
-    be pinned to the baseline's value (partition counts appear inside
-    ``hashpartitioning(...)`` nodes, so a conf drift changes the
-    signature — which is correct, because it changes the volume too).
-    """
-    with _capture_conf(df, shuffle_partitions):
-        raw = df._jdf.queryExecution().executedPlan().toString()
-    return hashlib.sha256(_PLAN_ID_NOISE.sub("", raw).encode()).hexdigest()
 
 
 def executed_shuffle_metrics(
@@ -143,59 +111,3 @@ def executed_shuffle_metrics(
         qe.executedPlan().execute().count()
         walk(qe.executedPlan())
     return {"records": int(rec), "bytes": int(byt)}
-
-
-def kernel_source_hash(fn) -> str:
-    """SHA-256 over the source of ``fn``'s defining module plus every
-    in-package module it transitively reaches — the UDF-body half of
-    the shuffle lint's fast-path identity (ADVICE r10).
-
-    ``plan_signature`` hashes the physical plan STRING, and plans with
-    Python kernels (mapInPandas / applyInPandas / ArrowEvalPython —
-    pervasive here) show only the UDF's *name*: a kernel-body edit
-    that changes emitted row counts leaves the signature untouched, so
-    the fast path would silently skip the volume assertion for exactly
-    the regression class it exists to catch. Folding in a source hash
-    of the query fn's module closure makes any edit anywhere near the
-    key's code invalidate the fast path — the full executed capture
-    then re-measures the real volume. False invalidations (editing an
-    unrelated query in the same module) cost one capture, never a
-    missed regression; the pin self-heals at the next baseline regen.
-
-    Closure rule: start at ``fn``'s module; pull in (a) package
-    submodules it references, (b) the defining modules of any
-    package-level functions/classes it imported; repeat to a fixed
-    point. Hash = sha256 over (sorted module name, source bytes).
-    """
-    import inspect
-    import sys as _sys
-
-    pkg = __name__.split(".")[0] + "."
-    mod = inspect.getmodule(fn)
-    todo = [mod.__name__] if mod is not None else []
-    seen: set[str] = set()
-    while todo:
-        name = todo.pop()
-        if name in seen or not name.startswith(pkg):
-            continue
-        seen.add(name)
-        m = _sys.modules.get(name)
-        if m is None:
-            continue
-        for attr in vars(m).values():
-            if inspect.ismodule(attr):
-                todo.append(getattr(attr, "__name__", ""))
-            else:
-                owner = getattr(attr, "__module__", None)
-                if isinstance(owner, str):
-                    todo.append(owner)
-    h = hashlib.sha256()
-    for name in sorted(seen):
-        m = _sys.modules.get(name)
-        try:
-            src = inspect.getsource(m)
-        except (OSError, TypeError):  # pragma: no cover - C/missing src
-            src = name
-        h.update(name.encode())
-        h.update(src.encode())
-    return h.hexdigest()

@@ -39,7 +39,8 @@ from csv2parquet_spark.queries import order_stats  # noqa: E402,F401
 #
 #   tier 0 — _FORCE_FIRST: manual re-proof list for queries whose
 #            implementation changed since their last green row (edit
-#            this when changing the behavior of an already-proven query);
+#            this when changing the behavior of an already-proven query,
+#            and drop a name once a CORRECTNESS_r{N}.json hash-matches it);
 #   tier 1 — oracle-backed queries with no hash-proof in ANY prior round
 #            (registration order) — the slots that convert claims to
 #            proofs;
@@ -50,98 +51,7 @@ from csv2parquet_spark.queries import order_stats  # noqa: E402,F401
 # Queries that miss this round's window stay in tier 1/2 and surface
 # automatically next round once newly-proven names drop to tier 3.
 # ---------------------------------------------------------------------------
-# Round-9: cleared at round start per the rotation protocol — all 10
-# r8 _FORCE_FIRST re-proofs landed green in CORRECTNESS_r08.json and
-# the full-registry PREFLIGHT_r08.json re-proved every other name at
-# the driver's own protocol, so tier 1 and tier 2 are empty and the
-# window head is free for deliberate re-proofs only.
-# Correction of the r8 comment drift (VERDICT r8 "What's wrong" #2):
-# the theil_sen_daily_trend entry described exact_median as "NULLs
-# filtered before the CDF; plan gains the filter" — the LANDED fix is
-# DETECTION-ONLY (counts added to the existing partial-agg action,
-# ranking.py:286-303); NULL-free plans are byte-identical. The filter
-# draft was reverted because Catalyst pushed the predicate into
-# callers' ANSI-evaluated join conditions (ROUND8.md §12).
-# Round-10: the four r9 re-proofs (fuzzy_join_levenshtein,
-# hard_negative_mining, lpa_copurchase_communities,
-# agg_approx_distinct) all landed green in CORRECTNESS_r09.json —
-# rotated out per protocol. This round's deliberate re-proofs are the
-# NULL-guard hardenings (VERDICT r9 item 4, "improve the 9 numpy-kernel
-# NULL crash messages"): each adds an actionable-raise guard inside a
-# kernel or driver-side collect of an already-proven query. The guards
-# only fire on NULL inputs — the driver fixtures are NULL-free, so
-# values and plans are unchanged; re-proof is belt-and-braces plus
-# the full-registry PREFLIGHT_r10 run.
-#   - simhash_near_dups: NULL token-array guard in the _simhash pandas
-#     UDF (covers every simhash_signatures caller).
-#   - similarity_topk_ivf: NULL query-embedding guard in the IVF probe
-#     UDF (covers similarity_topk_ivf_full and probe_ivf_index users).
-#   - similarity_topk_pq: NULL query-vector guard at the head() read +
-#     NULL subvec guard in the _pq_assign mapInPandas kernel.
-#   - binary_stats_arrow: NULL payload guard in the mapInArrow kernel.
-#   - asof_cogroup_merge: NULL timestamp guard in the cogroup
-#     applyInPandas merge (pandas merge_asof key-dtype contract).
-#   - t_closeness_report: NULL sensitive-value guard before the
-#     driver-side CDF sort.
-# Round-11: the six r10 NULL-guard re-proofs all landed green in
-# CORRECTNESS_r10.json — rotated out per protocol. This round's
-# deliberate re-proofs are the NULL-twin burn-down edits (VERDICT r10
-# items 1/2/4): each aligns a NULL contract (explicit NULLS LAST
-# ordering, NULL-key-never-matches gates, NULL-row exclusion filters)
-# on BOTH the Spark query and its oracle. Clean-fixture values are
-# unchanged by construction (the driver fixtures are NULL-free), but
-# every one of these queries' code or oracle changed, so they take the
-# window head for a driver re-proof.
-_FORCE_FIRST: list[str] = [
-    # Round-12 (optimization round 2): the r11 head's 8 structural
-    # rewrites plus the three NULL-twin classes all landed green in
-    # CORRECTNESS_r11.json — rotated out per protocol. Window HEAD is
-    # this round's structural rewrites (oracle-identical by
-    # construction; each re-proven locally at sf0.001 + sf0.01 before
-    # commit):
-    #   lpa / bfs — co-purchase edge build fused to ONE pair exchange
-    #         (raw pairs repartitioned on the superstep key, the
-    #         aggregation reuses the exchange); per-superstep state
-    #         checkpoints + partition-preserving edge checkpoints, so
-    #         supersteps never re-exchange the edge relation.
-    #   textrank — pagerank_fixed's vertices/ed/ranks checkpoints now
-    #         record their hash layout (plan-only change, same ints).
-    "lpa_copurchase_communities",
-    "bfs_hops_copurchase",
-    "textrank_tokens",
-    # r11 carry-over — missed the rotating r11 window (proven by
-    # PREFLIGHT_r11 286/286 but still without a driver stamp of the
-    # dim² map-only scoring rewrite):
-    "label_centroid_separation",
-    "ncm_confusion_matrix",
-    # r11 null-ts-window class carry-over (oracle-side `ts IS NOT
-    # NULL` twins + the watermark-dedup source gate / topk tie-break /
-    # gapfill is_gap / timeline filters) — none stamped in r11:
-    "stream_tumbling_window",
-    "stream_sliding_window",
-    "stream_session_windows",
-    "stream_static_enrich",
-    "stream_topk_trending",
-    "stream_dedup_within_watermark",
-    "error_burst_windows",
-    "sessionize_events_gap",
-    "sessionize_dynamic_gap",
-    "timeseries_gapfill_daily",
-    "ohlc_hourly_bars",
-    "attribution_last_click",
-    # r11 on_null='skip' plumbing carry-over (default 'raise' path
-    # byte-identical on the clean fixture; queue behind the
-    # result-affecting re-proofs):
-    "simhash_near_dups",
-    "embedding_near_dups",
-    "embedding_semantic_dedup",
-    "similarity_topk_ivf",
-    "similarity_topk_ivf_full",
-    "similarity_topk_pq",
-    "binary_stats_arrow",
-    "asof_cogroup_merge",
-    "t_closeness_report",
-]
+_FORCE_FIRST: list[str] = []
 
 # New registrations that must NOT displace pending proofs go here; they
 # fill trailing slots if tier 0+1+2 < 50 and auto-promote next round.

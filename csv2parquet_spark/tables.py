@@ -64,14 +64,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Directory fixtures: a file rewritten IN PLACE inside the
         # directory leaves the dir's own mtime/size unchanged, so the
         # key also folds in the contained entries' stats (count, total
-        # size, max mtime — a shallow scandir, the same metadata the
-        # file listing reads anyway; ADVICE r11).
+        # size, max mtime — the same metadata the file listing reads
+        # anyway; ADVICE r11). The walk is recursive: a partitioned
+        # table keeps its files under k=v/ subdirectories (ADVICE r12).
         dir_sig: tuple = ()
         if os.path.isdir(path):
             n = tot = newest = 0
-            with os.scandir(path) as it:
-                for entry in it:
-                    est = entry.stat()
+            for root, dirs, files in os.walk(path):
+                for entry in dirs + files:
+                    est = os.stat(os.path.join(root, entry))
                     n += 1
                     tot += est.st_size
                     newest = max(newest, est.st_mtime_ns)

@@ -6,7 +6,8 @@ unlike wall time they need no canary normalization: a >20% growth on
 frozen data is a PLAN change, period. The baseline is captured at
 sf0.001 under the test session config (local[4], 4 shuffle partitions —
 must match tests/conftest.py, since parallelize_scan's gate reads
-defaultParallelism) and linted by tests/test_shuffle_baseline.py.
+defaultParallelism) and linted by tests/test_shuffle_baseline.py. Each
+key pins the ``records`` and ``bytes`` of one executed capture.
 
 Rerun this script ONLY when a key's plan changes deliberately, and say
 so in the commit message — silently refreshing the baseline defeats the
@@ -25,11 +26,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from csv2parquet_spark.planmetrics import (  # noqa: E402
-    executed_shuffle_metrics,
-    kernel_source_hash,
-    plan_signature,
-)
+from csv2parquet_spark.planmetrics import executed_shuffle_metrics  # noqa: E402
 from csv2parquet_spark.queries import REGISTRY  # noqa: E402
 from csv2parquet_spark.session import get_spark  # noqa: E402
 
@@ -78,18 +75,6 @@ def main() -> None:
             continue
         try:
             m = executed_shuffle_metrics(REGISTRY[name].fn(spark, SF_DIR))
-            # Plan signature on a FRESH frame (executedPlan caches per
-            # QueryExecution): the lint's fast path skips the full
-            # capture when a key's signature matches this pin.
-            m["plan_sig"] = plan_signature(
-                REGISTRY[name].fn(spark, SF_DIR), shuffle_partitions=4
-            )
-            # UDF-body half of the fast-path identity (ADVICE r10):
-            # plans with Python kernels show only the UDF *name*, so
-            # the plan signature alone is blind to kernel-body edits —
-            # the source-closure hash invalidates the fast path for any
-            # edit near the key's code.
-            m["kernel_sig"] = kernel_source_hash(REGISTRY[name].fn)
         except Exception as exc:  # noqa: BLE001 — record, don't abort
             print(f"{name}: FAILED {exc!r}", file=sys.stderr)
             continue

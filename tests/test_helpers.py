@@ -5,6 +5,7 @@ tables.py relation memo — the r12 hardening of shared infrastructure
 from __future__ import annotations
 
 import math
+import pathlib
 import sys
 import threading
 
@@ -161,7 +162,6 @@ def test_no_hand_rolled_conf_restore():
     ``conf_override``, the one restore that is reentrant, serialized
     across threads and unsets keys that were unset before."""
     import ast
-    import pathlib
 
     import csv2parquet_spark
 
@@ -197,18 +197,24 @@ def test_no_hand_rolled_conf_restore():
 # Deployment and run-size settings, plus the switch plan-only tooling
 # (scripts/dump_plans.py) needs; nothing else may read the environment.
 ENV_ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_DIM_GUARD"}
+_REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
-def test_no_ab_env_switch():
-    """Tripwire: the package reads no environment variable outside
-    ENV_ALLOWED. A/B or kill-switch variables that every caller leaves
-    at the default are dead configurations no test covers."""
+@pytest.mark.parametrize(
+    "root, allowed",
+    [
+        (_REPO / "csv2parquet_spark", ENV_ALLOWED),
+        # the suite's one input knob: which fixture scale factor to run
+        (_REPO / "tests", {"SPARK_GRAFT_TEST_SF_DIR"}),
+    ],
+    ids=["csv2parquet_spark", "tests"],
+)
+def test_no_ab_env_switch(root, allowed):
+    """Tripwire: neither the package nor the suite reads an environment
+    variable outside its allowed set. A/B or kill-switch variables that
+    every caller leaves at the default are dead configurations no test
+    covers."""
     import ast
-    import pathlib
-
-    import csv2parquet_spark
-
-    root = pathlib.Path(csv2parquet_spark.__file__).parent
 
     def env_name(node):
         if isinstance(node, ast.Call) and ast.unparse(node.func) in {
@@ -226,7 +232,7 @@ def test_no_ab_env_switch():
     for path in sorted(root.rglob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             name = env_name(node)
-            if name is not None and name not in ENV_ALLOWED:
+            if name is not None and name not in allowed:
                 hits.append(f"{path.relative_to(root)}:{node.lineno} {name}")
     assert not hits, hits
 
@@ -279,9 +285,11 @@ def test_table_memo_bounded(spark, sf_dir, tmp_path):
         tables._TABLE_MEMO.update(old)
 
 
-def test_table_memo_dir_fixture_invalidation(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("nested", [False, True], ids=["flat", "nested"])
+def test_table_memo_dir_fixture_invalidation(spark, sf_dir, tmp_path, nested):
     """A file rewritten IN PLACE inside a directory-shaped table must
-    miss the memo (the dir's own mtime/size may not change)."""
+    miss the memo (the dir's own mtime/size may not change) — also when
+    the file sits one partition directory down (``k=v/``)."""
     import os
 
     from csv2parquet_spark import tables
@@ -292,17 +300,19 @@ def test_table_memo_dir_fixture_invalidation(spark, sf_dir, tmp_path):
     rd = tmp_path / "sfdir"
     rd.mkdir()
     tgt = rd / "region.parquet"
+    data = tgt / "part=0" if nested else tgt
     spark.read.parquet(f"{sf_dir}/region.parquet").coalesce(1).write.mode(
         "overwrite"
-    ).parquet(str(tgt))
+    ).parquet(str(data))
     df1 = tables.table(spark, str(rd), "region")
     c1 = df1.count()
     # rewrite one contained file in place with different contents,
-    # pinning the directory's own stat fields
-    st = os.stat(tgt)
+    # pinning the stat fields of every directory above it
+    pinned = [(p, os.stat(p)) for p in (data, tgt)]
     spark.read.parquet(f"{sf_dir}/region.parquet").filter(
         F.col("r_regionkey") < 2
-    ).coalesce(1).write.mode("overwrite").parquet(str(tgt))
-    os.utime(tgt, ns=(st.st_atime_ns, st.st_mtime_ns))
+    ).coalesce(1).write.mode("overwrite").parquet(str(data))
+    for p, st in pinned:
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
     df2 = tables.table(spark, str(rd), "region")
     assert df2.count() != c1

@@ -588,28 +588,3 @@ def test_skyline_has_no_window_no_single_partition(spark, sf_dir):
     plan = _plan(REGISTRY["skyline_parts_frontier"].fn(spark, sf_dir))
     assert "Window" not in plan
     assert "Exchange SinglePartition" not in plan
-
-
-def test_plan_signature_id_invariant(spark, sf_dir):
-    """plan_signature must be invariant to the JVM-global expression-id
-    counter (the reason raw plan strings can't be hashed): building an
-    UNRELATED query in between advances the counter, so the second
-    build of the same query carries different #NNN ids — the signature
-    must not change. A genuinely different plan must hash differently."""
-    from csv2parquet_spark.planmetrics import plan_signature
-
-    fn = REGISTRY["q1_pricing_summary"].fn
-    a = plan_signature(fn(spark, sf_dir), shuffle_partitions=4)
-    # burn expression ids on an unrelated plan
-    REGISTRY["filter_project"].fn(spark, sf_dir).schema
-    b = plan_signature(fn(spark, sf_dir), shuffle_partitions=4)
-    assert a == b
-    other = plan_signature(
-        REGISTRY["filter_project"].fn(spark, sf_dir), shuffle_partitions=4
-    )
-    assert other != a
-    # conf sensitivity is a FEATURE: partition counts sit inside
-    # hashpartitioning(...) nodes and change the shuffle volume, so a
-    # different pinned count must yield a different signature.
-    c = plan_signature(fn(spark, sf_dir), shuffle_partitions=7)
-    assert c != a

@@ -4,8 +4,9 @@ plan-regression signal.
 Wall-time comparisons across rounds need canary normalization because
 the bench box drifts 1.5-2.5x between phases; shuffle RECORDS written
 do not — on frozen data they are a pure function of the plan. Every
-HEADLINE key's sf0.001 shuffle volume is pinned in
-SHUFFLE_BASELINE.json; a key growing >20% fails here, which is the
+registered key's sf0.001 shuffle volume is pinned in
+SHUFFLE_BASELINE.json, and each test builds its key once and runs the
+full executed capture; a key growing >20% fails here, which is the
 signal that would have caught r8's ``agg_approx_distinct`` Expand
 pathology without the sf1 sweep. Regenerate the baseline ONLY for
 deliberate plan changes: ``python scripts/gen_shuffle_baseline.py
@@ -19,28 +20,9 @@ import os
 
 import pytest
 
-from csv2parquet_spark.planmetrics import (
-    executed_shuffle_metrics,
-    kernel_source_hash,
-    plan_signature,
-)
+from csv2parquet_spark.planmetrics import executed_shuffle_metrics
 from csv2parquet_spark.queries.registry import REGISTRY
 from csv2parquet_spark.session import conf_override
-
-# Fast path (VERDICT r9 item 6 — the 286-key full-capture lint costs
-# ~5.5 min of every suite run): a key whose NORMALIZED plan-string
-# signature matches its pin has, by construction, the pinned volume
-# (volume is a function of plan + frozen data + pinned conf), so the
-# full executed capture is skipped. Keys whose signature differs — or
-# that have no pinned signature — always get the full capture and the
-# volume assertion. Round-close runs MUST set
-# SPARK_GRAFT_SHUFFLE_LINT_FULL=1 (mandatory per ADVICE r10, not
-# opt-in): the fast path is a dev-loop accelerator only; each round's
-# record keeps one end-to-end volume measurement of every key. The
-# fast path checks BOTH the plan signature and the kernel
-# source-closure hash — UDF-body edits, invisible in the plan string,
-# also force the real capture.
-_FULL = os.environ.get("SPARK_GRAFT_SHUFFLE_LINT_FULL", "0") == "1"
 
 _BASELINE_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -80,25 +62,6 @@ def pinned_conf(spark):
 def test_shuffle_volume_pinned(pinned_conf, name):
     spark = pinned_conf
     base = _BASELINE["keys"][name]
-    if not _FULL and base.get("plan_sig") and base.get("kernel_sig"):
-        # Fast path requires BOTH halves of the identity (ADVICE r10):
-        # the plan signature (plan shape under pinned conf) AND the
-        # kernel source-closure hash. Plans with Python kernels
-        # (mapInPandas / applyInPandas / ArrowEvalPython) show only the
-        # UDF *name* in the plan string, so a kernel-body edit that
-        # changes emitted row counts would pass the plan check alone —
-        # the source hash forces the full capture for exactly those
-        # edits. Keys without a kernel_sig pin always get the full
-        # capture until the baseline is regenerated.
-        sig = plan_signature(
-            REGISTRY[name].fn(spark, _BASELINE["sf_dir"]),
-            shuffle_partitions=_BASELINE["shuffle_partitions"],
-        )
-        if (
-            sig == base["plan_sig"]
-            and kernel_source_hash(REGISTRY[name].fn) == base["kernel_sig"]
-        ):
-            return  # unchanged plan+kernels -> pinned volume holds
     got = executed_shuffle_metrics(REGISTRY[name].fn(spark, _BASELINE["sf_dir"]))
     assert got["records"] <= max(base["records"] * _GROWTH, base["records"] + 64), (
         f"{name}: shuffle records grew {base['records']} -> {got['records']} "
@@ -115,3 +78,27 @@ def test_shuffle_volume_pinned(pinned_conf, name):
             f"{got['records']}; refresh SHUFFLE_BASELINE.json",
             UserWarning,
         )
+
+
+def test_executed_shuffle_metrics_walk(spark):
+    """Pin the capture's tree walk on frames with known exchange volumes:
+    100 rows in 4 map tasks, grouped into 7 keys over 4 shuffle
+    partitions."""
+    agg = "SELECT id % 7 AS k, count(*) AS n FROM range(0, 100, 1, 4) GROUP BY id % 7"
+
+    def records(df):
+        return executed_shuffle_metrics(df, shuffle_partitions=4)["records"]
+
+    # 4 map tasks x 7 partial groups through the hash exchange; an added
+    # REPARTITION shuffles the aggregate's 7 rows once more
+    rep = agg.replace("SELECT", "SELECT /*+ REPARTITION(3) */", 1)
+    assert (records(spark.sql(agg)), records(spark.sql(rep))) == (28, 28 + 7)
+    # a scalar subquery hangs off the Project's expressions, not its
+    # children: its hash exchange plus one partial max per partition
+    sub = f"(SELECT max(n) FROM ({agg}))"
+    assert records(spark.sql(f"SELECT id, {sub} AS a FROM range(0, 10, 1, 2)")) == 28 + 4
+    # the same subquery used twice runs once: the second use is a
+    # ReusedSubqueryExec and must not count again
+    twice = spark.sql(f"SELECT id, {sub} AS a, {sub} + 1 AS b FROM range(0, 10, 1, 2)")
+    assert records(twice) == 28 + 4
+    assert "ReusedSubquery" in twice._jdf.queryExecution().executedPlan().toString()
