@@ -4,7 +4,8 @@ The reference (`/root/reference/src/main.rs`) is a single-file Rust CLI:
 CSV scan → schema resolve → Parquet sink. Here the same surface is one
 declarative Spark plan: ``spark.read.csv`` → ``df.write.parquet`` —
 embarrassingly parallel, no shuffle anywhere (SURVEY §3 "Spark
-lifecycle").
+lifecycle"). Every other input format goes through the same front
+(``convert.convert_input``).
 """
 
 from csv2parquet_spark.converter.convert import convert, ConvertOptions, write_parquet

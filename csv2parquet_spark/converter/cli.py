@@ -14,7 +14,11 @@ import argparse
 import os
 import sys
 
-from csv2parquet_spark.converter.convert import ConvertOptions, convert
+from csv2parquet_spark.converter.convert import (
+    ConvertOptions,
+    convert_input,
+    input_format,
+)
 
 
 def _bool(v: str) -> bool:
@@ -81,10 +85,10 @@ def build_parser() -> argparse.ArgumentParser:
         default="FAILFAST",
     )
     # Engine extension: input format. "auto" keys off the extension
-    # (.jsonl/.ndjson → JSONL; .json → multi-line JSON documents/arrays;
-    # .xml → Spark 4's native XML source; .orc → ORC; .parquet → Parquet
-    # recompress/re-encode rewrite; everything else CSV); the reference
-    # grammar is CSV-only.
+    # (convert.input_format: .jsonl/.ndjson → JSONL; .json → multi-line
+    # JSON documents/arrays; .xml → Spark 4's native XML source; .orc →
+    # ORC; .parquet → Parquet recompress/re-encode rewrite; everything
+    # else CSV); the reference grammar is CSV-only.
     p.add_argument(
         "--format",
         choices=["auto", "csv", "jsonl", "json", "xml", "orc", "parquet"],
@@ -199,53 +203,17 @@ def main(argv: list[str] | None = None) -> int:
             file=sys.stderr,
         )
         return 0
-    fmt = args.format
-    if fmt == "auto":
-        # Strip transparent-compression suffixes first: Spark's text
-        # sources decompress .gz/.bz2/.deflate on read (pure-Java Hadoop
-        # codecs), so `docs.jsonl.gz` must route as jsonl, not fall
-        # through to the csv default with the real extension hidden
-        # behind `.gz`. .xz has no Hadoop codec and .zst needs native
-        # libhadoop (absent from pip pyspark) — reading those produces a
-        # baffling FAILED_READ_FILE mid-job, so refuse them up front.
-        name = args.csv.lower()
-        for czip in (".xz", ".zst"):
-            if name.endswith(czip):
-                print(
-                    f"error: {czip} input is not supported (no usable "
-                    "Hadoop codec in this Spark build) — recompress as "
-                    ".gz or .bz2",
-                    file=sys.stderr,
-                )
-                return 2
-        for czip in (".gz", ".bz2", ".deflate"):
-            if name.endswith(czip):
-                name = name[: -len(czip)]
-                break
-        ext = name.rsplit(".", 1)[-1]
-        fmt = {"jsonl": "jsonl", "ndjson": "jsonl", "json": "json",
-               "xml": "xml", "orc": "orc", "parquet": "parquet"}.get(ext, "csv")
+    try:
+        fmt = input_format(args.csv) if args.format == "auto" else args.format
+    except ValueError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return 2
     from csv2parquet_spark.session import get_spark
 
-    spark = get_spark("csv2parquet-cli")
-    if fmt == "jsonl":
-        from csv2parquet_spark.converter.jsonl import convert_jsonl
-
-        convert_jsonl(spark, args.csv, args.parquet, opts)
-    elif fmt == "json":
-        from csv2parquet_spark.converter.jsonl import convert_json
-
-        convert_json(spark, args.csv, args.parquet, opts)
-    elif fmt == "xml":
-        from csv2parquet_spark.converter.xmlsrc import convert_xml
-
-        convert_xml(spark, args.csv, args.parquet, opts, row_tag=args.xml_row_tag)
-    elif fmt in ("orc", "parquet"):
-        from csv2parquet_spark.converter.formats import convert_columnar
-
-        convert_columnar(spark, args.csv, args.parquet, opts, fmt)
-    else:
-        convert(spark, args.csv, args.parquet, opts)
+    convert_input(
+        get_spark("csv2parquet-cli"), fmt, args.csv, args.parquet, opts,
+        row_tag=args.xml_row_tag,
+    )
     return 0
 
 

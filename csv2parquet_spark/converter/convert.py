@@ -10,10 +10,15 @@ Reference behavior being matched (`/root/reference/src/main.rs`):
   * --dry/--print-schema: banner "Schema:" on stderr, JSON on stdout
     (main.rs:161-168)
 
+One front for every input format (:func:`convert_input`): a format
+supplies only its schema inference and its frozen-schema scan; the
+schema-file load, the ``max_read_records=0`` → all-Utf8 rule, the
+``Schema:`` banner and the parquet write run here, once.
+
 Scale design: the plan is scan→project→write, narrow-only — no shuffle.
 ``single_file=True`` gives byte-level CLI parity (one output file via
-coalesce(1) + rename); the default keeps one part-file per input split,
-which is the 100 TB path (SURVEY §7 "hard parts").
+repartition(1) + rename); ``single_file=False`` keeps one part-file per
+input split, which is the 100 TB path (SURVEY §7 "hard parts").
 """
 
 from __future__ import annotations
@@ -23,7 +28,8 @@ import os
 import shutil
 import sys
 import tempfile
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -157,39 +163,109 @@ def _tuned_splits(spark: SparkSession, csv_path: str):
     return conf_override(spark.conf, pins)
 
 
-def _resolve_schema(
-    spark: SparkSession, csv_path: str, opts: ConvertOptions, multiline: bool
-) -> T.StructType:
-    """Schema resolution, three modes (SURVEY §1.2 / main.rs:126-159).
-    ``multiline`` is the file's :func:`_effective_multiline`."""
-    if opts.schema_file:
-        with open(opts.schema_file) as f:
-            return arrow_json_to_struct(f.read())
-    with _tuned_splits(spark, csv_path):
-        raw = spark.read.options(
+def _csv_source(spark: SparkSession, csv_path: str, opts: ConvertOptions):
+    """The reference's own format (SURVEY §1.2 / main.rs:126-159): the
+    arrow-lattice inference and the FAILFAST scan share one reader and
+    one :func:`_effective_multiline` sniff per conversion."""
+    multiline = _effective_multiline(csv_path, opts)
+
+    def reader(**parse):
+        return spark.read.options(
             header=opts.header,
             sep=opts.delimiter,
             multiLine=multiline,
-            escape='"',
-        ).csv(csv_path)
-        return infer_schema(raw, opts.max_read_records)
+            escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
+            **parse,
+        )
+
+    def infer() -> T.StructType:
+        with _tuned_splits(spark, csv_path):
+            return infer_schema(reader().csv(csv_path), opts.max_read_records)
+
+    def scan(schema: T.StructType) -> DataFrame:
+        return reader(
+            mode=opts.parse_mode,
+            timestampFormat="yyyy-MM-dd[[ ]['T']HH:mm:ss]",
+        ).schema(schema).csv(csv_path)
+
+    return infer, scan
+
+
+#: ``--format auto``: input extension → format; anything else is CSV.
+_EXT_FORMAT = {"jsonl": "jsonl", "ndjson": "jsonl", "json": "json",
+               "xml": "xml", "orc": "orc", "parquet": "parquet"}
+
+
+def input_format(path: str) -> str:
+    """The format ``--format auto`` picks for ``path``, by extension.
+
+    Transparent-compression suffixes are stripped first: Spark's text
+    sources decompress .gz/.bz2/.deflate on read (pure-Java Hadoop
+    codecs), so ``docs.jsonl.gz`` routes as jsonl instead of falling
+    through to the csv default. .xz has no Hadoop codec and .zst needs
+    native libhadoop (absent from pip pyspark) — reading those fails
+    mid-job with a baffling FAILED_READ_FILE, so they raise ValueError
+    up front."""
+    name = path.lower()
+    for czip in (".xz", ".zst"):
+        if name.endswith(czip):
+            raise ValueError(
+                f"{czip} input is not supported (no usable Hadoop codec in "
+                "this Spark build) — recompress as .gz or .bz2"
+            )
+    for czip in (".gz", ".bz2", ".deflate"):
+        if name.endswith(czip):
+            name = name[: -len(czip)]
+            break
+    return _EXT_FORMAT.get(name.rsplit(".", 1)[-1], "csv")
+
+
+def _resolve(
+    spark: SparkSession, fmt: str, path: str, opts: ConvertOptions, row_tag: str
+):
+    """Schema resolution, the same three modes for every format (SURVEY
+    §1.2 / main.rs:126-159): an explicit schema file, else the format's
+    inference, where ``max_read_records=0`` keeps only the field names
+    (all Utf8). Returns the schema and the format's frozen-schema scan."""
+    from csv2parquet_spark.converter.formats import columnar_source
+    from csv2parquet_spark.converter.jsonl import json_source, jsonl_source
+    from csv2parquet_spark.converter.xmlsrc import xml_source
+
+    sources = {
+        "csv": _csv_source,
+        "jsonl": jsonl_source,
+        "json": json_source,
+        "xml": partial(xml_source, row_tag=row_tag),
+        "orc": partial(columnar_source, fmt="orc"),
+        "parquet": partial(columnar_source, fmt="parquet"),
+    }
+    infer, scan = sources[fmt](spark, path, opts)
+    if opts.schema_file:
+        with open(opts.schema_file) as f:
+            return arrow_json_to_struct(f.read()), scan
+    schema = infer()
+    if opts.max_read_records == 0:
+        schema = T.StructType([T.StructField(f.name, T.StringType()) for f in schema])
+    return schema, scan
+
+
+def read_input(
+    spark: SparkSession,
+    fmt: str,
+    path: str,
+    opts: ConvertOptions | None = None,
+    row_tag: str = "row",
+) -> DataFrame:
+    """O1: scan ``path`` as ``fmt`` with the resolved, frozen schema —
+    never inference at read time."""
+    schema, scan = _resolve(spark, fmt, path, opts or ConvertOptions(), row_tag)
+    return scan(schema)
 
 
 def read_csv(spark: SparkSession, csv_path: str, opts: ConvertOptions) -> DataFrame:
     """O1: CSV scan with the resolved, frozen schema; FAILFAST like the
     reference's first-error abort (main.rs:253)."""
-    multiline = _effective_multiline(csv_path, opts)
-    schema = _resolve_schema(spark, csv_path, opts, multiline)
-    reader = spark.read.options(
-        header=opts.header,
-        sep=opts.delimiter,
-        mode=opts.parse_mode,
-        multiLine=multiline,
-        escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
-        timestampFormat="yyyy-MM-dd[[ ]['T']HH:mm:ss]",
-        enforceSchema=True,
-    ).schema(schema)
-    return reader.csv(csv_path)
+    return read_input(spark, "csv", csv_path, opts)
 
 
 def _writer_conf(opts: ConvertOptions) -> dict[str, str]:
@@ -261,6 +337,34 @@ def _writer_conf(opts: ConvertOptions) -> dict[str, str]:
     return {k: v for k, v in wanted.items() if v is not None}
 
 
+def convert_input(
+    spark: SparkSession,
+    fmt: str,
+    in_path: str,
+    parquet_path: str,
+    opts: ConvertOptions | None = None,
+    row_tag: str = "row",
+    out=None,
+    err=None,
+) -> T.StructType | None:
+    """The converter's one front for every input format (``fmt`` is one
+    of the ``--format`` names, see :func:`input_format`): resolve the
+    schema, print it for --dry/--print-schema, write the parquet.
+
+    Returns the resolved schema (None only on unreachable paths).
+    """
+    opts = opts or ConvertOptions()
+    schema, scan = _resolve(spark, fmt, in_path, opts, row_tag)
+    if opts.print_schema or opts.dry:
+        # main.rs:161-168: banner on stderr, JSON on stdout.
+        print("Schema:", file=err)
+        print(struct_to_arrow_json(schema), file=out)
+        if opts.dry:
+            return schema
+    write_parquet(spark, scan(schema), in_path, parquet_path, opts)
+    return schema
+
+
 def convert(
     spark: SparkSession,
     csv_path: str,
@@ -269,41 +373,15 @@ def convert(
     out=sys.stdout,
     err=sys.stderr,
 ) -> T.StructType | None:
-    """The reference's whole program as one function (SURVEY §3).
-
-    Returns the resolved schema (None only on unreachable paths).
-    """
-    opts = opts or ConvertOptions()
-    multiline = _effective_multiline(csv_path, opts)
-    schema = _resolve_schema(spark, csv_path, opts, multiline)
-
-    if opts.print_schema or opts.dry:
-        # main.rs:161-168: banner on stderr, JSON on stdout.
-        print("Schema:", file=err)
-        print(struct_to_arrow_json(schema), file=out)
-        if opts.dry:
-            return schema
-
-    df = spark.read.options(
-        header=opts.header,
-        sep=opts.delimiter,
-        mode=opts.parse_mode,
-        multiLine=multiline,
-        escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
-        timestampFormat="yyyy-MM-dd[[ ]['T']HH:mm:ss]",
-    ).schema(schema).csv(csv_path)
-
-    write_parquet(spark, df, csv_path, parquet_path, opts)
-    return schema
+    """The reference's whole program as one function (SURVEY §3)."""
+    return convert_input(spark, "csv", csv_path, parquet_path, opts, out=out, err=err)
 
 
 def _clustered(df: DataFrame, opts: ConvertOptions) -> DataFrame:
-    """Apply the sort_by / zorder_by output clustering (no-op without
-    either). Validates the named columns against the resolved schema so
-    a typo fails before the job runs, not as an analysis error mid-write.
+    """Apply the sort_by / zorder_by output clustering. Validates the
+    named columns against the resolved schema so a typo fails before
+    the job runs, not as an analysis error mid-write.
     """
-    if not (opts.sort_by or opts.zorder_by):
-        return df
     if opts.sort_by and opts.zorder_by:
         raise ValueError("sort_by and zorder_by are mutually exclusive")
     cols = [opts.sort_by] if opts.sort_by else list(opts.zorder_by or [])
@@ -346,7 +424,9 @@ def write_parquet(
     parquet_path: str,
     opts: ConvertOptions,
 ) -> None:
-    """W1-W9 parquet sink shared by every source format (CSV, JSONL)."""
+    """W1-W9 parquet sink shared by every source format. The layout
+    (hive partitions, clustering, or neither) picks only the frame and
+    the writer; every writer option and post-write step applies to all."""
     if opts.partition_by:
         if opts.sort_by or opts.zorder_by:
             raise ValueError(
@@ -361,29 +441,18 @@ def write_parquet(
             df.repartition(*[F.col(c) for c in opts.partition_by])
             .write.partitionBy(*opts.partition_by)
         )
-        if opts.compression:
-            if opts.compression not in _CODECS:
-                raise ValueError(f"unknown codec {opts.compression!r}")
-            writer = writer.option("compression", opts.compression)
-        hadoop = spark.sparkContext._jsc.hadoopConfiguration()
-        with conf_override(hadoop, _writer_conf(opts)), _tuned_splits(spark, src_path):
-            writer.mode("overwrite").parquet(parquet_path)
-        _verify_statistics_dropped(parquet_path, opts)
-        _apply_created_by(parquet_path, opts)
-        return
-    df = _clustered(df, opts)
-    if opts.sort_by or opts.zorder_by:
-        # _clustered already produced the target partitioning (1 sorted
+    elif opts.sort_by or opts.zorder_by:
+        # _clustered already produces the target partitioning (1 sorted
         # partition for single-file; range-partitioned otherwise) — a
         # further repartition(1) would destroy the sort.
-        writer = df.write
+        writer = _clustered(df, opts).write
     else:
         # repartition(1), NOT coalesce(1): coalesce propagates up the
         # plan and collapses the source *parse* to one task; repartition
         # inserts an exchange so the read stays parallel and only the
         # final parquet encode is single-task (the one-file contract
         # forces that much).
-        writer = df.repartition(1).write if opts.single_file else df.write
+        writer = (df.repartition(1) if opts.single_file else df).write
     if opts.compression:
         if opts.compression not in _CODECS:
             raise ValueError(f"unknown codec {opts.compression!r}")
@@ -395,12 +464,18 @@ def write_parquet(
         writer = writer.option("parquet.block.size", str(opts.max_row_group_size * 128))
     for col in opts.bloom_filter_columns or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
+    writer = writer.mode("overwrite")
 
     # Split tuning must be live at ACTION time (FilePartition sizing
     # reads the session conf when the scan is planned for execution).
     hadoop = spark.sparkContext._jsc.hadoopConfiguration()
     with conf_override(hadoop, _writer_conf(opts)), _tuned_splits(spark, src_path):
-        _run_write(spark, writer, opts, parquet_path)
+        if opts.single_file and not opts.partition_by:
+            write_single_file(
+                writer.format("parquet"), parquet_path, "part-*.parquet"
+            )
+        else:
+            writer.parquet(parquet_path)
     _verify_statistics_dropped(parquet_path, opts)
     _apply_created_by(parquet_path, opts)
 
@@ -488,14 +563,3 @@ def write_single_file(writer, out_path: str, part_glob: str) -> None:
         shutil.move(parts[0], out_path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _run_write(spark, writer, opts: ConvertOptions, parquet_path: str) -> None:
-    if opts.single_file:
-        write_single_file(
-            writer.mode("overwrite").format("parquet"),
-            parquet_path,
-            "part-*.parquet",
-        )
-    else:
-        writer.mode("overwrite").parquet(parquet_path)

@@ -5,49 +5,31 @@ of this engine also gets the adjacent conversions a data-pipeline needs,
 each the same narrow-only scan→write plan (no shuffle, embarrassingly
 parallel at any scale):
 
-* JSONL → Parquet (``jsonl_to_parquet``) — schema inference or explicit
-  DDL, fail-fast like the CSV path.
+* ORC / Parquet → Parquet (``convert_columnar``) — self-describing
+  inputs through the converter front (``convert.convert_input``).
 * Parquet → CSV (``parquet_to_csv``) — the reverse trip; RFC-4180
   quoting, header on by default to mirror the CSV dialect defaults.
 * Parquet/CSV → ORC (``to_orc``) — Spark's built-in columnar
   alternative sink (no extra packages needed).
 
-All sinks accept ``single_file`` for CLI-style one-file output via the
-same coalesce(1)+rename trick as the main converter; default False
-(the multi-part 100 TB path).
+The two sinks accept ``single_file`` for one-file output: coalesce(1),
+then the converter's ``write_single_file`` rename. (The main converter
+uses repartition(1) instead, so its CSV parse stays parallel.) Default
+False (the multi-part 100 TB path).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from csv2parquet_spark.converter.convert import (
-    write_single_file as _write_single_file,
+    ConvertOptions,
+    convert_input,
+    read_csv,
 )
-
-
-def jsonl_to_parquet(
-    spark: SparkSession,
-    jsonl_path: str,
-    parquet_path: str,
-    schema: str | None = None,
-    single_file: bool = False,
-) -> DataFrame:
-    """Newline-delimited JSON → Parquet. Schema: explicit DDL string, or
-    Spark's full-pass JSON inference (mirroring the CSV default of
-    scanning all rows, SURVEY §1.2). Thin wrapper over the full-surface
-    converter (``converter/jsonl.py`` — W1-W9 knobs, sampled inference,
-    schema files, --dry) for the common call shape."""
-    from csv2parquet_spark.converter.convert import ConvertOptions, write_parquet
-    from csv2parquet_spark.converter.jsonl import read_jsonl
-
-    opts = ConvertOptions(single_file=single_file)
-    if schema:
-        df = spark.read.option("mode", "FAILFAST").schema(schema).json(jsonl_path)
-    else:
-        df = read_jsonl(spark, jsonl_path, opts)
-    write_parquet(spark, df, jsonl_path, parquet_path, opts)
-    return df
+from csv2parquet_spark.converter.convert import write_single_file as _write_single_file
 
 
 def parquet_to_csv(
@@ -92,8 +74,6 @@ def to_orc(
         # inferSchema/PERMISSIVE read silently nulled malformed cells
         # and produced a DIFFERENT schema than convert() for the same
         # file (review r8).
-        from csv2parquet_spark.converter.convert import ConvertOptions, read_csv
-
         df = read_csv(spark, in_path, ConvertOptions())
     else:
         raise ValueError(f"unsupported input format {in_format!r}")
@@ -107,6 +87,26 @@ def to_orc(
     return df
 
 
+def columnar_source(
+    spark: SparkSession, in_path: str, opts: ConvertOptions, fmt: str = "orc"
+):
+    """Self-describing columnar input (ORC, or Parquet itself) for the
+    converter front: the footer carries the schema, so "inference" is a
+    metadata read and ``max_read_records`` matters only at 0. A schema
+    file, or the all-Utf8 rule, reaches the data as casts."""
+    df = spark.read.format(fmt).load(in_path)
+
+    def scan(schema: T.StructType) -> DataFrame:
+        if schema == df.schema:
+            return df
+        return df.select([
+            F.col("`" + f.name.replace("`", "``") + "`").cast(f.dataType).alias(f.name)
+            for f in schema
+        ])
+
+    return (lambda: df.schema), scan
+
+
 def convert_columnar(
     spark: SparkSession,
     in_path: str,
@@ -115,30 +115,13 @@ def convert_columnar(
     fmt: str = "orc",
     out=None,
     err=None,
-) -> None:
-    """Self-describing columnar input (ORC, or Parquet itself) through
-    the FULL converter surface — W1-W9 writer knobs, --dry /
-    --print-schema banner contract, single-file output.
-
-    No inference pass is needed (the footer carries the schema), so
-    --max-read-records is ignored. Parquet→Parquet is the classic
-    recompress/re-encode maintenance rewrite (e.g. snappy→zstd
-    migration): a narrow scan→write plan, embarrassingly parallel —
-    at 100 TB it runs file-parallel with zero shuffles, and column
-    pruning/predicate pushdown don't apply (full fidelity rewrite).
+) -> T.StructType | None:
+    """ORC/Parquet → Parquet through the FULL converter surface — W1-W9
+    writer knobs, --dry / --print-schema banner contract, single-file
+    output. Parquet→Parquet is the classic recompress/re-encode
+    maintenance rewrite (e.g. snappy→zstd migration): a narrow
+    scan→write plan, embarrassingly parallel — at 100 TB it runs
+    file-parallel with zero shuffles, and column pruning/predicate
+    pushdown don't apply (full fidelity rewrite).
     """
-    import sys
-
-    from csv2parquet_spark.converter.convert import ConvertOptions, write_parquet
-    from csv2parquet_spark.converter.schema_json import struct_to_arrow_json
-
-    opts = opts or ConvertOptions()
-    out = out if out is not None else sys.stdout
-    err = err if err is not None else sys.stderr
-    df = spark.read.orc(in_path) if fmt == "orc" else spark.read.parquet(in_path)
-    if opts.print_schema or opts.dry:
-        print("Schema:", file=err)
-        print(struct_to_arrow_json(df.schema), file=out)
-        if opts.dry:
-            return
-    write_parquet(spark, df, in_path, parquet_path, opts)
+    return convert_input(spark, fmt, in_path, parquet_path, opts, out=out, err=err)

@@ -33,7 +33,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from csv2parquet_spark.converter.convert import ConvertOptions, convert
+from csv2parquet_spark.converter.convert import (
+    ConvertOptions,
+    convert_input,
+    input_format,
+)
 
 
 @dataclass
@@ -145,6 +149,10 @@ def _clear_dir(path: str) -> None:
     os.makedirs(path)
 
 
+def _stem(path: str) -> str:
+    return os.path.splitext(os.path.basename(path))[0]
+
+
 def _file_key(path: str) -> str:
     st = os.stat(path)
     return f"{st.st_size}:{st.st_mtime_ns}"
@@ -163,10 +171,14 @@ def convert_incremental(
     ``output_dir/batch=<n>/<stem>.parquet``; record conversions in the
     manifest at ``manifest_path``. Returns what happened.
 
-    Inputs convert through the ordinary :func:`convert` path (schema
-    inference / schema file / all write knobs in ``opts`` apply), in
-    multi-part mode per file so each conversion parallelizes across the
-    file's splits. Writers on one dataset are serialized by
+    Each input converts through the converter front as the format its
+    extension names (:func:`input_format`, the CLI's ``--format auto``
+    rule; schema inference / schema file / all write knobs in ``opts``
+    apply), in multi-part mode per file so each conversion parallelizes
+    across the file's splits. Two inputs with one stem (``a.csv`` and
+    ``a.jsonl``) would write the same ``<stem>.parquet``, so they raise
+    ValueError before anything is written. Writers on one dataset are
+    serialized by
     :func:`_writer_lock` — a concurrent run blocks up to
     ``lock_timeout`` seconds, then raises.
     """
@@ -194,6 +206,14 @@ def _convert_incremental_locked(
         if os.path.isfile(os.path.join(input_dir, f))
         and f.lower().endswith(extensions)
     )
+    by_stem: dict[str, str] = {}
+    for p in inputs:
+        other = by_stem.setdefault(_stem(p), p)
+        if other != p:
+            raise ValueError(
+                f"inputs {other!r} and {p!r} share the stem {_stem(p)!r}; "
+                "both would write the same <stem>.parquet — rename one"
+            )
     todo = [p for p in inputs if seen.get(p) != _file_key(p)]
     skipped = len(inputs) - len(todo)
     if not todo:
@@ -212,8 +232,8 @@ def _convert_incremental_locked(
     multi = replace(opts, single_file=False, print_schema=False, dry=False)
     converted: list[str] = []
     for p in todo:
-        stem = os.path.splitext(os.path.basename(p))[0]
-        convert(spark, p, os.path.join(batch_dir, f"{stem}.parquet"), multi)
+        out = os.path.join(batch_dir, f"{_stem(p)}.parquet")
+        convert_input(spark, input_format(p), p, out, multi)
         converted.append(p)
 
     # Commit only after every file in the batch landed (see module note

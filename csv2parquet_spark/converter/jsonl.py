@@ -29,11 +29,8 @@ from pyspark.sql import types as T
 
 from csv2parquet_spark.converter.convert import (
     ConvertOptions,
-    write_parquet,
-)
-from csv2parquet_spark.converter.schema_json import (
-    arrow_json_to_struct,
-    struct_to_arrow_json,
+    convert_input,
+    read_input,
 )
 
 
@@ -43,31 +40,27 @@ from csv2parquet_spark.converter.schema_json import (
 _NAME_SAMPLE_LINES = 1000
 
 
-def _infer_jsonl_schema(
-    spark: SparkSession, jsonl_path: str, opts: ConvertOptions
-) -> T.StructType:
-    if opts.schema_file:
-        with open(opts.schema_file) as f:
-            return arrow_json_to_struct(f.read())
-    if opts.max_read_records == 0:
-        # CSV-parity contract: 0 sampled records → all columns string.
-        # Field NAMES still need a look at the data (JSON has no header
-        # line) — but "0 = skip inference" must not pay a corpus scan,
-        # so names come from the first _NAME_SAMPLE_LINES lines only
-        # (limit() short-circuits each split's read). Caveat, documented:
-        # a field that first appears beyond the sample window is dropped;
-        # pass a schema file or max_read_records>0 for full coverage.
-        sample = spark.read.text(jsonl_path).limit(_NAME_SAMPLE_LINES)
-        named = spark.read.json(sample.rdd.map(lambda r: r.value)).schema
-        return T.StructType([T.StructField(f.name, T.StringType()) for f in named])
-    if opts.max_read_records is not None:
+def jsonl_source(spark: SparkSession, jsonl_path: str, opts: ConvertOptions):
+    """JSONL inference and frozen-schema scan for the converter front."""
+
+    def infer() -> T.StructType:
+        if opts.max_read_records is None:
+            return spark.read.json(jsonl_path).schema
         # Cap inference: parse only the first n lines. limit() before
         # the JSON parse prunes the text scan to the first file splits.
-        sample = spark.read.text(jsonl_path).limit(opts.max_read_records)
-        return (
-            spark.read.json(sample.rdd.map(lambda r: r.value)).schema
-        )
-    return spark.read.json(jsonl_path).schema
+        # max_read_records=0 needs only field NAMES (the front makes
+        # every type Utf8), from the first _NAME_SAMPLE_LINES lines.
+        # Caveat, documented: a field that first appears beyond that
+        # window is dropped; pass a schema file or max_read_records>0
+        # for full coverage.
+        n = opts.max_read_records or _NAME_SAMPLE_LINES
+        sample = spark.read.text(jsonl_path).limit(n)
+        return spark.read.json(sample.rdd.map(lambda r: r.value)).schema
+
+    def scan(schema: T.StructType) -> DataFrame:
+        return spark.read.options(mode=opts.parse_mode).schema(schema).json(jsonl_path)
+
+    return infer, scan
 
 
 def read_jsonl(
@@ -75,9 +68,7 @@ def read_jsonl(
 ) -> DataFrame:
     """JSONL scan with a frozen, pre-resolved schema (never inference at
     read time — same discipline as the CSV path: O1/O2 separation)."""
-    opts = opts or ConvertOptions()
-    schema = _infer_jsonl_schema(spark, jsonl_path, opts)
-    return spark.read.options(mode=opts.parse_mode).schema(schema).json(jsonl_path)
+    return read_input(spark, "jsonl", jsonl_path, opts)
 
 
 def convert_jsonl(
@@ -89,37 +80,27 @@ def convert_jsonl(
     err=sys.stderr,
 ) -> T.StructType | None:
     """JSONL→Parquet with the converter's full option surface."""
-    opts = opts or ConvertOptions()
-    schema = _infer_jsonl_schema(spark, jsonl_path, opts)
-
-    if opts.print_schema or opts.dry:
-        print("Schema:", file=err)
-        print(struct_to_arrow_json(schema), file=out)
-        if opts.dry:
-            return schema
-
-    df = spark.read.options(mode=opts.parse_mode).schema(schema).json(jsonl_path)
-    write_parquet(spark, df, jsonl_path, parquet_path, opts)
-    return schema
+    return convert_input(spark, "jsonl", jsonl_path, parquet_path, opts, out=out, err=err)
 
 
-def _infer_json_schema(
-    spark: SparkSession, json_path: str, opts: ConvertOptions
-) -> T.StructType:
-    if opts.schema_file:
-        with open(opts.schema_file) as f:
-            return arrow_json_to_struct(f.read())
-    inferred = spark.read.option("multiLine", "true").json(json_path).schema
-    if opts.max_read_records == 0:
-        # CSV-parity contract: 0 sampled records → all columns string.
-        # Unlike JSONL there is no line-sampled names pass: a multi-line
-        # document is not line-splittable, so field names come from the
-        # same document parse inference does (no extra corpus cost — the
-        # reader must parse whole documents either way).
-        return T.StructType(
-            [T.StructField(f.name, T.StringType()) for f in inferred]
+def json_source(spark: SparkSession, json_path: str, opts: ConvertOptions):
+    """Multi-line JSON inference and frozen-schema scan. Unlike JSONL,
+    ``max_read_records=0`` has no line-sampled names pass: a multi-line
+    document is not line-splittable, so field names come from the same
+    document parse inference does (no extra corpus cost — the reader
+    must parse whole documents either way)."""
+
+    def infer() -> T.StructType:
+        return spark.read.option("multiLine", "true").json(json_path).schema
+
+    def scan(schema: T.StructType) -> DataFrame:
+        return (
+            spark.read.options(mode=opts.parse_mode, multiLine="true")
+            .schema(schema)
+            .json(json_path)
         )
-    return inferred
+
+    return infer, scan
 
 
 def convert_json(
@@ -150,19 +131,4 @@ def convert_json(
     full pass, as the reference's default inference is for CSV. For
     100 TB corpora use JSONL, which fans out per split.
     """
-    opts = opts or ConvertOptions()
-    schema = _infer_json_schema(spark, json_path, opts)
-
-    if opts.print_schema or opts.dry:
-        print("Schema:", file=err)
-        print(struct_to_arrow_json(schema), file=out)
-        if opts.dry:
-            return schema
-
-    df = (
-        spark.read.options(mode=opts.parse_mode, multiLine="true")
-        .schema(schema)
-        .json(json_path)
-    )
-    write_parquet(spark, df, json_path, parquet_path, opts)
-    return schema
+    return convert_input(spark, "json", json_path, parquet_path, opts, out=out, err=err)

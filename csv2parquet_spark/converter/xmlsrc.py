@@ -13,64 +13,60 @@ which is document-at-a-time).
 from __future__ import annotations
 
 import sys
+import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from csv2parquet_spark.converter.convert import ConvertOptions, write_parquet
-from csv2parquet_spark.converter.schema_json import (
-    arrow_json_to_struct,
-    struct_to_arrow_json,
-)
+from csv2parquet_spark.converter.convert import ConvertOptions, convert_input
 
 
-def _infer_xml_schema(
-    spark: SparkSession, xml_path: str, opts: ConvertOptions, row_tag: str
-) -> T.StructType:
-    if opts.schema_file:
-        with open(opts.schema_file) as f:
-            return arrow_json_to_struct(f.read())
-    reader = spark.read.option("rowTag", row_tag)
-    if opts.max_read_records is not None and opts.max_read_records >= 0:
-        # For XML the record cap is EFFECTIVELY BINARY, documented as
-        # such: the native inference knob is samplingRatio (a fraction,
-        # not a record count), and mapping count→ratio needs a total
-        # the engine doesn't have pre-parse. Any positive cap therefore
-        # means "sampled inference at ratio 0.1" — PROPORTIONAL cost,
-        # not an absolute bound, and (as with Spark's own sampled
-        # JSON/CSV inference) a field that appears only in unsampled
-        # records is absent from the schema and silently dropped from
-        # the converted output; pass a schema file for full coverage.
-        # None = full-pass inference. 0 (all-strings parity mode) ALSO
-        # samples: it only needs column NAMES, and a full-pass parse
-        # purely to discover names made "skip inference" the most
-        # expensive path on a multi-GB corpus (review r8) — the
-        # missed-rare-field tradeoff above applies to names the same
-        # documented way.
-        reader = reader.option("samplingRatio", "0.1")
-    if opts.max_read_records is not None and opts.max_read_records >= 0:
-        # The data loss above is otherwise SILENT at runtime (ADVICE
-        # r8): make the sampled name/type discovery loud so users
-        # converting sparse-field corpora know to pass a schema file.
-        import warnings
+def xml_source(
+    spark: SparkSession, xml_path: str, opts: ConvertOptions, row_tag: str = "row"
+):
+    """XML inference and frozen-schema scan for the converter front."""
 
-        warnings.warn(
-            "XML schema inference with --max-read-records samples at "
-            "ratio 0.1; fields present only in unsampled records are "
-            "dropped from the output. Pass --schema-file for full "
-            "coverage.",
-            UserWarning,
-            stacklevel=2,
+    def infer() -> T.StructType:
+        reader = spark.read.option("rowTag", row_tag)
+        if opts.max_read_records is not None and opts.max_read_records >= 0:
+            # For XML the record cap is EFFECTIVELY BINARY, documented as
+            # such: the native inference knob is samplingRatio (a
+            # fraction, not a record count), and mapping count→ratio needs
+            # a total the engine doesn't have pre-parse. Any positive cap
+            # therefore means "sampled inference at ratio 0.1" —
+            # PROPORTIONAL cost, not an absolute bound, and (as with
+            # Spark's own sampled JSON/CSV inference) a field that appears
+            # only in unsampled records is absent from the schema and
+            # silently dropped from the converted output; pass a schema
+            # file for full coverage. None = full-pass inference. 0
+            # (all-strings parity mode) ALSO samples: it only needs column
+            # NAMES, and a full-pass parse purely to discover names made
+            # "skip inference" the most expensive path on a multi-GB
+            # corpus — the missed-rare-field tradeoff above applies to
+            # names the same documented way.
+            reader = reader.option("samplingRatio", "0.1")
+            # The data loss above is otherwise SILENT at runtime: make
+            # the sampled name/type discovery loud so users converting
+            # sparse-field corpora know to pass a schema file.
+            warnings.warn(
+                "XML schema inference with --max-read-records samples at "
+                "ratio 0.1; fields present only in unsampled records are "
+                "dropped from the output. Pass --schema-file for full "
+                "coverage.",
+                UserWarning,
+                stacklevel=2,
+            )
+        return reader.xml(xml_path).schema
+
+    def scan(schema: T.StructType) -> DataFrame:
+        return (
+            spark.read.option("rowTag", row_tag)
+            .option("mode", opts.parse_mode)
+            .schema(schema)
+            .xml(xml_path)
         )
-    inferred = reader.xml(xml_path).schema
-    if opts.max_read_records == 0:
-        # CSV-parity: 0 sampled records → all columns string; names
-        # come from the SAMPLED inference above (ratio 0.1), never a
-        # full-corpus parse.
-        return T.StructType(
-            [T.StructField(f.name, T.StringType()) for f in inferred]
-        )
-    return inferred
+
+    return infer, scan
 
 
 def convert_xml(
@@ -83,20 +79,6 @@ def convert_xml(
     err=sys.stderr,
 ) -> T.StructType | None:
     """XML→Parquet with the converter's full option surface."""
-    opts = opts or ConvertOptions()
-    schema = _infer_xml_schema(spark, xml_path, opts, row_tag)
-
-    if opts.print_schema or opts.dry:
-        print("Schema:", file=err)
-        print(struct_to_arrow_json(schema), file=out)
-        if opts.dry:
-            return schema
-
-    df = (
-        spark.read.option("rowTag", row_tag)
-        .option("mode", opts.parse_mode)
-        .schema(schema)
-        .xml(xml_path)
+    return convert_input(
+        spark, "xml", xml_path, parquet_path, opts, row_tag=row_tag, out=out, err=err
     )
-    write_parquet(spark, df, xml_path, parquet_path, opts)
-    return schema

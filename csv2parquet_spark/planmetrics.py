@@ -91,16 +91,13 @@ def executed_shuffle_metrics(
         # Subquery plans (scalar/IN-subquery expressions) hang off the
         # node's EXPRESSIONS, not children() — without this walk an
         # exchange inside a SubqueryExec is invisible to the lint, so a
-        # regression that moves work into a subquery would go unseen
-        # (ADVICE r9). ReusedSubqueryExec wraps the SAME physical
-        # subquery instance another node already owns — skip it or a
-        # reused subquery's volume double-counts nondeterministically
-        # (reuse pairing depends on dedup order).
+        # regression that moves work into a subquery would go unseen.
+        # A ReusedSubqueryExec needs no skip: it is a leaf with no
+        # subqueries of its own, so walking it adds nothing and the
+        # subquery it reuses counts once, under its owner.
         subs = node.subqueries()
         for i in range(subs.size()):
-            sub = subs.apply(i)
-            if "ReusedSubquery" not in sub.getClass().getSimpleName():
-                walk(sub)
+            walk(subs.apply(i))
         if name == "AdaptiveSparkPlanExec":  # pragma: no cover - AQE off
             walk(node.executedPlan())
         if "QueryStage" in name:  # pragma: no cover - AQE off

@@ -375,9 +375,9 @@ def test_jsonl_to_parquet_roundtrip(spark, tmp_path):
     src = tmp_path / "in.jsonl"
     src.write_text('{"i": 1, "s": "x"}\n{"i": 2, "s": "y"}\n')
     out = str(tmp_path / "out.parquet")
-    from csv2parquet_spark.converter.formats import jsonl_to_parquet
+    from csv2parquet_spark.converter import convert_jsonl
 
-    jsonl_to_parquet(spark, str(src), out, single_file=True)
+    convert_jsonl(spark, str(src), out, ConvertOptions(single_file=True))
     got = duckdb.sql(f"SELECT i, s FROM read_parquet('{out}') ORDER BY i").fetchall()
     assert got == [(1, "x"), (2, "y")]
 
@@ -533,18 +533,65 @@ def test_jsonl_string_mode_names_pass_is_bounded(spark, tmp_path):
     assert n == _NAME_SAMPLE_LINES + n_extra
 
 
-def test_cli_format_auto_leaves_plain_json_to_csv(tmp_path):
-    """--format auto routes only .jsonl/.ndjson to the JSONL reader; a
-    plain .json file (usually a multi-line document/array) needs an
-    explicit --format jsonl."""
-    from csv2parquet_spark.converter.cli import build_parser
+@pytest.mark.parametrize(
+    "path, want",
+    [
+        ("x.jsonl", "jsonl"), ("x.ndjson", "jsonl"), ("x.json", "json"),
+        ("x.xml", "xml"), ("x.orc", "orc"), ("x.parquet", "parquet"),
+        ("x.csv", "csv"), ("x.tsv", "csv"), ("x.jsonl.gz", "jsonl"),
+        ("x.csv.bz2", "csv"), ("x.jsonl.xz", ValueError),
+        ("x.csv.zst", ValueError),
+    ],
+)
+def test_input_format_map(path, want):
+    """--format auto's extension map (the one the CLI and incremental
+    ingest both route by): compression suffixes are looked through,
+    .xz/.zst are refused, anything unknown is CSV."""
+    from csv2parquet_spark.converter.convert import input_format
 
-    args = build_parser().parse_args(["in.json", "out.parquet"])
-    assert args.format == "auto"
-    # the routing rule itself (main() would start a session; test the set)
-    for ext, want in [("jsonl", "jsonl"), ("ndjson", "jsonl"), ("json", "csv"), ("csv", "csv")]:
-        fmt = "jsonl" if ext in {"jsonl", "ndjson"} else "csv"
-        assert fmt == want
+    if want is ValueError:
+        with pytest.raises(ValueError, match="not supported"):
+            input_format(path)
+    else:
+        assert input_format(path) == want
+
+
+def test_converter_has_one_front():
+    """Tripwire: one function prints the ``Schema:`` banner, one loads a
+    schema file (``arrow_json_to_struct``), and one module holds the
+    extension → format map (the only place the ``ndjson`` extension is
+    spelled). The per-format converters were forks of all three."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "csv2parquet_spark"
+    banner, schema_loads, ext_maps = set(), set(), set()
+
+    def visit(node, where):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, f"{where.split(':')[0]}:{child.name}")
+                continue
+            if isinstance(child, ast.Call):
+                callee = ast.unparse(child.func)
+                if callee == "print" and any(
+                    isinstance(a, ast.Constant) and a.value == "Schema:"
+                    for a in child.args
+                ):
+                    banner.add(where)
+                if callee.split(".")[-1] == "arrow_json_to_struct":
+                    schema_loads.add(where)
+            if isinstance(child, ast.Constant) and child.value == "ndjson":
+                ext_maps.add(where.split(":")[0])
+            visit(child, where)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        visit(ast.parse(path.read_text(), str(path)), rel)
+    found = {"banner": banner, "schema_file": schema_loads, "ext_map": ext_maps}
+    assert all(len(v) == 1 for v in found.values()), "; ".join(
+        f"{k}: {sorted(v)}" for k, v in found.items()
+    )
 
 
 def test_orc_and_parquet_inputs_roundtrip(spark, tmp_path, sf_dir):
@@ -583,6 +630,41 @@ def test_orc_and_parquet_inputs_roundtrip(spark, tmp_path, sf_dir):
     assert codecs <= {"ZSTD", "UNCOMPRESSED"} and "ZSTD" in codecs
 
 
+def test_columnar_input_schema_modes(spark, tmp_path, sf_dir):
+    """A self-describing input goes through the same schema front as
+    CSV: max_read_records=0 writes every column as string, and a schema
+    file selects and casts columns, instead of both being ignored."""
+    import duckdb
+
+    from csv2parquet_spark.converter.formats import convert_columnar
+
+    src = f"{sf_dir}/nation.parquet"
+    out0 = str(tmp_path / "strings.parquet")
+    convert_columnar(spark, src, out0, ConvertOptions(max_read_records=0), "parquet")
+    types = {
+        r[0]: r[1]
+        for r in duckdb.sql(f"DESCRIBE SELECT * FROM read_parquet('{out0}')").fetchall()
+    }
+    assert types == {"n_nationkey": "VARCHAR", "n_name": "VARCHAR", "n_regionkey": "VARCHAR"}
+
+    sf = tmp_path / "schema.json"
+    sf.write_text(struct_to_arrow_json(T.StructType([
+        T.StructField("n_regionkey", T.LongType()),
+        T.StructField("n_nationkey", T.StringType()),
+    ])))
+    out1 = str(tmp_path / "cast.parquet")
+    convert_columnar(spark, src, out1, ConvertOptions(schema_file=str(sf)), "parquet")
+    con = duckdb.connect()
+    got = con.execute(
+        f"SELECT * FROM read_parquet('{out1}') ORDER BY n_nationkey::INT"
+    ).fetchall()
+    want = con.execute(
+        f"SELECT n_regionkey::BIGINT, n_nationkey::VARCHAR FROM read_parquet('{src}') "
+        "ORDER BY n_nationkey"
+    ).fetchall()
+    assert got == want
+
+
 def test_bloom_filter_columns_written(spark, tmp_path):
     """--bloom-filter-columns (engine extension): the parquet output
     must carry a bloom filter for the named column. Neither pyarrow nor
@@ -617,6 +699,38 @@ def test_bloom_filter_columns_written(spark, tmp_path):
     a = duckdb.sql(f"SELECT sum(k), count(*) FROM read_parquet('{plain}')").fetchone()
     b = duckdb.sql(f"SELECT sum(k), count(*) FROM read_parquet('{bloom}')").fetchone()
     assert a == b
+
+
+def test_partitioned_write_keeps_writer_options(spark, tmp_path):
+    """partition_by picks the frame and writer only: the bloom filter
+    and the row-group cap reach every partition file, as they do for a
+    flat write (test_bloom_filter_columns_written)."""
+    import csv
+    import glob
+
+    src = tmp_path / "keys.csv"
+    with open(src, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["k", "g", "v"])
+        for i in range(100_000):
+            w.writerow([i * 2654435761 % (1 << 40), f"g{i % 2}", i])
+
+    def write(name, **extra):
+        out = str(tmp_path / name)
+        convert(spark, str(src), out, ConvertOptions(
+            partition_by=["g"], single_file=False, **extra))
+        files = glob.glob(os.path.join(out, "g=*", "*.parquet"))
+        assert len(files) == 2
+        size = sum(os.path.getsize(p) for p in files)
+        groups = sum(pq.ParquetFile(p).metadata.num_row_groups for p in files)
+        return size, groups
+
+    plain_size, plain_groups = write("plain")
+    bloom_size, _ = write("bloom", bloom_filter_columns=["k"])
+    _, capped_groups = write("capped", max_row_group_size=1000)
+    grew = bloom_size - plain_size
+    assert grew > 50_000, f"bloom footprint missing (delta={grew} bytes)"
+    assert capped_groups > plain_groups, (capped_groups, plain_groups)
 
 
 def test_convert_json_multiline_shapes(spark, tmp_path):
@@ -1007,6 +1121,46 @@ def test_incremental_manifest_corrupt_raises(spark, tmp_path):
         f.write('{"wrong": "shape"}')
     with pytest.raises(ValueError, match="expected .'files'"):
         convert_incremental(spark, str(src), str(out), manifest)
+
+
+def test_incremental_routes_by_extension(spark, tmp_path):
+    """convert_incremental converts each input as the format its
+    extension names (the CLI's --format auto map): a JSONL file lands
+    with its fields as columns, not comma-split through the CSV
+    reader."""
+    import duckdb
+
+    from csv2parquet_spark.converter.incremental import convert_incremental
+
+    src, out = tmp_path / "in", tmp_path / "out"
+    src.mkdir()
+    (src / "b.csv").write_text("k,v\n3,z\n")
+    (src / "a.jsonl").write_text('{"k": 1, "v": "x"}\n{"k": 2, "v": "y"}\n')
+    r = convert_incremental(spark, str(src), str(out), str(tmp_path / "m.json"))
+    assert r.batch == 0 and len(r.converted) == 2
+    rel = duckdb.sql(
+        f"SELECT * FROM read_parquet('{out}/batch=0/*.parquet/*.parquet', "
+        "union_by_name=true, hive_partitioning=false) ORDER BY k"
+    )
+    assert rel.columns == ["k", "v"]
+    assert rel.fetchall() == [(1, "x"), (2, "y"), (3, "z")]
+
+
+def test_incremental_refuses_stem_collision(spark, tmp_path):
+    """a.csv and a.jsonl would both write batch=n/a.parquet (the second
+    overwriting the first while the manifest records both): refuse the
+    run, naming both files, before anything is written."""
+    from csv2parquet_spark.converter.incremental import convert_incremental
+
+    src, out = tmp_path / "in", tmp_path / "out"
+    src.mkdir()
+    (src / "a.csv").write_text("k,v\n3,z\n")
+    (src / "a.jsonl").write_text('{"k": 1, "v": "x"}\n')
+    manifest = str(tmp_path / "m.json")
+    with pytest.raises(ValueError, match=r"a\.csv.*a\.jsonl"):
+        convert_incremental(spark, str(src), str(out), manifest)
+    assert not (out.exists() and any(out.iterdir()))
+    assert not os.path.exists(manifest)
 
 
 def test_incremental_ingest_duckdb_readback(spark):
