@@ -351,14 +351,16 @@ def convert_input(
     of the ``--format`` names, see :func:`input_format`): resolve the
     schema, print it for --dry/--print-schema, write the parquet.
 
-    Returns the resolved schema (None only on unreachable paths).
+    ``out``/``err`` default to the process's stdout/stderr, looked up at
+    call time. Returns the resolved schema (None only on unreachable
+    paths).
     """
     opts = opts or ConvertOptions()
     schema, scan = _resolve(spark, fmt, in_path, opts, row_tag)
     if opts.print_schema or opts.dry:
         # main.rs:161-168: banner on stderr, JSON on stdout.
-        print("Schema:", file=err)
-        print(struct_to_arrow_json(schema), file=out)
+        print("Schema:", file=err or sys.stderr)
+        print(struct_to_arrow_json(schema), file=out or sys.stdout)
         if opts.dry:
             return schema
     write_parquet(spark, scan(schema), in_path, parquet_path, opts)

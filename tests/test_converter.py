@@ -239,6 +239,30 @@ def test_dry_prints_schema_without_writing(spark, tmp, capsys):
     assert json.loads(o.getvalue())["fields"][0]["name"] == "b"
 
 
+@pytest.mark.parametrize("ext,fmt", [("csv", "auto"), ("parquet", "parquet")])
+def test_cli_dry_banner_on_stderr_schema_on_stdout(tmp_path, capsys, ext, fmt):
+    """The CLI keeps the reference's --dry contract for every format:
+    the ``Schema:`` banner alone on stderr, the JSON schema alone on
+    stdout, and no output written."""
+    import pyarrow as pa
+
+    from csv2parquet_spark.converter.cli import main
+
+    src = str(tmp_path / f"in.{ext}")
+    if ext == "csv":
+        _write(str(tmp_path), "in.csv", "a,b\n1,x\n")
+    else:
+        pq.write_table(pa.table({"a": [1], "b": ["x"]}), src)
+    out = str(tmp_path / "never.parquet")
+    capsys.readouterr()
+    assert main(["--dry", "--format", fmt, src, out]) == 0
+    captured = capsys.readouterr()
+    assert captured.err.strip() == "Schema:"
+    names = [f["name"] for f in json.loads(captured.out)["fields"]]
+    assert names == ["a", "b"]
+    assert not os.path.exists(out)
+
+
 @pytest.mark.parametrize("codec,expect", [("zstd", "ZSTD"), ("gzip", "GZIP"), ("snappy", "SNAPPY"), ("uncompressed", "UNCOMPRESSED")])
 def test_writer_compression(spark, tmp, codec, expect):
     src = _write(tmp, "typed.csv", TYPED_CSV)
