@@ -187,6 +187,13 @@ def main(argv: list[str] | None = None) -> int:
                 file=sys.stderr,
             )
             return 2
+        if args.format != "auto":
+            print(
+                "error: --incremental-manifest picks each file's format by "
+                f"its extension; --format {args.format} is not supported there",
+                file=sys.stderr,
+            )
+            return 2
         from csv2parquet_spark.converter.incremental import convert_incremental
         from csv2parquet_spark.session import get_spark
 
@@ -196,6 +203,7 @@ def main(argv: list[str] | None = None) -> int:
             args.parquet,
             args.incremental_manifest,
             opts,
+            row_tag=args.xml_row_tag,
         )
         print(
             f"batch={res.batch} converted={len(res.converted)} "

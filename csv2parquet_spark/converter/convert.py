@@ -15,6 +15,14 @@ supplies only its schema inference and its frozen-schema scan; the
 schema-file load, the ``max_read_records=0`` → all-Utf8 rule, the
 ``Schema:`` banner and the parquet write run here, once.
 
+A CSV converts in one pass when its first ``HINT_ROWS`` rows predict
+every column's type: one job scans the file as strings, casts each cell
+to its column's predicted type, checks it, and writes the parquet
+(:func:`~csv2parquet_spark.converter.inference.checked_cast`). If any
+cell breaks its prediction, that job fails and the conversion runs in
+two passes: infer the schema over the whole sample, then scan it typed
+and write. Both give the same schema and the same rows.
+
 Scale design: the plan is scan→project→write, narrow-only — no shuffle.
 ``single_file=True`` gives byte-level CLI parity (one output file via
 repartition(1) + rename); ``single_file=False`` keeps one part-file per
@@ -31,11 +39,13 @@ import tempfile
 from dataclasses import dataclass
 from functools import partial
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from csv2parquet_spark.converter.inference import infer_schema
+from csv2parquet_spark.converter.inference import checked_cast, infer_schema
 from csv2parquet_spark.converter.schema_json import (
     arrow_json_to_struct,
     struct_to_arrow_json,
@@ -163,10 +173,23 @@ def _tuned_splits(spark: SparkSession, csv_path: str):
     return conf_override(spark.conf, pins)
 
 
+#: The typed CSV scan's Date64 format: a date with an optional
+#: space- or ``T``-separated time (the inference's Date64 pattern).
+TIMESTAMP_FORMAT = "yyyy-MM-dd[[ ]['T']HH:mm:ss]"
+
+
 def _csv_source(spark: SparkSession, csv_path: str, opts: ConvertOptions):
     """The reference's own format (SURVEY §1.2 / main.rs:126-159): the
-    arrow-lattice inference and the FAILFAST scan share one reader and
-    one :func:`_effective_multiline` sniff per conversion."""
+    arrow-lattice inference, the FAILFAST scan and the one-pass checked
+    frame share one reader and one :func:`_effective_multiline` sniff
+    per conversion.
+
+    The one-pass frame is None where it cannot help or cannot be exact:
+    under --dry, with a schema file or ``max_read_records=0`` (one pass
+    already), under DROPMALFORMED (its inference reads the rows its scan
+    drops) and with ``zorder_by`` (its numeric-column check reads the
+    schema before any job, and a column empty in the hint rows reads as
+    Utf8 there)."""
     multiline = _effective_multiline(csv_path, opts)
 
     def reader(**parse):
@@ -185,10 +208,22 @@ def _csv_source(spark: SparkSession, csv_path: str, opts: ConvertOptions):
     def scan(schema: T.StructType) -> DataFrame:
         return reader(
             mode=opts.parse_mode,
-            timestampFormat="yyyy-MM-dd[[ ]['T']HH:mm:ss]",
+            timestampFormat=TIMESTAMP_FORMAT,
         ).schema(schema).csv(csv_path)
 
-    return infer, scan
+    def checked() -> DataFrame:
+        with _tuned_splits(spark, csv_path):
+            raw = reader(mode=opts.parse_mode).csv(csv_path)
+            return checked_cast(raw, opts.max_read_records)
+
+    one_pass = not (
+        opts.dry
+        or opts.schema_file
+        or opts.max_read_records == 0
+        or opts.parse_mode == "DROPMALFORMED"
+        or opts.zorder_by
+    )
+    return infer, scan, (checked if one_pass else None)
 
 
 #: ``--format auto``: input extension → format; anything else is CSV.
@@ -220,13 +255,12 @@ def input_format(path: str) -> str:
     return _EXT_FORMAT.get(name.rsplit(".", 1)[-1], "csv")
 
 
-def _resolve(
+def _source(
     spark: SparkSession, fmt: str, path: str, opts: ConvertOptions, row_tag: str
 ):
-    """Schema resolution, the same three modes for every format (SURVEY
-    §1.2 / main.rs:126-159): an explicit schema file, else the format's
-    inference, where ``max_read_records=0`` keeps only the field names
-    (all Utf8). Returns the schema and the format's frozen-schema scan."""
+    """The format's ``(infer, scan, checked)``: its schema inference, its
+    frozen-schema scan, and its one-pass checked frame (None for every
+    format but CSV, see :func:`_csv_source`)."""
     from csv2parquet_spark.converter.formats import columnar_source
     from csv2parquet_spark.converter.jsonl import json_source, jsonl_source
     from csv2parquet_spark.converter.xmlsrc import xml_source
@@ -239,14 +273,22 @@ def _resolve(
         "orc": partial(columnar_source, fmt="orc"),
         "parquet": partial(columnar_source, fmt="parquet"),
     }
-    infer, scan = sources[fmt](spark, path, opts)
+    infer, scan, *checked = sources[fmt](spark, path, opts)
+    return infer, scan, (checked[0] if checked else None)
+
+
+def _schema(infer, opts: ConvertOptions) -> T.StructType:
+    """Schema resolution, the same three modes for every format (SURVEY
+    §1.2 / main.rs:126-159): an explicit schema file, else the format's
+    inference, where ``max_read_records=0`` keeps only the field names
+    (all Utf8)."""
     if opts.schema_file:
         with open(opts.schema_file) as f:
-            return arrow_json_to_struct(f.read()), scan
+            return arrow_json_to_struct(f.read())
     schema = infer()
     if opts.max_read_records == 0:
         schema = T.StructType([T.StructField(f.name, T.StringType()) for f in schema])
-    return schema, scan
+    return schema
 
 
 def read_input(
@@ -258,8 +300,9 @@ def read_input(
 ) -> DataFrame:
     """O1: scan ``path`` as ``fmt`` with the resolved, frozen schema —
     never inference at read time."""
-    schema, scan = _resolve(spark, fmt, path, opts or ConvertOptions(), row_tag)
-    return scan(schema)
+    opts = opts or ConvertOptions()
+    infer, scan, _ = _source(spark, fmt, path, opts, row_tag)
+    return scan(_schema(infer, opts))
 
 
 def read_csv(spark: SparkSession, csv_path: str, opts: ConvertOptions) -> DataFrame:
@@ -351,20 +394,45 @@ def convert_input(
     of the ``--format`` names, see :func:`input_format`): resolve the
     schema, print it for --dry/--print-schema, write the parquet.
 
+    Where the format offers a one-pass checked frame (CSV), it is
+    written first; if that job fails, the conversion resolves the
+    schema and writes as if the one pass had not run, so it gives the
+    exact result or raises the two-pass path's own error.
+
     ``out``/``err`` default to the process's stdout/stderr, looked up at
     call time. Returns the resolved schema (None only on unreachable
     paths).
     """
     opts = opts or ConvertOptions()
-    schema, scan = _resolve(spark, fmt, in_path, opts, row_tag)
+    infer, scan, checked = _source(spark, fmt, in_path, opts, row_tag)
+    schema = _write_checked(spark, checked, in_path, parquet_path, opts) if checked else None
+    written = schema is not None
+    if not written:
+        schema = _schema(infer, opts)
     if opts.print_schema or opts.dry:
         # main.rs:161-168: banner on stderr, JSON on stdout.
         print("Schema:", file=err or sys.stderr)
         print(struct_to_arrow_json(schema), file=out or sys.stdout)
         if opts.dry:
             return schema
-    write_parquet(spark, scan(schema), in_path, parquet_path, opts)
+    if not written:
+        write_parquet(spark, scan(schema), in_path, parquet_path, opts)
     return schema
+
+
+def _write_checked(
+    spark: SparkSession, checked, in_path: str, parquet_path: str, opts: ConvertOptions
+) -> T.StructType | None:
+    """Write the one-pass checked frame; its schema, or None if a Spark
+    job failed (a cell broke its hint, or the FAILFAST string scan hit
+    a malformed row). Any other error, such as an unknown codec, is the
+    caller's as it stands."""
+    try:
+        df = checked()
+        write_parquet(spark, df, in_path, parquet_path, opts)
+    except (CapturedException, Py4JJavaError):
+        return None
+    return df.schema
 
 
 def convert(

@@ -166,6 +166,7 @@ def convert_incremental(
     opts: ConvertOptions | None = None,
     extensions: tuple[str, ...] = (".csv", ".jsonl", ".json", ".xml", ".orc", ".parquet"),
     lock_timeout: float = 600.0,
+    row_tag: str = "row",
 ) -> IncrementalResult:
     """Convert every not-yet-seen input file under ``input_dir`` into
     ``output_dir/batch=<n>/<stem>.parquet``; record conversions in the
@@ -174,8 +175,9 @@ def convert_incremental(
     Each input converts through the converter front as the format its
     extension names (:func:`input_format`, the CLI's ``--format auto``
     rule; schema inference / schema file / all write knobs in ``opts``
-    apply), in multi-part mode per file so each conversion parallelizes
-    across the file's splits. Two inputs with one stem (``a.csv`` and
+    apply; ``row_tag`` names the record element of XML inputs), in
+    multi-part mode per file so each conversion parallelizes across the
+    file's splits. Two inputs with one stem (``a.csv`` and
     ``a.jsonl``) would write the same ``<stem>.parquet``, so they raise
     ValueError before anything is written. Writers on one dataset are
     serialized by
@@ -184,7 +186,7 @@ def convert_incremental(
     """
     with _writer_lock(manifest_path, lock_timeout):
         return _convert_incremental_locked(
-            spark, input_dir, output_dir, manifest_path, opts, extensions
+            spark, input_dir, output_dir, manifest_path, opts, extensions, row_tag
         )
 
 
@@ -195,6 +197,7 @@ def _convert_incremental_locked(
     manifest_path: str,
     opts: ConvertOptions | None,
     extensions: tuple[str, ...],
+    row_tag: str,
 ) -> IncrementalResult:
     opts = opts or ConvertOptions()
     manifest = _load_manifest(manifest_path)
@@ -233,7 +236,7 @@ def _convert_incremental_locked(
     converted: list[str] = []
     for p in todo:
         out = os.path.join(batch_dir, f"{_stem(p)}.parquet")
-        convert_input(spark, input_format(p), p, out, multi)
+        convert_input(spark, input_format(p), p, out, multi, row_tag=row_tag)
         converted.append(p)
 
     # Commit only after every file in the batch landed (see module note

@@ -13,6 +13,12 @@ classify every cell with the reference regexes (one aggregate of
 per-column class masks, distributed), then map to Spark types. The
 only rows the driver sees are the first :data:`HINT_ROWS`, which order
 each column's regex tests (see :func:`_sample_hints`).
+
+The same :data:`HINT_ROWS` also pick the one-pass schema: when every
+cell of the file matches the class its column's hint predicts, the full
+classify aggregate would give exactly the hinted types, so
+:func:`checked_cast` casts the string scan to them directly and fails
+the job on the first cell that does not conform.
 """
 
 from __future__ import annotations
@@ -56,7 +62,8 @@ BOOLEAN_RE, INTEGER_RE, FLOAT_RE, DATE32_RE, DATE64_RE = (
 )
 _PY_PATTERNS = {b: re.compile(p, re.ASCII) for b, p in _PATTERNS.items()}
 
-# Rows the driver classifies to order each column's CASE branches.
+# Rows the driver classifies to order each column's CASE branches and
+# to predict the one-pass schema (:func:`checked_cast`).
 HINT_ROWS = 64
 
 # Arrow type-name strings (serde spelling) in lattice order.
@@ -79,16 +86,20 @@ ARROW_TO_SPARK = {
 }
 
 
+def _ref(col: str) -> F.Column:
+    """Reference to a RAW header name: backtick-quoted, since a CSV
+    header like `user.id` would otherwise parse as a nested-field
+    reference and abort the whole conversion with UNRESOLVED_COLUMN;
+    embedded backticks escape by doubling, per Spark identifier rules."""
+    return F.col("`" + col.replace("`", "``") + "`")
+
+
 def _classify_column(col: str, hint: int) -> F.Column:
     """Per-column type mask: each non-null value is classified ONCE by
     :func:`_value_class_bit`, and the column aggregates to a bit-OR of
     observed classes. The mask reproduces arrow-csv's merge rule exactly
     in :func:`_mask_to_arrow`."""
-    # Backtick-quote the RAW header name: a CSV header like `user.id`
-    # would otherwise parse as a nested-field reference and abort the
-    # whole conversion with UNRESOLVED_COLUMN (review r8); embedded
-    # backticks escape by doubling, per Spark identifier rules.
-    c = F.col("`" + col.replace("`", "``") + "`")
+    c = _ref(col)
     nonnull = c.isNotNull() & (c != "")
     return F.coalesce(
         F.bit_or(F.when(nonnull, _value_class_bit(c, hint))), F.lit(0)
@@ -126,6 +137,16 @@ def _py_class_bit(v: str) -> int:
         if rx.fullmatch(v):
             return bit
     return _UTF8
+
+
+def _hinted_sample(
+    raw: DataFrame, max_read_records: int | None
+) -> tuple[DataFrame, list[int]]:
+    """The inference sample (the first ``max_read_records`` rows, or all
+    of them) and its per-column hints from its first :data:`HINT_ROWS`
+    rows (one small job)."""
+    sample = raw.limit(max_read_records) if max_read_records else raw
+    return sample, _sample_hints(sample.take(HINT_ROWS), len(raw.columns))
 
 
 def _sample_hints(rows: list, ncols: int) -> list[int]:
@@ -174,8 +195,7 @@ def infer_arrow_types(
     """
     if max_read_records == 0:
         return {c: ARROW_UTF8 for c in raw.columns}
-    sample = raw.limit(max_read_records) if max_read_records else raw
-    hints = _sample_hints(sample.take(HINT_ROWS), len(raw.columns))
+    sample, hints = _hinted_sample(raw, max_read_records)
     # A multiLine CSV read is a single split, which would serialize the
     # regex classification onto one core. When the sample arrives in
     # fewer partitions than we have cores, one round-robin repartition
@@ -201,3 +221,41 @@ def infer_schema(
     return T.StructType(
         [T.StructField(c, ARROW_TO_SPARK[a], True) for c, a in arrow_types.items()]
     )
+
+
+def _checked_column(col: str, hint: int) -> F.Column:
+    """One column of :func:`checked_cast`: the cell cast to its hinted
+    type, NULL for an empty or null cell, and a ``raise_error`` for any
+    cell outside the hinted class. A Utf8 hint passes the string
+    through; hint 0 (all empty in the hint rows) lets only empty cells
+    through. The FLOAT pattern also covers INT cells, which the
+    Int64+Float64 → Float64 merge absorbs."""
+    c = _ref(col)
+    if hint == _UTF8:
+        return c.alias(col)
+    miss = F.raise_error(
+        F.lit(f"column {col!r} breaks the class its first {HINT_ROWS} rows predict")
+    )
+    if hint == 0:
+        return F.when(c != "", miss).otherwise(c).alias(col)
+    # A matching cell whose cast is still null (a Feb-30 date, an int
+    # past 2^63) is malformed for the typed CSV parse too.
+    typ = ARROW_TO_SPARK[_mask_to_arrow(hint)]
+    cast = F.when(c.rlike(_java_re(_PATTERNS[hint])), c.try_cast(typ))
+    return F.coalesce(cast, F.when(c != "", miss)).alias(col)
+
+
+def checked_cast(raw: DataFrame, max_read_records: int | None = None) -> DataFrame:
+    """The one-pass frame: ``raw`` (all strings) cast column by column to
+    the type its sample hints predict (:func:`_hinted_sample`, the same
+    hints :func:`infer_arrow_types` orders its tests by), checked cell
+    by cell. A narrow projection: no aggregate, no shuffle.
+
+    If a job over the frame finishes, every non-empty cell matched its
+    column's hinted class. The hint rows belong to the inference sample,
+    so the classify aggregate would merge to exactly the hinted type,
+    and the frame's schema is :func:`infer_schema`'s. If any cell breaks
+    its hint, the job fails in ``raise_error`` and the caller falls back
+    to the full inference."""
+    _, hints = _hinted_sample(raw, max_read_records)
+    return raw.select(*[_checked_column(c, h) for c, h in zip(raw.columns, hints)])

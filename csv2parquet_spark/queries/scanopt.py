@@ -342,13 +342,37 @@ def merge_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Continuous ingestion: the --incremental-manifest contract as a QUERY
 # ---------------------------------------------------------------------------
-def _ingest_root() -> str:
+def _source_digest(directory: str) -> str:
+    """Short digest of the ``*.py`` sources in ``directory`` (names and
+    contents, in name order)."""
+    import glob
+    import hashlib
+
+    h = hashlib.sha256()
+    for path in sorted(glob.glob(os.path.join(directory, "*.py"))):
+        h.update(os.path.basename(path).encode() + b"\0")
+        with open(path, "rb") as f:
+            h.update(f.read() + b"\0")
+    return h.hexdigest()[:16]
+
+
+def _ingest_root(name: str = "v1", digest: str | None = None) -> str:
     """Per-uid fixture root (ADVICE r7): the old fixed
     /tmp/csv2parquet_spark_ingest lived under a world-writable parent,
     so on a shared host a stale or foreign-planted directory with a
     _DONE marker would be silently read. Scoping by uid and verifying
-    ownership before trusting _DONE closes that."""
+    ownership before trusting _DONE closes that.
+
+    The root's name carries ``digest``, by default that of the
+    converter's sources: a fixture is built once and reused while its
+    _DONE marker exists, so without it a converter change would keep
+    reading a dataset that older code wrote."""
     import tempfile
+
+    from csv2parquet_spark import converter
+
+    if digest is None:
+        digest = _source_digest(os.path.dirname(converter.__file__))
 
     base = os.path.join(
         tempfile.gettempdir(), f"csv2parquet_spark_ingest_uid{os.getuid()}"
@@ -360,7 +384,7 @@ def _ingest_root() -> str:
     # (EPERM) if the path is squatted by another uid.
     os.makedirs(base, mode=0o700, exist_ok=True)
     os.chmod(base, 0o700)
-    return os.path.join(base, "v1")
+    return os.path.join(base, f"{name}-{digest}")
 
 
 def build_incremental_ingest_fixture(spark: SparkSession) -> str:
@@ -479,7 +503,7 @@ def build_compacted_ingest_fixture(spark: SparkSession) -> str:
     the v1 fixture."""
     import shutil
 
-    root = os.path.join(os.path.dirname(_ingest_root()), "v2_compacted")
+    root = _ingest_root("v2_compacted")
     done = os.path.join(root, "_DONE")
     if os.path.exists(done):
         st = os.stat(root)

@@ -81,13 +81,10 @@ def test_inference_nulls(spark, tmp):
     assert schema["i"].dataType == T.LongType()
 
 
-@pytest.mark.parametrize("multiline", [True, False])
-def test_inference_misleading_sample(spark, tmp, multiline):
-    """The first HINT_ROWS rows only order each column's regex tests:
-    when later rows break the sampled class, full-pass inference still
-    gives the full-file type (the late_type.csv shape, per column)."""
-    import io
-
+def _misleading_csv(tmp):
+    """A CSV whose first HINT_ROWS rows mislead every column's hint: the
+    later rows break each sampled class (the late_type.csv shape, per
+    column)."""
     from csv2parquet_spark.converter import inference as I
 
     n = I.HINT_ROWS
@@ -103,10 +100,24 @@ def test_inference_misleading_sample(spark, tmp, multiline):
     ]
     lines = ["int_float,int_text,bool_int,d32_d64,d64_d32,empty_int,text"]
     lines += [",".join(r) for r in head + tail]
-    src = _write(tmp, "misleading.csv", "\n".join(lines) + "\n")
+    return _write(tmp, "misleading.csv", "\n".join(lines) + "\n")
+
+
+@pytest.mark.parametrize("multiline", [True, False])
+def test_inference_misleading_sample(spark, tmp, multiline):
+    """The first HINT_ROWS rows only order each column's regex tests:
+    when later rows break the sampled class, full-pass inference still
+    gives the full-file type (the late_type.csv shape, per column)."""
+    import io
+
+    from csv2parquet_spark.converter import inference as I
+
+    n = I.HINT_ROWS
+    src = _misleading_csv(tmp)
+    raw = _raw(spark, src)
 
     # the premise: every hint is wrong (or absent) for its column
-    hints = I._sample_hints(_raw(spark, src).take(n), len(head[0]))
+    hints = I._sample_hints(raw.take(n), len(raw.columns))
     assert hints == [I._INT, I._INT, I._BOOL, I._D32, I._D64, 0, I._UTF8]
 
     opts = ConvertOptions(dry=True, multiline=multiline)
@@ -160,6 +171,140 @@ def test_classify_plan_is_hint_ordered_regex(spark, tmp, monkeypatch):
 
     assert first_branch("i") == r"RLIKE(i, \A(?:-?\d+)\z)"
     assert first_branch("s") == f"NOT RLIKE(s, {I._UNION_RE})"
+
+
+# --------------------------------------------------------------------------
+# One-pass conversion (inference.checked_cast) against the two-pass path
+# --------------------------------------------------------------------------
+def _both_passes(spark, src, tmp, **kw):
+    """Convert ``src`` the default way, then through the two-pass path
+    (the schema --dry prints, fed back as a schema file); returns the
+    (schema, DuckDB rows) of each."""
+    import io
+
+    def rows(out):
+        return duckdb.sql(
+            f"SELECT * FROM read_parquet('{out}') ORDER BY ALL"
+        ).fetchall()
+
+    quiet = dict(out=io.StringIO(), err=io.StringIO())
+    one = os.path.join(tmp, "one.parquet")
+    schema = convert(spark, src, one, ConvertOptions(**kw), **quiet)
+    printed = io.StringIO()
+    dry = convert(spark, src, one + ".never", ConvertOptions(dry=True, **kw),
+                  out=printed, err=io.StringIO())
+    sf = _write(tmp, "two_schema.json", printed.getvalue())
+    two = os.path.join(tmp, "two.parquet")
+    convert(spark, src, two, ConvertOptions(schema_file=sf, **kw), **quiet)
+    return (schema, rows(one)), (dry, rows(two))
+
+
+@pytest.mark.parametrize("case", [
+    "typed", "misleading", "empty_hint_then_ints", "cast_wider_than_regex",
+    "permissive", "permissive_extra_token",
+])
+def test_one_pass_matches_two_passes(spark, tmp, case):
+    """A conversion gives the schema and rows of the two-pass path,
+    whether the one pass holds (typed, an extra-token row under
+    PERMISSIVE) or falls back (hints broken by later rows, cells a cast
+    takes but the class regex does not, a bad cell under PERMISSIVE)."""
+    from csv2parquet_spark.converter import inference as I
+
+    kw = {}
+    if case == "typed":
+        src = _write(tmp, "in.csv", TYPED_CSV)
+    elif case == "misleading":
+        src = _misleading_csv(tmp)
+    elif case == "empty_hint_then_ints":
+        body = "e,s\n" + ",w\n" * I.HINT_ROWS + "5,w\n-6,x\n"
+        src = _write(tmp, "in.csv", body)
+    elif case == "cast_wider_than_regex":
+        # Spark's casts take " 5" as an int and "yes" as a bool; the
+        # lattice regexes make both Utf8
+        body = "i,b\n" + "".join(f"{k},true\n" for k in range(I.HINT_ROWS))
+        src = _write(tmp, "in.csv", body + " 5,yes\n")
+    elif case == "permissive":
+        # column i samples as Int64 from row 1 only: "notanumber" is a
+        # bad cell, "3,c,extra" an extra-token row
+        src = _write(tmp, "in.csv", "i,s\n1,a\nnotanumber,b\n3,c,extra\n4,d\n")
+        kw = dict(max_read_records=1, parse_mode="PERMISSIVE")
+    else:
+        src = _write(tmp, "in.csv", "i,s\n1,a\n3,c,extra\n4,d\n")
+        kw = dict(parse_mode="PERMISSIVE")
+    (schema, rows), (want_schema, want_rows) = _both_passes(spark, src, tmp, **kw)
+    assert schema == want_schema
+    assert rows == want_rows and rows
+
+
+@pytest.mark.parametrize("body", [
+    "d\n2020-02-28\n2020-02-30\n",        # matches Date32, no such day
+    "i\n1\n9223372036854775808\n",         # matches Int64, past 2^63
+    "i,j\n1,2\n3,4,5\n",                   # extra token
+])
+def test_one_pass_failfast_raises_two_pass_error(spark, tmp, body):
+    """Under FAILFAST a malformed cell or row raises the typed scan's
+    MALFORMED_RECORD_IN_PARSING, never the one pass's own check."""
+    src = _write(tmp, "bad.csv", body)
+    with pytest.raises(Exception) as exc:
+        convert(spark, src, os.path.join(tmp, "bad.parquet"))
+    assert "MALFORMED_RECORD_IN_PARSING" in str(exc.value)
+    assert "USER_RAISED_EXCEPTION" not in str(exc.value)
+
+
+def test_classify_aggregate_runs_only_where_one_pass_cannot(spark, tmp, monkeypatch):
+    """A conforming FAILFAST conversion runs no classify aggregate; a
+    DROPMALFORMED one still does (its inference reads the rows its scan
+    drops, so the hint check would judge different rows)."""
+    src = _write(tmp, "typed.csv", TYPED_CSV)
+    df_type = type(spark.range(1))
+    calls = []
+    real_agg = df_type.agg
+
+    def recording_agg(self, *exprs):
+        calls.append(exprs)
+        return real_agg(self, *exprs)
+
+    monkeypatch.setattr(df_type, "agg", recording_agg)
+    convert(spark, src, os.path.join(tmp, "a.parquet"))
+    assert calls == []
+    convert(spark, src, os.path.join(tmp, "b.parquet"),
+            ConvertOptions(parse_mode="DROPMALFORMED"))
+    assert len(calls) == 1
+
+
+def test_one_pass_conversion_tripwire(spark, tmp, monkeypatch):
+    """Tripwire for the one-pass conversion: a conforming CSV converts
+    in at most 3 jobs (the header read, the hint rows, the write), and
+    the plan it writes has no Exchange and no HashAggregate. The
+    two-pass path takes 6 jobs."""
+    import importlib
+    import io
+
+    # the module, not the package's re-exported ``convert`` function
+    C = importlib.import_module("csv2parquet_spark.converter.convert")
+
+    plans = []
+    real_write = C.write_parquet
+
+    def recording_write(spark_, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_write(spark_, df, *args, **kwargs)
+
+    monkeypatch.setattr(C, "write_parquet", recording_write)
+    src = _write(tmp, "typed.csv", TYPED_CSV)
+    sc = spark.sparkContext
+    group = f"one-pass-tripwire-{os.getpid()}-{id(plans)}"
+    sc.setJobGroup(group, "one-pass conversion tripwire")
+    try:
+        convert(spark, src, os.path.join(tmp, "o.parquet"),
+                ConvertOptions(single_file=False),
+                out=io.StringIO(), err=io.StringIO())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, f"{len(jobs)} jobs"
+    assert len(plans) == 1
+    assert "Exchange" not in plans[0] and "HashAggregate" not in plans[0], plans[0]
 
 
 def test_roundtrip_typed(spark, tmp):
@@ -1168,6 +1313,54 @@ def test_incremental_routes_by_extension(spark, tmp_path):
     )
     assert rel.columns == ["k", "v"]
     assert rel.fetchall() == [(1, "x"), (2, "y"), (3, "z")]
+
+
+def test_incremental_cli_xml_row_tag_and_format(spark, tmp_path, capsys):
+    """--incremental-manifest reads XML inputs with --xml-row-tag, and
+    refuses a --format other than auto: it picks each file's format by
+    its extension."""
+    import duckdb
+
+    from csv2parquet_spark.converter.cli import main
+
+    src, out = tmp_path / "in", tmp_path / "out"
+    src.mkdir()
+    (src / "recs.xml").write_text(
+        "<recs><rec><id>1</id><t>a</t></rec><rec><id>2</id><t>b</t></rec></recs>\n"
+    )
+    manifest = str(tmp_path / "m.json")
+    argv = ["--xml-row-tag", "rec", "--incremental-manifest", manifest]
+    assert main(argv + [str(src), str(out)]) == 0
+    assert duckdb.sql(
+        f"SELECT id, t FROM read_parquet('{out}/batch=0/recs.parquet/*.parquet') "
+        "ORDER BY id"
+    ).fetchall() == [(1, "a"), (2, "b")]
+
+    capsys.readouterr()
+    other = ["--format", "csv", "--incremental-manifest", str(tmp_path / "m2.json")]
+    assert main(other + [str(src), str(tmp_path / "out2")]) == 2
+    assert any(
+        line.startswith("error:") for line in capsys.readouterr().err.splitlines()
+    )
+    assert not (tmp_path / "out2").exists()
+
+
+def test_ingest_fixture_root_tracks_converter_sources(tmp_path):
+    """The incremental-ingest fixture roots carry a digest of the
+    converter's sources, so a converter change builds a new fixture
+    instead of reading one that older code wrote."""
+    from csv2parquet_spark import converter
+    from csv2parquet_spark.queries import scanopt
+
+    (tmp_path / "a.py").write_text("x = 1\n")
+    d1 = scanopt._source_digest(str(tmp_path))
+    (tmp_path / "a.py").write_text("x = 2\n")
+    d2 = scanopt._source_digest(str(tmp_path))
+    assert d1 != d2
+    assert scanopt._ingest_root(digest=d1) != scanopt._ingest_root(digest=d2)
+    assert scanopt._ingest_root("v2_compacted", d1) != scanopt._ingest_root("v1", d1)
+    here = scanopt._source_digest(os.path.dirname(converter.__file__))
+    assert scanopt._ingest_root() == scanopt._ingest_root(digest=here)
 
 
 def test_incremental_refuses_stem_collision(spark, tmp_path):

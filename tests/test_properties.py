@@ -17,6 +17,7 @@ import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from csv2parquet_spark.converter import ConvertOptions, convert
 
@@ -97,6 +98,80 @@ def test_fast_classifiers_match_reference_regexes(spark, vals):
         if I._py_class_bit(r.v) != r.ref
     ]
     assert not py_bad, f"driver hint classifier divergence: {py_bad[:10]}"
+
+
+def _class_values(pattern: str, extra=None):
+    """Values fully matching one inference class's (Python) pattern,
+    mostly lexically valid but out of range (month 54, hour 90)."""
+    import re
+
+    values = st.from_regex(re.compile(pattern, re.ASCII), fullmatch=True)
+    return st.one_of(values, extra) if extra is not None else values
+
+
+CAST_CLASSES = {
+    # column → (pattern name, Spark type, edge values)
+    "i": ("INTEGER_RE", T.LongType(),
+          ["9223372036854775808", "-9223372036854775808", "007"]),
+    "f": ("FLOAT_RE", T.DoubleType(),
+          ["1e999", "-1e999", "9223372036854775808", "1.", ".5"]),
+    "d32": ("DATE32_RE", T.DateType(), ["0000-01-01", "2020-02-30", "2020-02-29"]),
+    "d64": ("DATE64_RE", T.TimestampType(),
+            ["0000-01-01 00:00:00", "2020-02-30 00:00:00", "2020-01-01 23:59:60",
+             "2020-01-01T00:00:00"]),
+    "b": ("BOOLEAN_RE", T.BooleanType(), ["TRUE", "fAlSe"]),
+}
+
+
+@SETTINGS
+@given(data=st.data())
+def test_try_cast_equals_typed_csv_parse(spark, tmp_path_factory, data):
+    """The one-pass cast is the typed CSV parse: for every value of each
+    inference class (its regex's language plus edge values), ``try_cast``
+    of the string read equals the typed read (the converter's
+    timestampFormat, PERMISSIVE so a malformed cell reads as null), and
+    a null on one side is a null on the other."""
+    import datetime as dt
+
+    import pyspark.sql.functions as F
+
+    import csv2parquet_spark.converter.inference as I
+    from csv2parquet_spark.converter.convert import TIMESTAMP_FORMAT
+
+    valid = {
+        "d32": st.dates().map(dt.date.isoformat),
+        "d64": st.datetimes().map(lambda t: t.isoformat(sep=" ", timespec="seconds")),
+    }
+    cols = {
+        c: data.draw(st.lists(_class_values(getattr(I, rx), valid.get(c)),
+                              min_size=1, max_size=12)) + edges
+        for c, (rx, _, edges) in CAST_CLASSES.items()
+    }
+    n = max(map(len, cols.values()))
+    rows = [tuple(v[k] if k < len(v) else "" for v in cols.values()) for k in range(n)]
+    src = str(tmp_path_factory.mktemp("cast") / "in.csv")
+    _write_csv(src, list(cols), rows)
+
+    schema = T.StructType([T.StructField(c, t) for c, (_, t, _) in CAST_CLASSES.items()])
+    typed = (
+        spark.read.options(header=True, mode="PERMISSIVE", timestampFormat=TIMESTAMP_FORMAT)
+        .schema(schema).csv(src)
+    )
+    cast = spark.read.options(header=True).csv(src).select(
+        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema]
+    )
+    # compared as strings: year-0000 dates have no Python twin
+    as_text = [F.col(c).cast("string").alias(c) for c in cols]
+    got = [tuple(r) for r in cast.select(*as_text).collect()]
+    want = [tuple(r) for r in typed.select(*as_text).collect()]
+    assert got == want
+    # the edge values close each column, and decide both ways
+    edge = {c: col[len(cols[c]) - len(CAST_CLASSES[c][2]):len(cols[c])]
+            for c, col in zip(cols, zip(*want))}
+    assert edge["i"] == (None, "-9223372036854775808", "7")
+    assert edge["f"] == ("Infinity", "-Infinity", "9.223372036854776E18", "1.0", "0.5")
+    assert edge["d32"] == ("0000-01-01", None, "2020-02-29")
+    assert edge["d64"] == ("0000-01-01 00:00:00", None, None, "2020-01-01 00:00:00")
 
 
 def _write_csv(path: str, header: list[str], rows: list[tuple]) -> None:
