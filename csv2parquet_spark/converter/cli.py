@@ -15,6 +15,7 @@ import os
 import sys
 
 from csv2parquet_spark.converter.convert import (
+    CODECS,
     ConvertOptions,
     convert_input,
     input_format,
@@ -27,6 +28,11 @@ def _bool(v: str) -> bool:
     if v.lower() in {"false", "0", "no"}:
         return False
     raise argparse.ArgumentTypeError(f"invalid bool {v!r}")
+
+
+def _columns(v: str | None) -> list[str] | None:
+    """A ``COL[,COL...]`` flag value as its column names."""
+    return [c.strip() for c in v.split(",") if c.strip()] if v else None
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -43,7 +49,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "-c",
         "--compression",
-        choices=["uncompressed", "snappy", "gzip", "lzo", "brotli", "lz4", "zstd"],
+        choices=CODECS,
         default=None,
     )
     # W2: mapped to parquet-mr's nearest knobs (writer version v2 /
@@ -157,27 +163,15 @@ def main(argv: list[str] | None = None) -> int:
         max_row_group_size=args.max_row_group_size,
         max_statistics_size=args.max_statistics_size,
         statistics=args.statistics,
-        bloom_filter_columns=(
-            [c.strip() for c in args.bloom_filter_columns.split(",") if c.strip()]
-            if args.bloom_filter_columns
-            else None
-        ),
+        bloom_filter_columns=_columns(args.bloom_filter_columns),
         encoding=args.encoding,
         created_by=args.created_by,
         print_schema=args.print_schema,
         dry=args.dry,
         parse_mode=args.parse_mode,
         sort_by=args.sort_by,
-        zorder_by=(
-            [c.strip() for c in args.zorder_by.split(",") if c.strip()]
-            if args.zorder_by
-            else None
-        ),
-        partition_by=(
-            [c.strip() for c in args.partition_by.split(",") if c.strip()]
-            if args.partition_by
-            else None
-        ),
+        zorder_by=_columns(args.zorder_by),
+        partition_by=_columns(args.partition_by),
         single_file=not args.partition_by,
     )
     if args.incremental_manifest:

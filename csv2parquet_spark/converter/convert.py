@@ -52,8 +52,8 @@ from csv2parquet_spark.converter.schema_json import (
 )
 from csv2parquet_spark.session import conf_override
 
-#: flag → (spark writer option, hadoop conf) for the W1-W10 table.
-_CODECS = {"uncompressed", "snappy", "gzip", "lzo", "brotli", "lz4", "zstd"}
+#: W1: the ``--compression`` codecs, in the CLI's order.
+CODECS = ("uncompressed", "snappy", "gzip", "lzo", "brotli", "lz4", "zstd")
 
 
 @dataclass
@@ -178,6 +178,23 @@ def _tuned_splits(spark: SparkSession, csv_path: str):
 TIMESTAMP_FORMAT = "yyyy-MM-dd[[ ]['T']HH:mm:ss]"
 
 
+def csv_reader(reader, opts: ConvertOptions, multiline: bool, mode: str = "PERMISSIVE"):
+    """The reference's CSV dialect on a batch or stream ``reader``: the
+    one place the CSV read options are spelled, so every CSV scan
+    (inference, the one-pass frame, the typed scan, the streaming
+    converter) parses a file the same way. ``mode`` defaults to Spark's
+    own, which the all-string inference scan keeps; the typed scans
+    pass ``opts.parse_mode``."""
+    return reader.options(
+        header=opts.header,
+        sep=opts.delimiter,
+        multiLine=multiline,
+        escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
+        mode=mode,
+        timestampFormat=TIMESTAMP_FORMAT,
+    )
+
+
 def _csv_source(spark: SparkSession, csv_path: str, opts: ConvertOptions):
     """The reference's own format (SURVEY §1.2 / main.rs:126-159): the
     arrow-lattice inference, the FAILFAST scan and the one-pass checked
@@ -192,24 +209,15 @@ def _csv_source(spark: SparkSession, csv_path: str, opts: ConvertOptions):
     Utf8 there)."""
     multiline = _effective_multiline(csv_path, opts)
 
-    def reader(**parse):
-        return spark.read.options(
-            header=opts.header,
-            sep=opts.delimiter,
-            multiLine=multiline,
-            escape='"',  # RFC-4180 doubled-quote escaping (arrow-csv default)
-            **parse,
-        )
+    def reader(**mode):
+        return csv_reader(spark.read, opts, multiline, **mode)
 
     def infer() -> T.StructType:
         with _tuned_splits(spark, csv_path):
             return infer_schema(reader().csv(csv_path), opts.max_read_records)
 
     def scan(schema: T.StructType) -> DataFrame:
-        return reader(
-            mode=opts.parse_mode,
-            timestampFormat=TIMESTAMP_FORMAT,
-        ).schema(schema).csv(csv_path)
+        return reader(mode=opts.parse_mode).schema(schema).csv(csv_path)
 
     def checked() -> DataFrame:
         with _tuned_splits(spark, csv_path):
@@ -524,7 +532,7 @@ def write_parquet(
         # forces that much).
         writer = (df.repartition(1) if opts.single_file else df).write
     if opts.compression:
-        if opts.compression not in _CODECS:
+        if opts.compression not in CODECS:
             raise ValueError(f"unknown codec {opts.compression!r}")
         writer = writer.option("compression", opts.compression)
     if opts.max_row_group_size:

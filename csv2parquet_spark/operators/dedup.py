@@ -99,15 +99,6 @@ def doc_shingle_arrays(
     )
 
 
-def shingle_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                 k: int = 3) -> DataFrame:
-    """(id, shingle) distinct pairs (shingle = xxhash64 of the k-gram) —
-    the exploded view of :func:`doc_shingle_arrays`."""
-    return doc_shingle_arrays(df, text_col, id_col, k).select(
-        "id", F.explode("sset").alias("shingle")
-    )
-
-
 def _verify_jaccard(cand: DataFrame, dsa: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard for candidate (id_a, id_b) pairs against the per-doc
     shingle arrays; emits pairs with J ≥ threshold.

@@ -1,5 +1,7 @@
-"""Data-layout operators for scan pruning at scale: Z-order clustering
-and range-clustered writes.
+"""Data-layout operators for scan pruning at scale: the Z-order key,
+bucketed and sharded writes, and small-file compaction. The clustered
+parquet write itself is the converter sink's ``sort_by``/``zorder_by``
+(:func:`csv2parquet_spark.converter.convert.write_parquet`).
 
 The reference (`/root/reference/src/main.rs`) writes rows in input
 order; at 100 TB the LAYOUT of the output parquet decides how much of
@@ -16,10 +18,10 @@ Shapes:
   Python, no shuffle);
 * the min/max scaling pass is one small aggregate (2 numbers per
   column, collected to the driver — O(dims), not O(rows));
-* the clustered write is ONE range-partitioning shuffle followed by a
-  within-partition sort — exactly what a 1000-executor cluster needs:
-  every executor writes its own key range, files don't overlap, and
-  row-group stats are tight.
+* the clustered write (``write_parquet``) is ONE range-partitioning
+  shuffle followed by a within-partition sort — exactly what a
+  1000-executor cluster needs: every executor writes its own key
+  range, files don't overlap, and row-group stats are tight.
 """
 
 from __future__ import annotations
@@ -73,52 +75,6 @@ def zorder_key(
         _scaled(F.col(c), ranges[f"mn_{c}"], ranges[f"mx_{c}"], bits) for c in cols
     ]
     return df, interleave_bits(scaled, bits)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    num_files: int | None = None,
-    block_bytes: int | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-order of ``cols``.
-
-    repartitionByRange on the z-value (one shuffle; Spark samples the
-    key distribution so output files are even-sized) then sort within
-    partitions — giving non-overlapping z-ranges per file AND tight
-    row-group stats inside each file. ``block_bytes`` shrinks row
-    groups (parquet.block.size) — useful in tests to get many groups
-    from small data; leave default at scale.
-    """
-    df, z = zorder_key(df, cols, bits)
-    with_z = df.withColumn("__z", z)
-    parts = num_files or df.sparkSession.sparkContext.defaultParallelism
-    writer = (
-        with_z.repartitionByRange(parts, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-    )
-    if block_bytes:
-        writer = writer.option("parquet.block.size", str(block_bytes))
-    writer.parquet(path)
-
-
-def write_range_clustered(
-    df: DataFrame, path: str, col: str, num_files: int | None = None
-) -> None:
-    """Single-column clustered write (the 1-D special case): range
-    partition + sort on one key. Best when queries filter on exactly one
-    dimension; Z-order dominates for 2-3-dimension conjunctive filters."""
-    parts = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(parts, col)
-        .sortWithinPartitions(col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def rowgroup_prune_fraction(
@@ -277,10 +233,10 @@ def compact_small_files(
     within a group follows the group's file order). Returns
     {"n_input_files", "n_output_files", "plan"}.
 
-    Scale shape: metadata listing is O(files); each group rewrite is an
-    independent map-only job reading only its own members — at cluster
-    scale the groups run as one job over a file-to-group assignment,
-    never a global shuffle of the table."""
+    Scale shape: metadata listing is O(files); each group is rewritten
+    by its own map-only ``coalesce(1)`` job reading only its own
+    members, one job after another — never a global shuffle of the
+    table."""
     import os
     import shutil
 

@@ -167,25 +167,6 @@ def winnow_fingerprint_digests(
     return df.select(id_col, text_col).mapInPandas(kern, out_schema)
 
 
-def add_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality/stat columns used by the quality-score and
-    language-ID operators."""
-    toks = tokens(text_col)
-    return (
-        df.withColumn("n_tokens", F.size(toks))
-        .withColumn("n_chars_actual", F.length(text_col))
-        .withColumn("n_distinct_tokens", F.size(F.array_distinct(toks)))
-        .withColumn(
-            "avg_token_len",
-            F.round(
-                (F.length(text_col) - F.col("n_tokens") + 1).cast("double")
-                / F.col("n_tokens"),
-                6,
-            ),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data hygiene): emails, phone-ish numbers, IPv4.
 # Patterns stay in the RE2-compatible subset (no lookaround) so the

@@ -53,14 +53,6 @@ from csv2parquet_spark.queries import order_stats  # noqa: E402,F401
 # ---------------------------------------------------------------------------
 _FORCE_FIRST: list[str] = []
 
-# New registrations that must NOT displace pending proofs go here; they
-# fill trailing slots if tier 0+1+2 < 50 and auto-promote next round.
-_DEFER_THIS_ROUND: set[str] = set()
-
-# Within the deferred tier, these names sort FIRST (list order) so
-# trailing window slots go to the round's flagship additions.
-_DEFER_PRIORITY: list[str] = []
-
 
 def _proven_from_driver_rounds() -> tuple[set[str], set[str]]:
     """(hash_proven, ran_clean) query names from CORRECTNESS_r*.json."""
@@ -94,20 +86,13 @@ def _rotate() -> None:
     hash_proven, ran_clean = _proven_from_driver_rounds()
     force = [n for n in _FORCE_FIRST if n in REGISTRY]
 
-    def tier(name: str) -> float:
+    def tier(name: str) -> int:
         if REGISTRY[name].oracle is not None:
-            t = 1.0 if name not in hash_proven else 3.0
-        else:
-            t = 2.0 if name not in ran_clean else 3.0
-        if t < 3.0 and name in _DEFER_THIS_ROUND:
-            t = 2.5
-        return t
+            return 1 if name not in hash_proven else 3
+        return 2 if name not in ran_clean else 3
 
-    prio = {n: i for i, n in enumerate(_DEFER_PRIORITY)}
     rest = [n for n in REGISTRY if n not in set(force)]
-    # stable: _DEFER_PRIORITY order first within a tier, then
-    # registration order
-    rest.sort(key=lambda n: (tier(n), prio.get(n, len(prio))))
+    rest.sort(key=tier)  # stable: registration order within a tier
     ordered = {n: REGISTRY[n] for n in [*force, *rest]}
     REGISTRY.clear()
     REGISTRY.update(ordered)

@@ -578,11 +578,11 @@ def _zorder_oracle(bits: int = 8) -> str:
 @register("zorder_cluster_key", oracle=_zorder_oracle())
 def zorder_cluster_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (l_orderkey, l_partkey):
-    the value write_zordered range-partitions and sorts by so parquet
+    the key the converter's ``zorder_by`` write (``convert.write_parquet``,
+    16 bits per column; 8 here) range-partitions and sorts by, so parquet
     row-group min/max stats prune BOTH dimensions of a conjunctive
-    filter (operators/layout.py). Pure Catalyst bit arithmetic —
-    codegen, no shuffle; the min/max scaling pass is one 4-number
-    aggregate."""
+    filter. Pure Catalyst bit arithmetic — codegen, no shuffle; the
+    min/max scaling pass is one 4-number aggregate."""
     from csv2parquet_spark.operators.layout import zorder_key
 
     li = table(spark, sf_dir, "lineitem")

@@ -170,12 +170,16 @@ def streaming_csv_to_parquet(
     """Continuous CSV→Parquet conversion — the reference's one dataflow
     (main.rs:250-255) as an always-on stream: new CSV files landing in
     ``csv_dir`` are converted incrementally, exactly-once via the
-    checkpoint."""
-    stream = (
-        spark.readStream.schema(schema)
-        .options(header=header, sep=delimiter)
-        .csv(csv_dir)
-    )
+    checkpoint. Files parse in the batch converter's CSV dialect
+    (:func:`~csv2parquet_spark.converter.convert.csv_reader`: quoted
+    newlines, doubled-quote escapes, FAILFAST), so a malformed row
+    fails the query like the reference's first-error abort."""
+    from csv2parquet_spark.converter.convert import ConvertOptions, csv_reader
+
+    opts = ConvertOptions(header=header, delimiter=delimiter)
+    stream = csv_reader(
+        spark.readStream.schema(schema), opts, opts.multiline, opts.parse_mode
+    ).csv(csv_dir)
     return (
         stream.writeStream.format("parquet")
         .option("path", out_dir)
@@ -197,8 +201,12 @@ def streaming_jsonl_to_parquet(
     ``jsonl_dir`` convert incrementally, exactly-once via the
     checkpoint. Streaming sources need an explicit schema — resolve one
     upfront with ``converter.jsonl.read_jsonl`` / a schema file, exactly
-    like the batch path's frozen-schema discipline."""
-    stream = spark.readStream.schema(schema).json(jsonl_dir)
+    like the batch path's frozen-schema discipline. Lines parse in the
+    batch scan's mode (FAILFAST), so a malformed line fails the query."""
+    from csv2parquet_spark.converter.convert import ConvertOptions
+
+    mode = ConvertOptions().parse_mode
+    stream = spark.readStream.schema(schema).options(mode=mode).json(jsonl_dir)
     return (
         stream.writeStream.format("parquet")
         .option("path", out_dir)

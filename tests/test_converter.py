@@ -727,14 +727,17 @@ def test_input_format_map(path, want):
 
 def test_converter_has_one_front():
     """Tripwire: one function prints the ``Schema:`` banner, one loads a
-    schema file (``arrow_json_to_struct``), and one module holds the
+    schema file (``arrow_json_to_struct``), one module holds the
     extension → format map (the only place the ``ndjson`` extension is
-    spelled). The per-format converters were forks of all three."""
+    spelled), and one function spells the CSV read dialect (passes
+    ``sep=`` to ``.options(...)``). The per-format converters were forks
+    of the first three; the streaming converter read CSV in a dialect of
+    its own."""
     import ast
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent / "csv2parquet_spark"
-    banner, schema_loads, ext_maps = set(), set(), set()
+    banner, schema_loads, ext_maps, dialects = set(), set(), set(), set()
 
     def visit(node, where):
         for child in ast.iter_child_nodes(node):
@@ -750,6 +753,10 @@ def test_converter_has_one_front():
                     banner.add(where)
                 if callee.split(".")[-1] == "arrow_json_to_struct":
                     schema_loads.add(where)
+                if callee.split(".")[-1] == "options" and any(
+                    k.arg == "sep" for k in child.keywords
+                ):
+                    dialects.add(where)
             if isinstance(child, ast.Constant) and child.value == "ndjson":
                 ext_maps.add(where.split(":")[0])
             visit(child, where)
@@ -757,7 +764,8 @@ def test_converter_has_one_front():
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         visit(ast.parse(path.read_text(), str(path)), rel)
-    found = {"banner": banner, "schema_file": schema_loads, "ext_map": ext_maps}
+    found = {"banner": banner, "schema_file": schema_loads, "ext_map": ext_maps,
+             "csv_dialect": dialects}
     assert all(len(v) == 1 for v in found.values()), "; ".join(
         f"{k}: {sorted(v)}" for k, v in found.items()
     )

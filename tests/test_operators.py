@@ -237,27 +237,23 @@ def test_ivf_index_probe_is_partition_pruned(spark, sf_dir, tmp_path):
 
 
 def test_compaction_reduces_file_count(spark, tmp_path, sf_dir):
-    """128 tiny part-files compact to the planned count; data survives
-    byte-exactly; the sorted variant clusters row-group stats."""
-    from csv2parquet_spark.operators.maintenance import (
-        compact_parquet,
-        plan_compaction,
-    )
+    """128 tiny part-files compact to one file per planned group, fewer
+    than the inputs; the rows survive."""
+    import os
+
+    from csv2parquet_spark.operators.layout import compact_small_files
 
     src = str(tmp_path / "fragmented")
     out = str(tmp_path / "compacted")
     base = spark.read.parquet(f"{sf_dir}/orders.parquet")
     base.repartition(128).write.mode("overwrite").parquet(src)
-    n_files, total, n_target = plan_compaction(spark, src, target_file_mb=8)
-    assert n_files >= 128
-    written = compact_parquet(spark, src, out, target_file_mb=8)
-    assert written == n_target < n_files
+    res = compact_small_files(spark, src, out, target_bytes=8 << 20)
+    assert res["n_input_files"] >= 128
+    written = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert len(written) == res["n_output_files"] == len(res["plan"])
+    assert res["n_output_files"] < res["n_input_files"]
     back = spark.read.parquet(out)
     assert back.count() == base.count()
-    # sorted compaction: clustered by orderkey for stats pruning
-    out2 = str(tmp_path / "compacted_sorted")
-    compact_parquet(spark, src, out2, target_file_mb=8, sort_by=["o_orderkey"])
-    assert spark.read.parquet(out2).count() == base.count()
 
 
 # ---------------------------------------------------------------------------
@@ -321,10 +317,8 @@ def test_zorder_layout_prunes_second_dimension(spark, tmp_path):
     only its own sort column; Z-order interleaving localizes BOTH
     columns, so min/max row-group pruning works for a filter on the
     second dimension alone (the case a 1-D layout cannot serve)."""
-    from csv2parquet_spark.operators.layout import (
-        rowgroup_prune_fraction,
-        write_zordered,
-    )
+    from csv2parquet_spark.converter.convert import ConvertOptions, write_parquet
+    from csv2parquet_spark.operators.layout import rowgroup_prune_fraction
     from csv2parquet_spark.tables import table
 
     # sf0.01 (60k rows): enough row groups at 16 KB blocks for the
@@ -334,8 +328,12 @@ def test_zorder_layout_prunes_second_dimension(spark, tmp_path):
     )
     zpath = str(tmp_path / "z")
     lpath = str(tmp_path / "lin")
-    write_zordered(li, zpath, ["l_orderkey", "l_partkey"], num_files=4,
-                   block_bytes=16 << 10)
+    # W9 maps max_row_group_size to parquet.block.size at 128 B a row:
+    # 128 rows → 16 KB blocks, the same blocks as the linear layout's.
+    write_parquet(spark, li, zpath, zpath, ConvertOptions(
+        zorder_by=["l_orderkey", "l_partkey"], single_file=False,
+        max_row_group_size=128,
+    ))
     (
         li.repartitionByRange(4, "l_orderkey")
         .sortWithinPartitions("l_orderkey")

@@ -2,9 +2,7 @@
 ~50 queries get driver proof each round — a silent ordering regression
 loses proofs without failing anything. Pin the tiering contract:
 force-first leads, never-proven oracle-backed queries precede proven
-ones, deferred names sink behind pending tiers (priority names first
-within the deferred block), and every registered name survives the
-reorder exactly once.
+ones, and every registered name survives the reorder exactly once.
 """
 
 from __future__ import annotations
@@ -15,8 +13,6 @@ import csv2parquet_spark.queries as Q
 def test_rotation_tiering_contract(monkeypatch):
     names = list(Q.REGISTRY)
     force = list(Q._FORCE_FIRST)
-    deferred = set(Q._DEFER_THIS_ROUND)
-    prio = list(Q._DEFER_PRIORITY)
 
     # permutation: nothing lost, nothing duplicated
     assert len(names) == len(set(names))
@@ -26,33 +22,16 @@ def test_rotation_tiering_contract(monkeypatch):
     # tier 0: the force-first re-proofs lead the registry verbatim
     assert names[: len(force)] == force
 
-    def tier(n: str) -> float:
-        spec = Q.REGISTRY[n]
-        if spec.oracle is not None:
-            t = 1.0 if n not in hash_proven else 3.0
-        else:
-            t = 2.0  # rows-only; ran-clean state collapses to 3.0 below
-        if t < 3.0 and n in deferred:
-            t = 2.5
-        return t
-
     # tiers are non-decreasing outside the force block (rows-only
     # ran-clean detection is environment-dependent, so only assert the
-    # oracle-backed ordering: no proven (3.0) name may precede an
-    # unproven (1.0) or deferred (2.5) one)
+    # oracle-backed ordering: no proven name may precede an unproven one)
     rest = [n for n in names[len(force):] if Q.REGISTRY[n].oracle is not None]
     seen_proven = False
     for n in rest:
-        t = tier(n)
-        if t >= 3.0:
+        if n in hash_proven:
             seen_proven = True
         else:
             assert not seen_proven, (
-                f"unproven query {n!r} (tier {t}) sorted behind proven ones — "
+                f"unproven query {n!r} sorted behind proven ones — "
                 "the rotation would never convert it"
             )
-
-    # deferred-priority names appear in list order within the deferred tier
-    in_reg = [n for n in names if n in deferred and tier(n) == 2.5]
-    prio_in_reg = [n for n in in_reg if n in prio]
-    assert prio_in_reg == [n for n in prio if n in set(in_reg)]

@@ -134,6 +134,32 @@ def test_streaming_csv_to_parquet(spark, tmp_path):
     assert sorted(r.i for r in out.collect()) == [1, 2, 3]
 
 
+def test_streaming_csv_matches_convert(spark, tmp_path):
+    """The streaming converter parses CSV in the batch converter's
+    dialect: a doubled-quote escape unescapes and a quoted newline stays
+    inside its cell, exactly as ``convert`` writes them."""
+    from csv2parquet_spark.converter.convert import convert
+
+    csv_dir = tmp_path / "in"
+    csv_dir.mkdir()
+    (csv_dir / "a.csv").write_text('k,s\n1,"a""b"\n2,"x\ny"\n3,plain\n')
+    out_dir = str(tmp_path / "out")
+    q = streaming_csv_to_parquet(
+        spark, str(csv_dir), out_dir, str(tmp_path / "ckpt"),
+        schema="k bigint, s string",
+    )
+    q.awaitTermination(60)
+    batch = str(tmp_path / "batch.parquet")
+    convert(spark, str(csv_dir / "a.csv"), batch)
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()), key=repr)
+
+    want = [(1, 'a"b'), (2, "x\ny"), (3, "plain")]
+    assert rows(out_dir) == want
+    assert rows(batch) == want
+
+
 def test_watermark_drops_late_data(spark, tmp_path):
     """An event older than the watermark when its batch arrives must not
     be counted; on-time events in the same batch must be. Two explicit
