@@ -8,8 +8,13 @@ lifecycle"). Every other input format goes through the same front
 (``convert.convert_input``).
 """
 
-from csv2parquet_spark.converter.convert import convert, ConvertOptions, write_parquet
-from csv2parquet_spark.converter.jsonl import convert_json, convert_jsonl, read_jsonl
+from csv2parquet_spark.converter.convert import (
+    convert,
+    convert_input,
+    ConvertOptions,
+    read_input,
+    write_parquet,
+)
 from csv2parquet_spark.converter.schema_json import (
     arrow_json_to_struct,
     struct_to_arrow_json,
@@ -18,9 +23,8 @@ from csv2parquet_spark.converter.inference import infer_schema
 
 __all__ = [
     "convert",
-    "convert_json",
-    "convert_jsonl",
-    "read_jsonl",
+    "convert_input",
+    "read_input",
     "write_parquet",
     "ConvertOptions",
     "arrow_json_to_struct",

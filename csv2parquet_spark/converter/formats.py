@@ -5,8 +5,9 @@ of this engine also gets the adjacent conversions a data-pipeline needs,
 each the same narrow-only scan→write plan (no shuffle, embarrassingly
 parallel at any scale):
 
-* ORC / Parquet → Parquet (``convert_columnar``) — self-describing
-  inputs through the converter front (``convert.convert_input``).
+* ORC / Parquet → Parquet (``columnar_source``) — self-describing
+  inputs through the converter front (``convert.convert_input`` with
+  ``fmt="orc"`` or ``"parquet"``).
 * Parquet → CSV (``parquet_to_csv``) — the reverse trip; RFC-4180
   quoting, header on by default to mirror the CSV dialect defaults.
 * Parquet/CSV → ORC (``to_orc``) — Spark's built-in columnar
@@ -24,11 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from csv2parquet_spark.converter.convert import (
-    ConvertOptions,
-    convert_input,
-    read_csv,
-)
+from csv2parquet_spark.converter.convert import ConvertOptions, read_csv
 from csv2parquet_spark.converter.convert import write_single_file as _write_single_file
 
 
@@ -105,23 +102,3 @@ def columnar_source(
         ])
 
     return (lambda: df.schema), scan
-
-
-def convert_columnar(
-    spark: SparkSession,
-    in_path: str,
-    parquet_path: str,
-    opts=None,
-    fmt: str = "orc",
-    out=None,
-    err=None,
-) -> T.StructType | None:
-    """ORC/Parquet → Parquet through the FULL converter surface — W1-W9
-    writer knobs, --dry / --print-schema banner contract, single-file
-    output. Parquet→Parquet is the classic recompress/re-encode
-    maintenance rewrite (e.g. snappy→zstd migration): a narrow
-    scan→write plan, embarrassingly parallel — at 100 TB it runs
-    file-parallel with zero shuffles, and column pruning/predicate
-    pushdown don't apply (full fidelity rewrite).
-    """
-    return convert_input(spark, fmt, in_path, parquet_path, opts, out=out, err=err)

@@ -29,7 +29,7 @@ import json
 import os
 import tempfile
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass, replace
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +37,7 @@ from csv2parquet_spark.converter.convert import (
     ConvertOptions,
     convert_input,
     input_format,
+    write_parquet,
 )
 
 
@@ -158,6 +159,12 @@ def _file_key(path: str) -> str:
     return f"{st.st_size}:{st.st_mtime_ns}"
 
 
+def _batch_options(opts: ConvertOptions) -> ConvertOptions:
+    """The options a batch is written with: ``opts`` in multi-part mode,
+    so each file's write parallelizes across its splits."""
+    return replace(opts, single_file=False, print_schema=False, dry=False)
+
+
 def convert_incremental(
     spark: SparkSession,
     input_dir: str,
@@ -230,9 +237,7 @@ def _convert_incremental_locked(
     # batch would make those never-committed rows permanently visible
     # to last-batch-wins readers.
     _clear_dir(batch_dir)
-    from dataclasses import replace
-
-    multi = replace(opts, single_file=False, print_schema=False, dry=False)
+    multi = _batch_options(opts)
     converted: list[str] = []
     for p in todo:
         out = os.path.join(batch_dir, f"{_stem(p)}.parquet")
@@ -244,6 +249,8 @@ def _convert_incremental_locked(
     for p in converted:
         seen[p] = _file_key(p)
     manifest["next_batch"] = batch + 1
+    # compaction rewrites with the options of the last ingest
+    manifest["writer"] = asdict(multi)
     _commit_manifest(manifest_path, manifest)
     return IncrementalResult(batch=batch, converted=converted, skipped=skipped)
 
@@ -307,6 +314,12 @@ def compact_incremental(
     the compaction point in the manifest. Superseded dirs become GC
     candidates; they are NOT deleted here (see :func:`gc_batches`).
 
+    Each winner is rewritten through the converter's sink
+    (:func:`write_parquet`) with the writer options the last ingest
+    recorded in the manifest (``writer``; a manifest without it means
+    the default batch options), so the compacted batch keeps the ingest's
+    codec, ``created_by`` and every other writer knob.
+
     Scale shape: the winner map is a directory listing (file-count-
     sized, driver-side); each winner stem is rewritten with one
     parallel read→write, which also coalesces each source's small
@@ -354,12 +367,12 @@ def _compact_incremental_locked(
     # left this dir with stems that are not winners; clearing it keeps
     # never-committed rows out of the committed compacted batch.
     _clear_dir(batch_dir)
+    opts = _batch_options(ConvertOptions(**manifest.get("writer", {})))
     for stem, (_, src) in sorted(winners.items()):
         # per-source rewrite: schemas differ across sources, so each
         # stem is its own (parallel) read→write job
-        spark.read.parquet(src).write.mode("overwrite").parquet(
-            os.path.join(batch_dir, f"{stem}.parquet")
-        )
+        out = os.path.join(batch_dir, f"{stem}.parquet")
+        write_parquet(spark, spark.read.parquet(src), src, out, opts)
     import time as _time
 
     manifest["next_batch"] = batch + 1

@@ -22,16 +22,10 @@ Differences from CSV, by design:
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from csv2parquet_spark.converter.convert import (
-    ConvertOptions,
-    convert_input,
-    read_input,
-)
+from csv2parquet_spark.converter.convert import ConvertOptions
 
 
 # Lines consulted for field NAMES when max_read_records=0 ("skip
@@ -63,59 +57,14 @@ def jsonl_source(spark: SparkSession, jsonl_path: str, opts: ConvertOptions):
     return infer, scan
 
 
-def read_jsonl(
-    spark: SparkSession, jsonl_path: str, opts: ConvertOptions | None = None
-) -> DataFrame:
-    """JSONL scan with a frozen, pre-resolved schema (never inference at
-    read time — same discipline as the CSV path: O1/O2 separation)."""
-    return read_input(spark, "jsonl", jsonl_path, opts)
-
-
-def convert_jsonl(
-    spark: SparkSession,
-    jsonl_path: str,
-    parquet_path: str,
-    opts: ConvertOptions | None = None,
-    out=sys.stdout,
-    err=sys.stderr,
-) -> T.StructType | None:
-    """JSONL→Parquet with the converter's full option surface."""
-    return convert_input(spark, "jsonl", jsonl_path, parquet_path, opts, out=out, err=err)
-
-
 def json_source(spark: SparkSession, json_path: str, opts: ConvertOptions):
-    """Multi-line JSON inference and frozen-schema scan. Unlike JSONL,
-    ``max_read_records=0`` has no line-sampled names pass: a multi-line
-    document is not line-splittable, so field names come from the same
-    document parse inference does (no extra corpus cost — the reader
-    must parse whole documents either way)."""
-
-    def infer() -> T.StructType:
-        return spark.read.option("multiLine", "true").json(json_path).schema
-
-    def scan(schema: T.StructType) -> DataFrame:
-        return (
-            spark.read.options(mode=opts.parse_mode, multiLine="true")
-            .schema(schema)
-            .json(json_path)
-        )
-
-    return infer, scan
-
-
-def convert_json(
-    spark: SparkSession,
-    json_path: str,
-    parquet_path: str,
-    opts: ConvertOptions | None = None,
-    out=sys.stdout,
-    err=sys.stderr,
-) -> T.StructType | None:
-    """Multi-line ``.json`` → Parquet (``--format json``): a file holding
-    ONE pretty-printed object or a top-level ARRAY of objects — the
-    shapes the line-oriented JSONL reader misparses. Same converter
-    surface (schema files, W1-W9 writer knobs, --dry/--print-schema
-    banner, parse-mode ladder).
+    """Multi-line JSON inference and frozen-schema scan (``--format
+    json``): a file holding ONE pretty-printed object or a top-level
+    ARRAY of objects — the shapes the line-oriented JSONL reader
+    misparses. Unlike JSONL, ``max_read_records=0`` has no line-sampled
+    names pass: a multi-line document is not line-splittable, so field
+    names come from the same document parse inference does (no extra
+    corpus cost — the reader must parse whole documents either way).
 
     NOT supported: CONCATENATED multi-line objects in one file — Spark's
     wholeFile parser stops after the first top-level value and raises
@@ -129,6 +78,16 @@ def convert_json(
     file count, not splits. ``max_read_records`` caps are line-based
     and don't apply here (documents must parse whole); inference is a
     full pass, as the reference's default inference is for CSV. For
-    100 TB corpora use JSONL, which fans out per split.
-    """
-    return convert_input(spark, "json", json_path, parquet_path, opts, out=out, err=err)
+    100 TB corpora use JSONL, which fans out per split."""
+
+    def infer() -> T.StructType:
+        return spark.read.option("multiLine", "true").json(json_path).schema
+
+    def scan(schema: T.StructType) -> DataFrame:
+        return (
+            spark.read.options(mode=opts.parse_mode, multiLine="true")
+            .schema(schema)
+            .json(json_path)
+        )
+
+    return infer, scan

@@ -12,13 +12,12 @@ which is document-at-a-time).
 
 from __future__ import annotations
 
-import sys
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from csv2parquet_spark.converter.convert import ConvertOptions, convert_input
+from csv2parquet_spark.converter.convert import ConvertOptions
 
 
 def xml_source(
@@ -67,18 +66,3 @@ def xml_source(
         )
 
     return infer, scan
-
-
-def convert_xml(
-    spark: SparkSession,
-    xml_path: str,
-    parquet_path: str,
-    opts: ConvertOptions | None = None,
-    row_tag: str = "row",
-    out=sys.stdout,
-    err=sys.stderr,
-) -> T.StructType | None:
-    """XML→Parquet with the converter's full option surface."""
-    return convert_input(
-        spark, "xml", xml_path, parquet_path, opts, row_tag=row_tag, out=out, err=err
-    )

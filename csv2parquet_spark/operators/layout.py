@@ -1,7 +1,9 @@
-"""Data-layout operators for scan pruning at scale: the Z-order key,
-bucketed and sharded writes, and small-file compaction. The clustered
-parquet write itself is the converter sink's ``sort_by``/``zorder_by``
-(:func:`csv2parquet_spark.converter.convert.write_parquet`).
+"""Data-layout operators for scan pruning at scale: the Z-order key and
+bucketed and sharded writes. The clustered parquet write itself is the
+converter sink's ``sort_by``/``zorder_by``
+(:func:`csv2parquet_spark.converter.convert.write_parquet`); small-file
+compaction is
+:func:`csv2parquet_spark.converter.incremental.compact_incremental`.
 
 The reference (`/root/reference/src/main.rs`) writes rows in input
 order; at 100 TB the LAYOUT of the output parquet decides how much of
@@ -198,78 +200,3 @@ def write_training_shards(
         n_bytes = sum(_os.path.getsize(f) for f in files)
         manifest.append({"shard": shard, "n_rows": n_rows, "n_bytes": n_bytes})
     return manifest
-
-
-def compaction_plan(
-    files: list[tuple[str, int]], target_bytes: int
-) -> list[list[str]]:
-    """Bin-pack part files into compaction groups of ~``target_bytes``
-    (first-fit-decreasing — within 11/9·OPT+1 of optimal bin count):
-    the small-files maintenance planner every lakehouse table needs
-    after streaming/incremental writes fragment it. Files larger than
-    the target get their own group (never split — rewriting a big file
-    buys nothing). Input is (path, size) metadata — model-sized (one
-    row per FILE); the planning is driver arithmetic, only the rewrite
-    touches data."""
-    groups: list[tuple[int, list[str]]] = []
-    for path, size in sorted(files, key=lambda ps: (-ps[1], ps[0])):
-        for i, (total, members) in enumerate(groups):
-            if total + size <= target_bytes:
-                groups[i] = (total + size, members + [path])
-                break
-        else:
-            groups.append((size, [path]))
-    return [members for _, members in groups]
-
-
-def compact_small_files(
-    spark,
-    in_dir: str,
-    out_dir: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Execute a compaction plan: read each planned group and write it
-    back as ONE file per group (row content preserved exactly; order
-    within a group follows the group's file order). Returns
-    {"n_input_files", "n_output_files", "plan"}.
-
-    Scale shape: metadata listing is O(files); each group is rewritten
-    by its own map-only ``coalesce(1)`` job reading only its own
-    members, one job after another — never a global shuffle of the
-    table."""
-    import os
-    import shutil
-
-    if os.path.realpath(out_dir) == os.path.realpath(in_dir):
-        # The lazily-planned group-0 read executes AFTER mode
-        # ("overwrite") has deleted the directory — in-place compaction
-        # would destroy the input before reading it (review r8).
-        raise ValueError(
-            "compact_small_files: out_dir must differ from in_dir "
-            "(write to a sibling dir, then swap)"
-        )
-    files = [
-        (os.path.join(in_dir, f), os.path.getsize(os.path.join(in_dir, f)))
-        for f in sorted(os.listdir(in_dir))
-        if f.endswith(".parquet")
-    ]
-    plan = compaction_plan(files, target_bytes)
-    if not plan:
-        # An empty plan must not leave a PREVIOUS compaction's files in
-        # out_dir while reporting n_output_files=0 (review r8).
-        if os.path.isdir(out_dir):
-            shutil.rmtree(out_dir)
-        os.makedirs(out_dir)
-        return {"n_input_files": 0, "n_output_files": 0, "plan": []}
-    for i, group in enumerate(plan):
-        (
-            spark.read.parquet(*group)
-            .coalesce(1)
-            .write.mode("overwrite" if i == 0 else "append")
-            .parquet(out_dir)
-        )
-    return {
-        "n_input_files": len(files),
-        "n_output_files": len(plan),
-        "plan": plan,
-    }

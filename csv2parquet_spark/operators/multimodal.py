@@ -1,74 +1,22 @@
 """Multimodal (image/audio/video) column plumbing (SURVEY.md §2.8).
 
-Payloads are opaque ``BinaryType`` columns with typed metadata. The
+Payloads are opaque ``BinaryType`` columns with typed metadata. Each
 decode / feature-extract step runs as an Arrow-batched ``mapInPandas``
 (the scalable shape: executor-side, batch-at-a-time, no driver
-round-trip). The actual codecs (PIL/ffmpeg/librosa) are NOT in this
-container, so ``_fake_decode`` produces deterministic metadata from the
-payload bytes — clearly marked; swap in a real codec by replacing that
-one function.
+round-trip). The codecs (PIL/ffmpeg/librosa) are NOT in this container,
+so the decoders parse real BMP / PNG / WAV / AVI bytes with the stdlib
+(``struct``, ``zlib``), and the ``synth_*`` payload builders make the
+deterministic fixture media the queries decode.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DECODE_SCHEMA = (
-    "doc_id bigint, payload_bytes int, width int, height int, channels int, format string"
-)
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, int, str]:
-    """STUB decode: deterministic pseudo-metadata from the content hash.
-
-    Replace with a real image decode (e.g. PIL.Image.open) when codecs
-    are available; the signature (bytes → width, height, channels,
-    format) is the contract.
-    """
-    h = hashlib.sha256(payload).digest()
-    width = 64 + h[0] % 192          # 64..255
-    height = 64 + h[1] % 192
-    channels = 1 + h[2] % 4          # 1..4
-    fmt = ("png", "jpeg", "webp", "tiff")[h[3] % 4]
-    return width, height, channels, fmt
-
-
-def decode_metadata(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
-    """Batch-decode binary payloads into typed metadata via mapInPandas.
-
-    Arrow batches stream through the Python worker; each batch is
-    processed vectorized-ish (a tight loop over the batch, not per-row
-    Python UDF serialization). Partitioning is preserved — no shuffle.
-    """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = [_fake_decode(p) for p in pdf[payload_col]]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "payload_bytes": [len(p) for p in pdf[payload_col]],
-                    "width": [m[0] for m in meta],
-                    "height": [m[1] for m in meta],
-                    "channels": [m[2] for m in meta],
-                    "format": [m[3] for m in meta],
-                }
-            )
-            yield out
-
-    return df.mapInPandas(decode_batches, schema=DECODE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# REAL decoders (no codec libs needed): BMP and canonical-WAV headers
-# parse with pure stdlib struct. These are not stubs — they read actual
-# bytes any BMP/WAV file carries; tests decode golden handcrafted files.
-# ---------------------------------------------------------------------------
 MEDIA_SCHEMA = (
     "doc_id bigint, format string, width int, height int, channels int, "
     "sample_rate int, duration_ms int, payload_bytes int"
@@ -260,110 +208,6 @@ def with_synth_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
         return ids.map(lambda i: synth_media_payload(int(i)))
 
     return df.select(F.col(id_col), _synth(F.col(id_col)).alias("payload"))
-
-
-FEATURE_DIM = 16
-FEATURE_SCHEMA = "doc_id bigint, feature array<float>"
-
-
-def extract_features(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """STUB feature extraction (payload → fixed-dim float vector) via
-    mapInPandas — the embedding-model stand-in. Deterministic fake: the
-    vector is the first ``FEATURE_DIM`` sha256 bytes scaled to [0, 1).
-    The Spark-side contract (binary in, ``array<float>`` out, Arrow
-    batches, no shuffle) is the real surface; swap the hash for a model
-    forward pass when the runtime has one.
-    """
-
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            vecs = [
-                (
-                    np.frombuffer(
-                        hashlib.sha256(p).digest()[:FEATURE_DIM], dtype=np.uint8
-                    ).astype("float32")
-                    / 256.0
-                )
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "feature": vecs})
-
-    return df.mapInPandas(feat_batches, schema=FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "doc_id bigint, width int, height int, "
-    "resized_width int, resized_height int, payload_dropped boolean"
-)
-
-
-def resize_metadata(
-    df: DataFrame,
-    target: int = 224,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """STUB resize: computes the aspect-preserving target dimensions
-    (shorter side → ``target``) from the decoded metadata and DROPS the
-    payload (the real implementation would re-encode; this container has
-    no codec — raising NotImplementedError there would kill the executor,
-    so the stub marks ``payload_dropped`` instead).
-    """
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = [_fake_decode(p) for p in pdf[payload_col]]
-            w = pd.Series([m[0] for m in meta])
-            h = pd.Series([m[1] for m in meta])
-            scale = target / pd.concat([w, h], axis=1).min(axis=1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "width": w,
-                    "height": h,
-                    "resized_width": (w * scale).round().astype("int32"),
-                    "resized_height": (h * scale).round().astype("int32"),
-                    "payload_dropped": True,
-                }
-            )
-
-    return df.mapInPandas(resize_batches, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_sha string"
-
-
-def sample_frames(
-    df: DataFrame,
-    every_nth: int = 8,
-    max_frames: int = 4,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """STUB video frame sampling: emits one row per sampled frame
-    (doc_id, frame_idx, frame content hash). The fake treats every
-    ``every_nth``-byte slice of the payload as a "frame"; a real ffmpeg
-    decode keeps the exact same fan-out shape (mapInPandas emitting more
-    rows than it consumes — a generator, no shuffle, no driver state).
-    """
-
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, shas = [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                n = min(max_frames, max(len(p) // every_nth, 1))
-                for i in range(n):
-                    frame = p[i * every_nth : (i + 1) * every_nth]
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    shas.append(hashlib.sha256(frame).hexdigest()[:16])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_sha": shas})
-
-    return df.mapInPandas(frame_batches, schema=FRAME_SCHEMA)
 
 
 def _mix64(x: int) -> int:

@@ -83,50 +83,6 @@ def topk_similar(
     return scored.orderBy(F.desc("sim"), id_col).limit(k)
 
 
-def lsh_candidate_pairs(
-    vectors: DataFrame,
-    num_planes: int = 4,
-    num_tables: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs sharing an LSH bucket in ≥1 of
-    ``num_tables`` hyperplane tables (seeds ``seed..seed+T-1``).
-
-    The multi-table union is the recall knob: a pair at cosine s shares
-    one table's bucket with probability (1-θ/π)^P, and is MISSED by all
-    T tables with probability (1-(1-θ/π)^P)^T. The self-join is keyed on
-    (table, bucket) — never on a data column, so a hot metadata value
-    cannot make it quadratic; bucket skew is bounded by the hyperplane
-    split and AQE skew-join handles residual imbalance. Only the narrow
-    (id, table, bucket) relation is shuffled — vectors stay out of the
-    T-fold explode."""
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _lsh_bucket_col(
-                    F.col(vec_col), _hyperplanes(num_planes, dim, seed + t)
-                ).alias("bucket"),
-            )
-            for t in range(num_tables)
-        ]
-    )
-    bk = vectors.select(F.col(id_col).alias("id"), F.explode(tables).alias("tb")).select(
-        "id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    )
-    a = bk.select(F.col("id").alias("id_a"), "tbl", "bucket")
-    b = bk.select(F.col("id").alias("id_b"), "tbl", "bucket")
-    return (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def _lsh_blas_candidates(
     vectors: DataFrame,
     threshold: float,
@@ -339,11 +295,12 @@ def pairwise_near_dups(
     """Embedding-cosine near-dup pairs: (id_a, id_b, sim ≥ threshold).
 
     With ``block_col=None`` (default — the scale path) candidates come
-    from :func:`lsh_candidate_pairs` and are verified with exact cosine,
-    so the contract is deterministic given the seeds: every pair that
-    shares ≥1 LSH bucket AND has cosine ≥ threshold. The join is keyed
-    on (table, bucket), never a data column — a hot label can't make it
-    quadratic (the round-1 weakness of the label-blocked variant).
+    from the LSH tables of :func:`_lsh_blas_candidates` and are verified
+    with exact cosine, so the contract is deterministic given the seeds:
+    every pair that shares ≥1 LSH bucket AND has cosine ≥ threshold. The
+    join is keyed on (table, bucket), never a data column — a hot label
+    can't make it quadratic (the round-1 weakness of the label-blocked
+    variant).
 
     ``block_col`` blocks on a metadata column instead — only sound when
     that column is known near-uniform AND near-dups can't cross blocks.
@@ -706,7 +663,7 @@ def knn_join(
         max_rows=max_query_rows,
         hint="brute-force batch kNN is corpus x queries; for large "
         "query sets use the IVF index (write_ivf_index/probe_ivf_index)"
-        " or LSH candidates (lsh_candidate_pairs) instead",
+        " or LSH buckets (lsh_topk) instead",
     )
     q = F.broadcast(
         queries.select(

@@ -968,82 +968,6 @@ def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r6: registry entry retired — superseded by the hash-proven REAL
-# multimodal ops (multimodal_resize_real / audio_features_real /
-# video_frame_sample_real / image_features_real); the plumbing stays
-# unit-tested in tests/test_operators.py without spending registry mass.
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payload → fixed-dim float feature vector via mapInPandas
-    (deterministic stub standing in for an embedding model forward
-    pass; the schema/batching contract is the tested surface)."""
-    from csv2parquet_spark.operators.multimodal import extract_features
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    feats = extract_features(d)
-    # Serialize the vector for the driver harness (its canonicalizer
-    # cannot hash list cells — the array_funcs2 r1 lesson); dim + a
-    # rounded digest keep the full contract observable.
-    return feats.select(
-        "doc_id",
-        F.size("feature").alias("feature_dim"),
-        F.concat_ws(
-            ",", F.transform("feature", lambda x: F.round(x.cast("double"), 4).cast("string"))
-        ).alias("feature_csv"),
-    )
-
-
-# r6: registry entry retired — superseded by the hash-proven REAL
-# multimodal ops (multimodal_resize_real / audio_features_real /
-# video_frame_sample_real / image_features_real); the plumbing stays
-# unit-tested in tests/test_operators.py without spending registry mass.
-def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize planning (shorter side → 224) over the
-    decoded metadata — codecless stub, real fan-in shape."""
-    from csv2parquet_spark.operators.multimodal import resize_metadata
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    return resize_metadata(d)
-
-
-# r6: registry entry retired — superseded by the hash-proven REAL
-# multimodal ops (multimodal_resize_real / audio_features_real /
-# video_frame_sample_real / image_features_real); the plumbing stays
-# unit-tested in tests/test_operators.py without spending registry mass.
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-frame sampling stub: mapInPandas emitting N rows per input
-    payload (the generator fan-out shape a real ffmpeg decode uses)."""
-    from csv2parquet_spark.operators.multimodal import sample_frames
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    return sample_frames(d)
-
-
-# r6: registry entry retired — superseded by the hash-proven REAL
-# multimodal ops (multimodal_resize_real / audio_features_real /
-# video_frame_sample_real / image_features_real); the plumbing stays
-# unit-tested in tests/test_operators.py without spending registry mass.
-def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode/feature-extract plumbing for binary media via mapInPandas.
-
-    The image/audio codecs aren't in this container (SURVEY §2.8), so the
-    decode is a deterministic fake (dimensions derived from the payload
-    hash); the Spark-side shape — Arrow batches in, typed metadata out —
-    is the real, tested surface.
-    """
-    from csv2parquet_spark.operators.multimodal import decode_metadata
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    return decode_metadata(d)
-
-
 @register(
     "multimodal_decode_real",
     oracle="""
@@ -1510,7 +1434,7 @@ def binary_stats_arrow(
     GPU handoff). Shares the Catalyst twin's oracle, so the API's
     round-trip fidelity is hash-proven, completing the Python
     execution matrix (pandas scalar/grouped/agg/map/cogroup/UDTF/
-    withState + Arrow map + Python DataSource).
+    withState + Arrow map).
     """
     import hashlib
 

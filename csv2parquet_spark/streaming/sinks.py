@@ -244,45 +244,3 @@ def streaming_upsert_to_parquet(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def streaming_corpus_ingest(
-    spark: SparkSession,
-    jsonl_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id bigint, text string, lang string, source string",
-):
-    """Continuous training-corpus ingestion — the streaming composition
-    of the batch hygiene pipeline: JSONL documents stream in, the
-    C4-style quality gate (operators/pipeline.quality_columns — pure
-    Catalyst, map-only, so it applies to a stream unchanged) drops
-    failing docs in-flight, and the md5(text) content fingerprint keys
-    the upsert snapshot — EXACT cross-batch dedup without a watermark
-    horizon (the snapshot anti-join replaces unbounded dedup state;
-    state cost is the touched-partition rewrite, not a store of every
-    key ever seen). Exactly-once via the checkpoint + versioned
-    manifest; replays no-op.
-
-    At scale: gate is map-only; the only non-map work is the per-batch
-    merge, which tracks batch size. Chunking/stats run batch-side over
-    the snapshot (read_snapshot) — the lakehouse-lite split of hot
-    ingest vs cold derivation."""
-    from csv2parquet_spark.operators.pipeline import quality_columns
-
-    cols = [c.split()[0] for c in schema.split(",")]
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(jsonl_dir)
-    )
-    gated = quality_columns(stream).filter(F.col("keep")).select(*cols)
-    # fp keys the dedup; keep="first" preserves the earliest-ingested
-    # copy across batches, and __seq = -doc_id makes the within-batch
-    # winner the lowest doc_id (deterministic, not partition-order).
-    keyed = gated.withColumn("fp", F.md5(F.col("text"))).withColumn(
-        "__seq", -F.col("doc_id")
-    )
-    return streaming_upsert_to_parquet(
-        spark, keyed, root, "fp", checkpoint_dir, keep="first"
-    )

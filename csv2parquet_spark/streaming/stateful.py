@@ -69,8 +69,8 @@ def user_running_totals(events: DataFrame) -> DataFrame:
 def transform_with_state_available() -> bool:
     """True iff the transformWithState wire protocol can run here: its
     state-server protocol needs ``google.protobuf``, which this
-    container does not ship (and installs are off-limits) — the same
-    gate-don't-crash policy as the multimodal codec stubs."""
+    container does not ship (and installs are off-limits), so the twin
+    is gated here instead of crashing."""
     try:
         import google.protobuf.descriptor  # noqa: F401
 

@@ -200,9 +200,10 @@ def streaming_jsonl_to_parquet(
     :func:`streaming_csv_to_parquet`): new JSON-lines files landing in
     ``jsonl_dir`` convert incrementally, exactly-once via the
     checkpoint. Streaming sources need an explicit schema — resolve one
-    upfront with ``converter.jsonl.read_jsonl`` / a schema file, exactly
-    like the batch path's frozen-schema discipline. Lines parse in the
-    batch scan's mode (FAILFAST), so a malformed line fails the query."""
+    upfront with ``read_input(spark, "jsonl", path).schema`` / a schema
+    file, exactly like the batch path's frozen-schema discipline. Lines
+    parse in the batch scan's mode (FAILFAST), so a malformed line fails
+    the query."""
     from csv2parquet_spark.converter.convert import ConvertOptions
 
     mode = ConvertOptions().parse_mode

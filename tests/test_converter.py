@@ -17,6 +17,7 @@ from csv2parquet_spark.converter import (
     ConvertOptions,
     arrow_json_to_struct,
     convert,
+    convert_input,
     infer_schema,
     struct_to_arrow_json,
 )
@@ -544,9 +545,7 @@ def test_jsonl_to_parquet_roundtrip(spark, tmp_path):
     src = tmp_path / "in.jsonl"
     src.write_text('{"i": 1, "s": "x"}\n{"i": 2, "s": "y"}\n')
     out = str(tmp_path / "out.parquet")
-    from csv2parquet_spark.converter import convert_jsonl
-
-    convert_jsonl(spark, str(src), out, ConvertOptions(single_file=True))
+    convert_input(spark, "jsonl", str(src), out, ConvertOptions(single_file=True))
     got = duckdb.sql(f"SELECT i, s FROM read_parquet('{out}') ORDER BY i").fetchall()
     assert got == [(1, "x"), (2, "y")]
 
@@ -601,8 +600,6 @@ def test_convert_jsonl_nested_and_dry(spark, tmp_path):
 
     import duckdb
 
-    from csv2parquet_spark.converter import convert_jsonl
-
     src = tmp_path / "docs.jsonl"
     src.write_text(
         '{"id": 1, "text": "hello", "meta": {"lang": "en", "score": 0.5}}\n'
@@ -612,15 +609,15 @@ def test_convert_jsonl_nested_and_dry(spark, tmp_path):
 
     # --dry: schema on stdout, banner on stderr, nothing written
     o, e = io.StringIO(), io.StringIO()
-    schema = convert_jsonl(
-        spark, str(src), out, ConvertOptions(dry=True), out=o, err=e
+    schema = convert_input(
+        spark, "jsonl", str(src), out, ConvertOptions(dry=True), out=o, err=e
     )
     assert e.getvalue().strip() == "Schema:"
     assert not os.path.exists(out)
     # printed schema parses back to the same StructType (Struct serde)
     assert arrow_json_to_struct(o.getvalue()) == schema
 
-    convert_jsonl(spark, str(src), out)
+    convert_input(spark, "jsonl", str(src), out)
     rows = duckdb.sql(
         f"SELECT id, text, meta.lang, meta.score FROM read_parquet('{out}') ORDER BY id"
     ).fetchall()
@@ -632,15 +629,14 @@ def test_convert_jsonl_sampled_inference_and_string_mode(spark, tmp_path):
     mirrors the CSV contract (no inference -> all columns string)."""
     import duckdb
 
-    from csv2parquet_spark.converter import convert_jsonl
-
     src = tmp_path / "mix.jsonl"
     # first line int-looking, second would widen to double
     src.write_text('{"v": 1}\n{"v": 2.5}\n')
     out = str(tmp_path / "mix.parquet")
 
-    schema = convert_jsonl(
+    schema = convert_input(
         spark,
+        "jsonl",
         str(src),
         out,
         ConvertOptions(max_read_records=1, parse_mode="PERMISSIVE"),
@@ -651,8 +647,9 @@ def test_convert_jsonl_sampled_inference_and_string_mode(spark, tmp_path):
     # (DuckDB sorts NULLs last)
     assert vals == [(1,), (None,)]
 
-    schema0 = convert_jsonl(
-        spark, str(src), str(tmp_path / "s.parquet"), ConvertOptions(max_read_records=0)
+    schema0 = convert_input(
+        spark, "jsonl", str(src), str(tmp_path / "s.parquet"),
+        ConvertOptions(max_read_records=0),
     )
     assert all(f.dataType == T.StringType() for f in schema0.fields)
     svals = duckdb.sql(
@@ -684,7 +681,6 @@ def test_jsonl_string_mode_names_pass_is_bounded(spark, tmp_path):
     Values still convert for ALL rows under the frozen schema."""
     import duckdb
 
-    from csv2parquet_spark.converter import convert_jsonl
     from csv2parquet_spark.converter.jsonl import _NAME_SAMPLE_LINES
 
     src = tmp_path / "big.jsonl"
@@ -695,7 +691,7 @@ def test_jsonl_string_mode_names_pass_is_bounded(spark, tmp_path):
         for i in range(n_extra):
             f.write('{"a": %d, "b": "y", "zzz_late": 1}\n' % i)
     out = str(tmp_path / "big.parquet")
-    schema = convert_jsonl(spark, str(src), out, ConvertOptions(max_read_records=0))
+    schema = convert_input(spark, "jsonl", str(src), out, ConvertOptions(max_read_records=0))
     assert [f.name for f in schema.fields] == ["a", "b"]
     assert all(f.dataType == T.StringType() for f in schema.fields)
     n = duckdb.sql(f"SELECT count(*) FROM read_parquet('{out}')").fetchone()[0]
@@ -813,11 +809,9 @@ def test_columnar_input_schema_modes(spark, tmp_path, sf_dir):
     file selects and casts columns, instead of both being ignored."""
     import duckdb
 
-    from csv2parquet_spark.converter.formats import convert_columnar
-
     src = f"{sf_dir}/nation.parquet"
     out0 = str(tmp_path / "strings.parquet")
-    convert_columnar(spark, src, out0, ConvertOptions(max_read_records=0), "parquet")
+    convert_input(spark, "parquet", src, out0, ConvertOptions(max_read_records=0))
     types = {
         r[0]: r[1]
         for r in duckdb.sql(f"DESCRIBE SELECT * FROM read_parquet('{out0}')").fetchall()
@@ -830,7 +824,7 @@ def test_columnar_input_schema_modes(spark, tmp_path, sf_dir):
         T.StructField("n_nationkey", T.StringType()),
     ])))
     out1 = str(tmp_path / "cast.parquet")
-    convert_columnar(spark, src, out1, ConvertOptions(schema_file=str(sf)), "parquet")
+    convert_input(spark, "parquet", src, out1, ConvertOptions(schema_file=str(sf)))
     con = duckdb.connect()
     got = con.execute(
         f"SELECT * FROM read_parquet('{out1}') ORDER BY n_nationkey::INT"
@@ -920,7 +914,6 @@ def test_convert_json_multiline_shapes(spark, tmp_path):
 
     import duckdb
 
-    from csv2parquet_spark.converter import ConvertOptions, convert_json
     from csv2parquet_spark.converter.cli import main as cli_main
 
     arr = tmp_path / "arr.json"
@@ -932,7 +925,9 @@ def test_convert_json_multiline_shapes(spark, tmp_path):
 
     # --dry: banner on stderr, schema on stdout, nothing written
     o, e = io.StringIO(), io.StringIO()
-    schema = convert_json(spark, str(arr), out, ConvertOptions(dry=True), out=o, err=e)
+    schema = convert_input(
+        spark, "json", str(arr), out, ConvertOptions(dry=True), out=o, err=e
+    )
     assert e.getvalue().strip() == "Schema:"
     assert not os.path.exists(out)
     assert arrow_json_to_struct(o.getvalue()) == schema
@@ -948,15 +943,15 @@ def test_convert_json_multiline_shapes(spark, tmp_path):
     single = tmp_path / "single.json"
     single.write_text('{\n  "id": 7,\n  "text": "solo"\n}\n')
     out2 = str(tmp_path / "single.parquet")
-    convert_json(spark, str(single), out2)
+    convert_input(spark, "json", str(single), out2)
     assert duckdb.sql(
         f"SELECT id, text FROM read_parquet('{out2}')"
     ).fetchall() == [(7, "solo")]
 
     # max_read_records=0 → every column lands as string (CSV parity)
     out3 = str(tmp_path / "arr0.parquet")
-    schema0 = convert_json(
-        spark, str(arr), out3, ConvertOptions(max_read_records=0)
+    schema0 = convert_input(
+        spark, "json", str(arr), out3, ConvertOptions(max_read_records=0)
     )
     assert all(f.dataType.typeName() == "string" for f in schema0.fields)
     assert duckdb.sql(
@@ -972,9 +967,7 @@ def test_convert_xml_roundtrip_and_dry(spark, tmp_path):
 
     import duckdb
 
-    from csv2parquet_spark.converter import ConvertOptions
     from csv2parquet_spark.converter.cli import main as cli_main
-    from csv2parquet_spark.converter.xmlsrc import convert_xml
 
     src = tmp_path / "recs.xml"
     src.write_text(
@@ -986,8 +979,8 @@ def test_convert_xml_roundtrip_and_dry(spark, tmp_path):
     out = str(tmp_path / "recs.parquet")
 
     o, e = io.StringIO(), io.StringIO()
-    schema = convert_xml(
-        spark, str(src), out, ConvertOptions(dry=True), out=o, err=e
+    schema = convert_input(
+        spark, "xml", str(src), out, ConvertOptions(dry=True), out=o, err=e
     )
     assert e.getvalue().strip() == "Schema:"
     assert not os.path.exists(out)
@@ -1006,14 +999,14 @@ def test_convert_xml_roundtrip_and_dry(spark, tmp_path):
 
     out0 = str(tmp_path / "recs0.parquet")
     with _pytest.warns(UserWarning, match="samples at"):
-        schema0 = convert_xml(
-            spark, str(src), out0, ConvertOptions(max_read_records=0)
+        schema0 = convert_input(
+            spark, "xml", str(src), out0, ConvertOptions(max_read_records=0)
         )
     assert schema0["id"].dataType.typeName() == "string"
 
 
 def test_convert_json_concatenated_objects_limitation(spark, tmp_path):
-    """Pinned LIMITATION (documented in convert_json): Spark's wholeFile
+    """Pinned LIMITATION (documented in jsonl.json_source): Spark's wholeFile
     JSON parser stops after the FIRST top-level value, silently — a
     file with concatenated multi-line objects converts to one row even
     in FAILFAST. Users needing that shape use JSONL (one per line) or
@@ -1021,12 +1014,10 @@ def test_convert_json_concatenated_objects_limitation(spark, tmp_path):
     values, this test will flag the semantics change."""
     import duckdb
 
-    from csv2parquet_spark.converter import convert_json
-
     src = tmp_path / "concat.json"
     src.write_text('{\n "id": 1\n}\n{\n "id": 2\n}\n')
     out = str(tmp_path / "concat.parquet")
-    convert_json(spark, str(src), out)
+    convert_input(spark, "json", str(src), out)
     assert duckdb.sql(f"SELECT id FROM read_parquet('{out}')").fetchall() == [(1,)]
 
 
@@ -2043,6 +2034,43 @@ def test_compact_single_batch_dataset(spark, tmp_path):
         f"FROM read_parquet('{out}/batch=*/*.parquet/*.parquet')"
     ).fetchone()
     assert got == (2, 3)
+
+
+def test_compact_keeps_ingest_writer_options(spark, tmp_path):
+    """Compaction rewrites with the writer options the ingest recorded
+    in the manifest: the compacted batch keeps the ingest's codec and
+    created_by, and its rows."""
+    import glob
+
+    from csv2parquet_spark.converter.incremental import (
+        compact_incremental,
+        convert_incremental,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.csv").write_text("k,v\n1,10\n2,20\n")
+    out = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest.json")
+    opts = ConvertOptions(compression="zstd", created_by="probe-writer")
+    convert_incremental(spark, str(src), out, manifest, opts)
+    assert json.load(open(manifest))["writer"]["compression"] == "zstd"
+    assert compact_incremental(spark, out, manifest).batch == 1
+
+    parts = glob.glob(f"{out}/batch=1/a.parquet/*.parquet")
+    assert parts
+    for part in parts:
+        md = pq.ParquetFile(part).metadata
+        assert md.created_by == "probe-writer"
+        assert {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        } == {"ZSTD"}
+    rows = duckdb.sql(
+        f"SELECT k, v FROM read_parquet('{out}/batch=1/a.parquet/*.parquet') ORDER BY k"
+    ).fetchall()
+    assert rows == [(1, 10), (2, 20)]
 
 
 # ---------------------------------------------------------------------------

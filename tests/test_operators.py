@@ -1,6 +1,6 @@
 """Unit tests for the LLM-pipeline operators: shingle edge cases,
 MinHash-LSH recall against exact Jaccard, SimHash properties, LSH top-k
-vs brute force, multimodal decode plumbing.
+vs brute force.
 """
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from csv2parquet_spark.operators import dedup as D
 from csv2parquet_spark.operators import similarity as S
-from csv2parquet_spark.operators.multimodal import decode_metadata
 from csv2parquet_spark.operators.text import shingles, tokens
 from csv2parquet_spark.tables import table
 
@@ -152,23 +151,6 @@ def test_exact_dedup_counts(spark):
     assert got == {1: 2, 3: 1}
 
 
-def test_multimodal_decode_shapes(spark):
-    df = spark.createDataFrame(
-        [(1, bytearray(b"payload-one")), (2, bytearray(b"p2"))],
-        "doc_id bigint, payload binary",
-    )
-    rows = {r.doc_id: r for r in decode_metadata(df).collect()}
-    assert rows[1].payload_bytes == 11
-    assert rows[2].payload_bytes == 2
-    for r in rows.values():
-        assert 64 <= r.width <= 255 and 64 <= r.height <= 255
-        assert 1 <= r.channels <= 4
-        assert r.format in {"png", "jpeg", "webp", "tiff"}
-    # deterministic across runs
-    again = {r.doc_id: r for r in decode_metadata(df).collect()}
-    assert {k: tuple(v) for k, v in rows.items()} == {k: tuple(v) for k, v in again.items()}
-
-
 def test_chunking_edges(spark):
     """Chunk grammar edge cases: empty text -> one empty chunk; text
     shorter than a chunk -> one chunk; exact-stride boundary."""
@@ -237,22 +219,27 @@ def test_ivf_index_probe_is_partition_pruned(spark, sf_dir, tmp_path):
 
 
 def test_compaction_reduces_file_count(spark, tmp_path, sf_dir):
-    """128 tiny part-files compact to one file per planned group, fewer
-    than the inputs; the rows survive."""
-    import os
+    """A batch fragmented into 128 tiny part files compacts into fewer
+    files, and the rows survive. The manifest predates the ``writer``
+    key, so compaction writes with the default batch options."""
+    import glob
+    import json
 
-    from csv2parquet_spark.operators.layout import compact_small_files
+    from csv2parquet_spark.converter.incremental import compact_incremental
 
-    src = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
+    out = tmp_path / "out"
+    stem = str(out / "batch=0" / "orders.parquet")
     base = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    base.repartition(128).write.mode("overwrite").parquet(src)
-    res = compact_small_files(spark, src, out, target_bytes=8 << 20)
-    assert res["n_input_files"] >= 128
-    written = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert len(written) == res["n_output_files"] == len(res["plan"])
-    assert res["n_output_files"] < res["n_input_files"]
-    back = spark.read.parquet(out)
+    base.repartition(128).write.mode("overwrite").parquet(stem)
+    manifest = tmp_path / "manifest.json"
+    manifest.write_text(json.dumps({"files": {}, "next_batch": 1}))
+    res = compact_incremental(spark, str(out), str(manifest))
+    assert res.batch == 1 and res.sources == ["orders"]
+    before = glob.glob(f"{stem}/*.parquet")
+    after = glob.glob(str(out / "batch=1" / "orders.parquet" / "*.parquet"))
+    assert len(before) == 128
+    assert 0 < len(after) < len(before)
+    back = spark.read.parquet(str(out / "batch=1" / "orders.parquet"))
     assert back.count() == base.count()
 
 
@@ -817,33 +804,6 @@ def test_mg_heavy_hitters_guarantees(spark):
     assert got == again
 
 
-def test_python_datasource_partitioned_and_deterministic(spark):
-    """The custom Spark 4 Python DataSource: (a) the planner creates
-    one task per declared partition (parallel generator scan, no
-    driver funnel), (b) content is partitioning-independent — 3-way and
-    8-way reads yield the identical corpus, the replayability contract
-    for generator sources."""
-    from csv2parquet_spark.sources import SyntheticDocsDataSource
-
-    spark.dataSource.register(SyntheticDocsDataSource)
-
-    def load(parts):
-        return (
-            spark.read.format("synthetic_docs")
-            .option("n_docs", 500)
-            .option("partitions", parts)
-            .load()
-        )
-
-    df8 = load(8)
-    assert df8.rdd.getNumPartitions() == 8
-    rows8 = sorted(map(tuple, df8.collect()))
-    rows3 = sorted(map(tuple, load(3).collect()))
-    assert len(rows8) == 500
-    assert rows8 == rows3
-    assert all(r[2] == len(r[1]) for r in rows8)
-
-
 def test_pq_adc_recall_against_exact(spark, sf_dir):
     """PQ-ADC top-10 must (a) re-rank with EXACT cosines (every
     reported score equals the brute-force score for that id), and (b)
@@ -1257,111 +1217,6 @@ def test_containment_pairs_directional_and_exact(spark):
     assert r.common == len(a & b)
     assert r.sz_a == len(a) and r.sz_b == len(b)
     assert r.containment == 1.0
-
-
-def test_compaction_plan_and_rewrite(spark, tmp_path):
-    """compaction_plan: FFD bin packing respects the target (no group
-    over target unless a single file already exceeds it), covers every
-    file exactly once; compact_small_files rewrites to one file per
-    group with row content preserved."""
-    from csv2parquet_spark.operators.layout import (
-        compact_small_files,
-        compaction_plan,
-    )
-
-    # synthetic metadata: sizes force interesting packing
-    files = [(f"f{i}", s) for i, s in enumerate([90, 60, 50, 40, 30, 10, 200])]
-    plan = compaction_plan(files, target_bytes=100)
-    flat = [p for g in plan for p in g]
-    assert sorted(flat) == sorted(p for p, _ in files)  # exact cover
-    sizes = dict(files)
-    for g in plan:
-        total = sum(sizes[p] for p in g)
-        assert total <= 100 or len(g) == 1  # oversized files go alone
-
-    # real rewrite: 8 tiny part files -> fewer files, same rows
-    src = str(tmp_path / "frag")
-    out = str(tmp_path / "compact")
-    spark.range(1000).withColumn("v", F.col("id") * 3).repartition(8).write.parquet(src)
-    res = compact_small_files(spark, src, out, target_bytes=1 << 30)
-    assert res["n_input_files"] == 8
-    import os
-
-    out_files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert len(out_files) == res["n_output_files"] == 1
-    a = sorted(r.id for r in spark.read.parquet(src).collect())
-    b = sorted(r.id for r in spark.read.parquet(out).collect())
-    assert a == b
-
-
-def test_python_datasource_jsonl_sink_batch(spark, tmp_path):
-    """The jsonl_audit Python SINK: one JSONL file per partition, a
-    _MANIFEST.json naming exactly the committed files with the total
-    row count, and content round-trips."""
-    import json
-    import os
-
-    from csv2parquet_spark.sources.pysource import JsonlAuditDataSource
-
-    spark.dataSource.register(JsonlAuditDataSource)
-    out = str(tmp_path / "audit")
-    df = spark.range(100).withColumn("v", (F.col("id") * 7).cast("string")).repartition(4)
-    df.write.format("jsonl_audit").option("path", out).mode("append").save()
-
-    manifest = json.load(open(os.path.join(out, "_MANIFEST.json")))
-    files = [f for f in os.listdir(out) if f.endswith(".jsonl")]
-    assert sorted(files) == manifest["files"]
-    assert len(files) == 4 and manifest["n_rows"] == 100
-    rows = []
-    for f in files:
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert sorted(int(r["id"]) for r in rows) == list(range(100))
-    assert all(r["v"] == str(int(r["id"]) * 7) for r in rows)
-
-
-def test_python_datasource_jsonl_sink_streaming(spark, tmp_path):
-    """Streaming variant: per-batch manifests keyed by batchId (the
-    idempotent-replay hook), rows flowing from the synthetic events
-    stream reader — a fully-Python source→sink streaming pipeline."""
-    import json
-    import os
-
-    from csv2parquet_spark.sources.pysource import (
-        JsonlAuditDataSource,
-        SyntheticEventsStreamDataSource,
-    )
-
-    spark.dataSource.register(SyntheticEventsStreamDataSource)
-    spark.dataSource.register(JsonlAuditDataSource)
-    out = str(tmp_path / "stream_audit")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        spark.readStream.format("synthetic_events_stream")
-        .option("rows_per_batch", 20)
-        .load()
-        .writeStream.format("jsonl_audit")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    manifests = sorted(f for f in os.listdir(out) if f.startswith("_MANIFEST-"))
-    assert manifests, os.listdir(out)
-    total = 0
-    for m in manifests:
-        mm = json.load(open(os.path.join(out, m)))
-        for f in mm["files"]:
-            assert os.path.exists(os.path.join(out, f))
-        total += mm["n_rows"]
-    assert total > 0
-    # every row in committed files is valid JSON with the reader schema
-    any_file = json.load(open(os.path.join(out, manifests[0])))["files"]
-    if any_file:
-        with open(os.path.join(out, any_file[0])) as fh:
-            rec = json.loads(fh.readline())
-        assert {"seq", "user_id", "value"} <= set(rec)
 
 
 def test_global_running_max_matches_window(spark):
@@ -2449,38 +2304,6 @@ def test_graph_ops_empty_edges(spark):
     assert pagerank(e).count() == 0
     assert pagerank_fixed(e).count() == 0
     assert bfs_hops(e, None).count() == 0
-
-
-def test_compact_small_files_guards(spark, tmp_path):
-    """In-place compaction (out_dir == in_dir) would delete the input
-    before the lazy read executes — refused; an empty plan clears stale
-    output instead of leaving it under a 0-files report."""
-    from csv2parquet_spark.operators.layout import compact_small_files
-
-    d = tmp_path / "data"
-    d.mkdir()
-    spark.range(10).coalesce(1).write.mode("overwrite").parquet(str(d / "a.parquet"))
-    # parquet dirs aren't *.parquet FILES under in_dir listing — build
-    # single files via shutil move
-    import glob as _glob
-    import shutil
-
-    part = _glob.glob(str(d / "a.parquet" / "part-*.parquet"))[0]
-    shutil.move(part, str(d / "f1.parquet"))
-    shutil.rmtree(str(d / "a.parquet"))
-
-    with pytest.raises(ValueError, match="out_dir must differ"):
-        compact_small_files(spark, str(d), str(d))
-
-    out = tmp_path / "out"
-    res = compact_small_files(spark, str(d), str(out))
-    assert res["n_input_files"] == 1 and res["n_output_files"] == 1
-    # now empty input: prior output must be cleared, not survive
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    res = compact_small_files(spark, str(empty), str(out))
-    assert res == {"n_input_files": 0, "n_output_files": 0, "plan": []}
-    assert not _glob.glob(str(out / "*.parquet"))
 
 
 # ---------------------------------------------------------------------------

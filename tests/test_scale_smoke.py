@@ -8,8 +8,8 @@ Corpus design matters here: the near-dup fixture must be HIGH-entropy
 (md5-derived tokens, essentially zero cross-doc overlap) with PLANTED
 duplicates, because a low-entropy corpus makes the near-dup OUTPUT
 itself quadratic — any implementation, however well blocked, drowns in
-its own (correct) result set. A first draft of this file used the
-21-word `synthetic_docs` vocabulary at 100k docs and did exactly that.
+its own (correct) result set. A first draft of this file used a
+21-word synthetic vocabulary at 100k docs and did exactly that.
 """
 
 from __future__ import annotations

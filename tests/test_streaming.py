@@ -580,50 +580,6 @@ def test_transform_with_state_matches_apply_in_pandas_with_state(spark, sf_dir):
         assert abs(fr.total_value - wr.total_value) < 1e-6, uid
 
 
-def test_streaming_corpus_ingest_gates_and_dedups(spark, tmp_path):
-    """Continuous corpus ingestion: the quality gate drops a failing doc
-    in-flight, and the content-fingerprint upsert dedups an exact
-    duplicate arriving in a LATER batch — the snapshot ends with one
-    copy of each distinct passing document."""
-    import json
-
-    from csv2parquet_spark.streaming import read_snapshot
-    from csv2parquet_spark.streaming.sinks import streaming_corpus_ingest
-
-    good = (
-        "the quick brown fox jumps over the lazy dog and then runs far "
-        "away with many other small animals near the old river bank"
-    )
-    good2 = (
-        "a short story about the weather and the seasons that people "
-        "like to read when the evening comes and the house gets quiet"
-    )
-    bad = "too few words here"
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "b0.jsonl").write_text(
-        json.dumps({"doc_id": 1, "text": good, "lang": "en", "source": "s1"})
-        + "\n"
-        + json.dumps({"doc_id": 2, "text": bad, "lang": "en", "source": "s1"})
-        + "\n"
-    )
-    (src / "b1.jsonl").write_text(
-        json.dumps({"doc_id": 3, "text": good, "lang": "en", "source": "s2"})
-        + "\n"
-        + json.dumps({"doc_id": 4, "text": good2, "lang": "en", "source": "s2"})
-        + "\n"
-    )
-    root = str(tmp_path / "corpus")
-    q = streaming_corpus_ingest(
-        spark, str(src), root, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    snap = read_snapshot(spark, root)
-    rows = {r.doc_id: r.text for r in snap.collect()}
-    assert set(rows) == {1, 4}  # bad gated out; doc 3 deduped against 1
-    assert snap.select("fp").distinct().count() == 2
-
-
 def test_static_enrich_stream_equals_batch(spark, sf_dir):
     """Stream-static broadcast join: replaying events through readStream
     with the static customer->nation dim must equal the batch twin
@@ -728,54 +684,6 @@ def test_interval_join_outer_emits_null_rows_on_watermark(spark, tmp_path):
     batch = spark.read.schema(_EV_SCHEMA).json(src)
     want = {(r.click_id, r.purchase_id) for r in build(batch).collect()}
     assert got == want
-
-
-def test_python_stream_datasource_exactly_once(spark, tmp_path):
-    """The Spark 4 Python STREAMING DataSource: micro-batches advance
-    by declared offsets; over a bounded run every sequence number
-    arrives EXACTLY once (no dups, no gaps — the offset/commit
-    contract), across multiple micro-batches and parallel partitions
-    per batch."""
-    from csv2parquet_spark.sources import SyntheticEventsStreamDataSource
-    from csv2parquet_spark.streaming import run_to_memory
-
-    spark.dataSource.register(SyntheticEventsStreamDataSource)
-    stream = (
-        spark.readStream.format("synthetic_events_stream")
-        .option("rows_per_batch", 100)
-        .option("max_rows", 350)
-        .option("partitions", 4)
-        .load()
-    )
-    name, q = run_to_memory(stream, "append")
-    try:
-        q.processAllAvailable()
-        n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    finally:
-        q.stop()
-    rows = spark.sql(f"SELECT seq FROM {name}").collect()
-    seqs = sorted(r.seq for r in rows)
-    assert seqs == list(range(350)), "dup/gap in streamed sequence"
-    assert n_batches >= 3
-
-
-def test_python_stream_datasource_restart_monotonic_offsets():
-    """Checkpoint-recovery contract (unit level): a FRESH reader whose
-    in-memory counter restarted at 0 must never announce a latestOffset
-    below a range the engine already planned or committed from the WAL
-    — otherwise the next batch range inverts and rows re-emit once the
-    counter climbs past the recovered start."""
-    from csv2parquet_spark.sources.pysource import _StreamReader
-
-    r = _StreamReader({"rows_per_batch": 100, "max_rows": 1000})
-    # Recovery replay: engine re-plans the committed range from the WAL.
-    r.partitions({"offset": 200}, {"offset": 300})
-    assert r.latestOffset()["offset"] >= 300 + 100 - 100  # never below 300
-    assert r.latestOffset()["offset"] == 500  # advances monotonically
-
-    r2 = _StreamReader({"rows_per_batch": 100, "max_rows": 1000})
-    r2.commit({"offset": 400})  # recovery path that only re-commits
-    assert r2.latestOffset()["offset"] == 500
 
 
 def test_trending_topk_stream_plus_foreachbatch_equals_batch(spark, sf_dir):
@@ -1081,8 +989,7 @@ def test_stream_follows_incremental_converter_batches(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round-8 review fixes: NULL partitions, gapped-version GC, committed
-# restart, jsonl_audit overwrite
+# Round-8 review fixes: NULL partitions, gapped-version GC
 # ---------------------------------------------------------------------------
 
 
@@ -1131,82 +1038,3 @@ def test_snapshot_gc_keeps_predecessor_with_gapped_versions(spark, tmp_path):
     assert not os.path.isdir(os.path.join(root, "v3"))
     assert os.path.isdir(os.path.join(root, "v9"))
     assert os.path.isdir(os.path.join(root, "v15"))
-
-
-def test_python_stream_datasource_committed_restart_exactly_once(spark, tmp_path):
-    """END-TO-END committed-restart: run the stream to completion with a
-    file sink + checkpoint, stop, restart with a higher max_rows (fresh
-    reader instance, in-memory counter back at 0). Every sequence
-    number arrives exactly once across both runs — the offset-clamping
-    recovery path proven at the unit level holds under the real
-    engine's restart protocol."""
-    from csv2parquet_spark.sources import SyntheticEventsStreamDataSource
-
-    spark.dataSource.register(SyntheticEventsStreamDataSource)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run(max_rows):
-        stream = (
-            spark.readStream.format("synthetic_events_stream")
-            .option("rows_per_batch", 100)
-            .option("max_rows", max_rows)
-            .option("partitions", 4)
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run(300)
-    assert spark.read.parquet(out).count() == 300
-    run(600)
-    seqs = sorted(r.seq for r in spark.read.parquet(out).collect())
-    assert seqs == list(range(600)), "dup/gap across committed restart"
-
-
-def test_jsonl_audit_overwrite_clears_prior_parts(spark, tmp_path):
-    """mode('overwrite') must remove prior part files at commit so the
-    manifest view and a directory-glob view agree."""
-    import glob as _glob
-    import json as _json
-
-    from csv2parquet_spark.sources import JsonlAuditDataSource
-
-    spark.dataSource.register(JsonlAuditDataSource)
-    path = str(tmp_path / "audit")
-    spark.range(10).write.format("jsonl_audit").option("path", path).mode(
-        "append"
-    ).save()
-    first = set(_glob.glob(os.path.join(path, "part-*.jsonl")))
-    assert first
-    spark.range(5).write.format("jsonl_audit").option("path", path).mode(
-        "overwrite"
-    ).save()
-    after = _glob.glob(os.path.join(path, "part-*.jsonl"))
-    assert not (set(after) & first)  # old parts gone
-    with open(os.path.join(path, "_MANIFEST.json")) as f:
-        manifest = _json.load(f)
-    assert manifest["n_rows"] == 5
-    assert sorted(os.path.basename(p) for p in after) == manifest["files"]
-    total = sum(
-        1 for p in after for _ in open(p)
-    )
-    assert total == 5  # glob view == manifest view
-
-
-def test_synthetic_docs_empty_corpus(spark):
-    """n_docs=0 is a legal empty corpus, not a plan-time range() crash."""
-    from csv2parquet_spark.sources import SyntheticDocsDataSource
-
-    spark.dataSource.register(SyntheticDocsDataSource)
-    df = (
-        spark.read.format("synthetic_docs").option("n_docs", 0).load()
-    )
-    assert df.count() == 0
