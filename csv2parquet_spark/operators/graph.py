@@ -341,7 +341,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    pre_partitioned: bool = False,
     ckpt_every: int = 1,
     symmetric: bool = False,
 ) -> DataFrame:
@@ -364,16 +363,14 @@ def label_propagation(
     candidate labels, never the edge payload; same Pregel cost model
     as :func:`pagerank`.
     """
-    # Partition the edge relation on the superstep JOIN key (dst) once —
-    # localCheckpoint preserves outputPartitioning, so every superstep's
-    # join exchanges only the (vertex, label) state, never the edges.
-    # ``pre_partitioned`` skips the exchange when the caller's edge plan
-    # already emits hash(dst) (copurchase_edges(partition_on="dst")).
+    # The edge relation is checkpointed in the layout the caller built:
+    # localCheckpoint preserves outputPartitioning, so edges that arrive
+    # hash(dst)-partitioned (copurchase_edges(partition_on="dst")) make
+    # every superstep's join exchange only the (vertex, label) state,
+    # never the edges.
     e = edges.select(
         _named(src, "src"), _named(dst, "dst"), _named(weight, "w")
     )
-    if not pre_partitioned:
-        e = e.repartition("dst")
     # Partition-preserving checkpoint (r12): the plain localCheckpoint
     # recorded UnknownPartitioning under AQE, so supersteps 2..n each
     # re-exchanged the full edge relation (plans/r11/lpa_*, Exchange
@@ -454,7 +451,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     ckpt_every: int = 1,
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """Breadth-first hop distances from ``source`` over a directed edge
     list, ``n_iter`` synchronous relaxation supersteps — returns
@@ -479,15 +475,12 @@ def bfs_hops(
     scale. Identical results for any ckpt_every since min-relaxation
     is a CRDT merge.
     """
-    # Partitioned on the superstep join key (src) once; the checkpoint
-    # preserves the partitioning so only the distance state exchanges
-    # per round. ``pre_partitioned`` skips the exchange when the edge
-    # plan already emits hash(src).
+    # The checkpoint preserves the caller's layout: edges that arrive
+    # hash(src)-partitioned (copurchase_edges(partition_on="src")) make
+    # only the distance state exchange per round.
     from pyspark.sql import Observation
 
     e = edges.select(_named(src, "src"), _named(dst, "dst"))
-    if not pre_partitioned:
-        e = e.repartition("src")
     # Partition-preserving checkpoint (r12, same fix as
     # label_propagation): keep hash(src) recorded so each relaxation's
     # state join moves only the (vertex, distance) side. The default

@@ -376,48 +376,21 @@ RESIZE_REAL_SCHEMA = (
 
 def resize_images(
     df: DataFrame,
-    target_w: int | None = None,
-    target_h: int | None = None,
+    target_w_col: str,
+    target_h_col: str,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    target_w_col: str | None = None,
-    target_h_col: str | None = None,
 ) -> DataFrame:
     """REAL image resize for 24-bpp BMP payloads (nearest-neighbor,
     pixel-center sampling): decode the actual pixel grid, resample to
-    the target, re-encode a valid BMP. Targets are either one constant
-    (target_w/target_h) or PER-ROW integer columns (target_w_col/
-    target_h_col — the dataloader shape, where each image carries its
-    own bucketed resolution). This replaces the resize STUB for the one
-    format this container can decode without external codecs — the
-    mapInPandas shape (Arrow batches, map-only, no shuffle) is exactly
-    what a PIL/ffmpeg-backed kernel drops into. Non-BMP / corrupt
-    payloads are dropped (codec gate)."""
+    the target, re-encode a valid BMP. Targets are PER-ROW integer
+    columns (target_w_col/target_h_col — the dataloader shape, where
+    each image carries its own bucketed resolution). This replaces the
+    resize STUB for the one format this container can decode without
+    external codecs — the mapInPandas shape (Arrow batches, map-only,
+    no shuffle) is exactly what a PIL/ffmpeg-backed kernel drops into.
+    Non-BMP / corrupt payloads are dropped (codec gate)."""
     import numpy as np
-
-    per_row = target_w_col is not None
-    # Validate the target mode DRIVER-side: inconsistent/absent targets
-    # otherwise surface as per-task TypeErrors deep in the executor or
-    # a baffling analysis error from a None in the select list
-    # (review r8).
-    if per_row != (target_h_col is not None):
-        raise ValueError(
-            "resize_images: target_w_col and target_h_col must be "
-            "given together"
-        )
-    if per_row and (target_w is not None or target_h is not None):
-        raise ValueError(
-            "resize_images: constant targets and per-row target "
-            "columns are mutually exclusive"
-        )
-    if not per_row and (target_w is None or target_h is None):
-        raise ValueError(
-            "resize_images: give either constant target_w AND target_h "
-            "or per-row target_w_col AND target_h_col"
-        )
-    cols = [id_col, payload_col] + (
-        [target_w_col, target_h_col] if per_row else []
-    )
 
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # pixel-center nearest index vectors, keyed (src_dim, dst_dim)
@@ -432,12 +405,8 @@ def resize_images(
             return v
 
         for pdf in batches:
-            if per_row:
-                tws = pdf[target_w_col].astype(int)
-                ths = pdf[target_h_col].astype(int)
-            else:
-                tws = [target_w] * len(pdf)
-                ths = [target_h] * len(pdf)
+            tws = pdf[target_w_col].astype(int)
+            ths = pdf[target_h_col].astype(int)
             ids, payloads, ows, ohs = [], [], [], []
             for i, p, tw, th in zip(pdf[id_col], pdf[payload_col], tws, ths):
                 parsed = _parse_bmp24(bytes(p))
@@ -460,7 +429,9 @@ def resize_images(
                     }
                 )
 
-    return df.select(*cols).mapInPandas(resize_batches, RESIZE_REAL_SCHEMA)
+    return df.select(id_col, payload_col, target_w_col, target_h_col).mapInPandas(
+        resize_batches, RESIZE_REAL_SCHEMA
+    )
 
 
 AHASH_SCHEMA = "doc_id bigint, ahash bigint, bands array<int>"

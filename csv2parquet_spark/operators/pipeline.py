@@ -53,21 +53,18 @@ def decontaminate(
     train: DataFrame,
     eval_df: DataFrame,
     k: int = 5,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: train documents sharing at least one
     k-token shingle with the eval corpus → (doc_id, n_shared).
 
-    The eval shingle-key set is distinct'd and (by default) broadcast —
+    The eval shingle-key set is distinct'd and broadcast —
     the standard production shape: eval suites are MBs while the train
     corpus is TBs, so contamination checking must not shuffle the
     corpus. The train side explodes to (doc_id, h) and inner-joins the
     broadcast set map-side; the only shuffle is the final per-doc count
     over hit rows (a tiny fraction of the corpus).
     """
-    ev = shingle_keys(eval_df, k=k).select("h").distinct()
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = F.broadcast(shingle_keys(eval_df, k=k).select("h").distinct())
     hits = shingle_keys(train, k=k).join(ev, "h")
     return hits.groupBy("doc_id").agg(F.count_distinct("h").alias("n_shared"))
 

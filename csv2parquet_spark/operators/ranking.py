@@ -259,20 +259,16 @@ def global_running_max(
     keys: list[str],
     value_col: str,
     out_col: str = "run_max",
-    exclusive: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Attach the global running MAX of ``value_col`` in ``keys`` order
-    (a total order) — the scale-safe twin of
-    ``max(v) OVER (ORDER BY keys ROWS UNBOUNDED PRECEDING)``, same
-    two-pass shape as :func:`global_cumsum`: range-partitioned parallel
-    sort, P per-partition maxima to the driver, broadcast exclusive
-    prefix maxima, map-only local running max. No single-partition
-    stage anywhere.
-
-    ``exclusive=True`` gives the prefix max over STRICTLY PRECEDING
-    rows (NULL on the globally first row) — the dominance/skyline
-    frame ``ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING``.
+    """Attach the global running MAX of ``value_col`` over the STRICTLY
+    PRECEDING rows in ``keys`` order (a total order; NULL on the globally
+    first row) — the scale-safe twin of the dominance/skyline frame
+    ``max(v) OVER (ORDER BY keys ROWS BETWEEN UNBOUNDED PRECEDING AND
+    1 PRECEDING)``, same two-pass shape as :func:`global_cumsum`:
+    range-partitioned parallel sort, P per-partition maxima to the
+    driver, broadcast exclusive prefix maxima, map-only local running
+    max. No single-partition stage anywhere.
     """
     import numpy as np
     import pandas as pd
@@ -325,17 +321,13 @@ def global_running_max(
         for pdf in batches:
             v = pdf[value_col].to_numpy(dtype=np.int64)
             inc = np.maximum.accumulate(v) if len(v) else v
-            if exclusive:
-                out = np.empty(len(v), dtype=object)
-                if len(v):
-                    out[0] = carry
-                    prev = inc[:-1]
-                    if carry is not None:
-                        prev = np.maximum(prev, carry)
-                    out[1:] = prev
-            else:
-                out = np.maximum(inc, carry) if carry is not None else inc
+            out = np.empty(len(v), dtype=object)
             if len(v):
+                out[0] = carry
+                prev = inc[:-1]
+                if carry is not None:
+                    prev = np.maximum(prev, carry)
+                out[1:] = prev
                 carry = int(inc[-1]) if carry is None else max(carry, int(inc[-1]))
             pdf = pdf.copy()
             pdf[out_col] = pd.array(out, dtype="Int64")

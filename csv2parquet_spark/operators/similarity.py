@@ -282,7 +282,6 @@ def _lsh_blas_candidates(
 def pairwise_near_dups(
     vectors: DataFrame,
     threshold: float = 0.95,
-    block_col: str | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     num_planes: int = 4,
@@ -294,16 +293,11 @@ def pairwise_near_dups(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: (id_a, id_b, sim ≥ threshold).
 
-    With ``block_col=None`` (default — the scale path) candidates come
-    from the LSH tables of :func:`_lsh_blas_candidates` and are verified
-    with exact cosine, so the contract is deterministic given the seeds:
-    every pair that shares ≥1 LSH bucket AND has cosine ≥ threshold. The
-    join is keyed on (table, bucket), never a data column — a hot label
-    can't make it quadratic (the round-1 weakness of the label-blocked
-    variant).
-
-    ``block_col`` blocks on a metadata column instead — only sound when
-    that column is known near-uniform AND near-dups can't cross blocks.
+    Candidates come from the LSH tables of :func:`_lsh_blas_candidates`
+    and are verified with exact cosine, so the contract is deterministic
+    given the seeds: every pair that shares ≥1 LSH bucket AND has cosine
+    ≥ threshold. The join is keyed on (table, bucket), never a data
+    column — a hot label can't make it quadratic.
 
     ``on_null="skip"`` drops NULL-``vec_col`` rows before signatures
     are computed, counting them via an Observation (null_policy.py);
@@ -319,30 +313,17 @@ def pairwise_near_dups(
         F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("nrm"),  # once per vector, not per pair
     )
-    if block_col is None:
-        cand = _lsh_blas_candidates(
-            vectors,
-            threshold,
-            num_planes,
-            num_tables,
-            dim,
-            vec_col,
-            id_col,
-            seed,
-            bucket_cap=bucket_cap,
-        )
-    else:
-        blocks = vectors.select(
-            F.col(id_col).alias("id"), F.col(block_col).alias("blk")
-        )
-        a = blocks.select(F.col("id").alias("id_a"), "blk")
-        b = blocks.select(F.col("id").alias("id_b"), "blk")
-        cand = (
-            a.join(b, "blk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+    cand = _lsh_blas_candidates(
+        vectors,
+        threshold,
+        num_planes,
+        num_tables,
+        dim,
+        vec_col,
+        id_col,
+        seed,
+        bucket_cap=bucket_cap,
+    )
     return (
         cand.join(
             withn.select(
@@ -614,7 +595,6 @@ def knn_join(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     qid_col: str = "query_id",
-    exclude_self: bool = True,
     query_cols: list[str] | None = None,
     pair_filter: Column | None = None,
     max_query_rows: int = 100_000,
@@ -622,7 +602,7 @@ def knn_join(
     """Batch kNN join: exact top-k corpus neighbors for EVERY query row
     at once — the production retrieval shape (one pass for a whole query
     batch, not one job per query). Returns (query_id, vec_id, sim,
-    knn_rank).
+    knn_rank). A query row never matches the corpus row of its own id.
 
     Scale design: queries broadcast (with norms precomputed); scoring is
     map-side over the corpus scan. The per-query top-k is a rank-limited
@@ -673,9 +653,11 @@ def knn_join(
             *[F.col(c).alias(f"__q_{c}") for c in (query_cols or [])],
         )
     )
-    scored = vectors.withColumn("__vn", norm(F.col(vec_col))).crossJoin(q)
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(qid_col))
+    scored = (
+        vectors.withColumn("__vn", norm(F.col(vec_col)))
+        .crossJoin(q)
+        .filter(F.col(id_col) != F.col(qid_col))
+    )
     if pair_filter is not None:
         scored = scored.filter(pair_filter)
     scored = scored.select(

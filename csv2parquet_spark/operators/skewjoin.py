@@ -37,9 +37,7 @@ from pyspark.sql import functions as F
 _SALT = "__salt"
 
 
-def _check(big: DataFrame, small: DataFrame, key: str | list[str], how: str) -> list[str]:
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
+def _check(big: DataFrame, small: DataFrame, key: str | list[str]) -> list[str]:
     if _SALT in big.columns or _SALT in small.columns:
         raise ValueError(f"column {_SALT!r} already present")
     return [key] if isinstance(key, str) else list(key)
@@ -50,12 +48,10 @@ def salted_join(
     small: DataFrame,
     key: str | list[str],
     r: int = 16,
-    how: str = "inner",
     salt_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Blanket ``r``-way salted equi join of ``big`` ⋈ ``small`` on
-    ``key``. Supported ``how``: inner / left (the directions where the
-    replicated side is the lookup side).
+    """Blanket ``r``-way salted inner equi join of ``big`` ⋈ ``small``
+    on ``key``.
 
     The salt hashes ``salt_cols`` (default: every big-side column), so
     it is stable across task retries (any salt value is CORRECT — the
@@ -67,7 +63,7 @@ def salted_join(
     dedup/count-collapse duplicates upstream (their join results are
     identical anyway).
     """
-    keys = _check(big, small, key, how)
+    keys = _check(big, small, key)
     b = big.withColumn(
         _SALT,
         F.pmod(
@@ -78,7 +74,7 @@ def salted_join(
     s = small.withColumn(
         _SALT, F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
     ).withColumn(_SALT, F.col(_SALT).cast("int"))
-    return b.join(s, [*keys, _SALT], how).drop(_SALT)
+    return b.join(s, [*keys, _SALT]).drop(_SALT)
 
 
 def salted_join_hot(
@@ -87,12 +83,11 @@ def salted_join_hot(
     key: str | list[str],
     r: int = 16,
     hot_threshold: int = 100_000,
-    how: str = "inner",
     salt_cols: list[str] | None = None,
 ) -> DataFrame:
     """Hot-key-only salted join: detect keys with more than
     ``hot_threshold`` big-side rows, salt ONLY those, plain-join the
-    rest, union. Result-identical to ``big.join(small, key, how)``.
+    rest, union. Result-identical to ``big.join(small, key)``.
 
     Cost: one partial-aggregated count over the big side's key columns
     (the detection scan), a broadcast of the hot-key set (bounded by
@@ -100,22 +95,20 @@ def salted_join_hot(
     for hot keys. With no hot keys the salted branch is empty and the
     plan degenerates to the plain join plus a cheap empty leg.
     """
-    keys = _check(big, small, key, how)
+    keys = _check(big, small, key)
     # NULL join keys are their own heavy hitter in real data (unknown
     # users/ids): they match NOTHING in SQL join semantics, yet a
     # shuffled join still hashes them all onto the one NULL partition —
     # and the semi/anti hot split can't route them (NULL fails the semi
     # match), so the straggler the function exists to remove survived
-    # (review r8). Route them around the join entirely: inner drops
-    # them; left emits them against an empty broadcast side (map-only,
-    # no shuffle).
+    # (review r8). Route them around the join entirely: they match
+    # nothing, so the inner join drops them before any shuffle.
     import functools
     import operator
 
     any_null = functools.reduce(
         operator.or_, [F.col(k).isNull() for k in keys]
     )
-    bn = big.filter(any_null)
     big = big.filter(~any_null)
     hot = (
         big.groupBy(*keys)
@@ -126,10 +119,6 @@ def salted_join_hot(
     bh = big.join(F.broadcast(hot), keys, "left_semi")
     bc = big.join(F.broadcast(hot), keys, "left_anti")
     sh = small.join(F.broadcast(hot), keys, "left_semi")
-    hot_part = salted_join(bh, sh, keys, r=r, how=how, salt_cols=salt_cols)
-    cold_part = bc.join(small, keys, how)
-    out = hot_part.unionByName(cold_part)
-    if how == "left":
-        null_part = bn.join(F.broadcast(small.limit(0)), keys, "left")
-        out = out.unionByName(null_part)
-    return out
+    hot_part = salted_join(bh, sh, keys, r=r, salt_cols=salt_cols)
+    cold_part = bc.join(small, keys)
+    return hot_part.unionByName(cold_part)

@@ -15,7 +15,6 @@ def grid_radius_join(
     left: DataFrame,
     right: DataFrame,
     radius: int,
-    cell: int | None = None,
     left_cols: tuple[str, str, str] = ("id_l", "xl", "yl"),
     right_cols: tuple[str, str, str] = ("id_r", "xr", "yr"),
 ) -> DataFrame:
@@ -23,24 +22,15 @@ def grid_radius_join(
     ≤ radius² on integer coordinates. Returns
     ``(id_l, xl, yl, id_r, xr, yr, dist2)``.
 
-    Scale shape: the RIGHT side buckets once into ``cell``-sized grid
+    Scale shape: the RIGHT side buckets once into radius-sized grid
     cells (map-only); only the LEFT side replicates ×9 into its cell's
-    3×3 neighborhood. With ``cell >= radius`` a radius-R disc centered
-    anywhere in a cell cannot leave that 3×3 patch, so the candidate
-    set is provably complete; the join is a plain shuffled EQUI join
-    on the cell key plus an exact int64 residual filter. Candidate
-    volume is Σ (left cell occupancy × right 3×3 occupancy) — never
+    3×3 neighborhood. A radius-R disc centered anywhere in an R-sized
+    cell cannot leave that 3×3 patch, so the candidate set is provably
+    complete; the join is a plain shuffled EQUI join on the cell key
+    plus an exact int64 residual filter. Candidate volume is
+    Σ (left cell occupancy × right 3×3 occupancy) — never
     |left|×|right| — and a hot cell is an ordinary skewed equi key
-    (AQE splits it). Choose ``cell`` ≈ radius: larger cells cut the ×9
-    replication's constant but admit more residual-filtered
-    candidates."""
-    if cell is None:
-        cell = radius
-    if cell < radius:
-        raise ValueError(
-            f"cell ({cell}) must be >= radius ({radius}) or the 3x3 "
-            "neighborhood no longer covers the disc"
-        )
+    (AQE splits it)."""
     il, xl, yl = left_cols
     ir, xr, yr = right_cols
 
@@ -48,7 +38,7 @@ def grid_radius_join(
         # FLOOR division (Spark DIV truncates toward zero, which would
         # merge cells -1 and 0 for negative coordinates): subtract the
         # always-non-negative pmod first, then the exact DIV is floor.
-        return F.expr(f"(({col}) - pmod({col}, {cell})) DIV {cell}")
+        return F.expr(f"(({col}) - pmod({col}, {radius})) DIV {radius}")
 
     r9 = right.select(
         ir, xr, yr, gcell(xr).alias("gx"), gcell(yr).alias("gy")

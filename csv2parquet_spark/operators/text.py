@@ -183,13 +183,12 @@ PII_PATTERNS = (
 )
 
 
-def redact_pii(col: Column | str, kinds: tuple[str, ...] | None = None) -> Column:
+def redact_pii(col: Column | str) -> Column:
     """Replace each PII class with its tag — pure Catalyst
     regexp_replace chain (codegen, map-only, no Python)."""
     out = F.col(col) if isinstance(col, str) else col
-    for name, pat, tag in PII_PATTERNS:
-        if kinds is None or name in kinds:
-            out = F.regexp_replace(out, pat, tag)
+    for _name, pat, tag in PII_PATTERNS:
+        out = F.regexp_replace(out, pat, tag)
     return out
 
 

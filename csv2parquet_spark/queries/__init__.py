@@ -1,8 +1,9 @@
 """DuckDB-oracle-checked query registry (the driver t2 contract).
 
 Importing this package registers every query module's entries into
-``REGISTRY``; ``__spark_entry__.py`` re-exports them as ``queries()`` /
-``oracle_sql()``.
+``REGISTRY`` in registration order: module import order below, then
+definition order within a module. ``__spark_entry__.py`` re-exports
+them as ``queries()`` / ``oracle_sql()``.
 """
 
 from csv2parquet_spark.queries.registry import REGISTRY, register
@@ -26,78 +27,5 @@ from csv2parquet_spark.queries import corpus_extra  # noqa: E402,F401
 from csv2parquet_spark.queries import mlmetrics  # noqa: E402,F401
 from csv2parquet_spark.queries import scanopt  # noqa: E402,F401
 from csv2parquet_spark.queries import order_stats  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Driver-window rotation (automatic).
-#
-# The driver's correctness harness checks roughly the FIRST 50 registry
-# entries per round (round 1 covered exactly indices 0-49; 111 were
-# registered). To convert every local-only query into a driver-verified
-# one across rounds, the registry self-rotates from the evidence the
-# driver itself leaves behind: each round's CORRECTNESS_r{N}.json in the
-# repo root records which queries hash-matched. Ordering per round:
-#
-#   tier 0 — _FORCE_FIRST: manual re-proof list for queries whose
-#            implementation changed since their last green row (edit
-#            this when changing the behavior of an already-proven query,
-#            and drop a name once a CORRECTNESS_r{N}.json hash-matches it);
-#   tier 1 — oracle-backed queries with no hash-proof in ANY prior round
-#            (registration order) — the slots that convert claims to
-#            proofs;
-#   tier 2 — rows-only queries (oracle=None) that have never produced a
-#            driver "ran clean" row;
-#   tier 3 — everything already evidenced.
-#
-# Queries that miss this round's window stay in tier 1/2 and surface
-# automatically next round once newly-proven names drop to tier 3.
-# ---------------------------------------------------------------------------
-_FORCE_FIRST: list[str] = []
-
-
-def _proven_from_driver_rounds() -> tuple[set[str], set[str]]:
-    """(hash_proven, ran_clean) query names from CORRECTNESS_r*.json."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    hash_proven: set[str] = set()
-    ran_clean: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rounds = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(rounds, dict):
-            continue
-        for name, rec in rounds.items():
-            if not isinstance(rec, dict):
-                continue
-            if rec.get("hash_match") is True:
-                hash_proven.add(name)
-            if rec.get("spark_rows") is not None and rec.get("err") in (None, "no_oracle"):
-                ran_clean.add(name)
-    return hash_proven, ran_clean
-
-
-def _rotate() -> None:
-    """Rebuild REGISTRY (insertion-ordered dict) tiered as documented."""
-    hash_proven, ran_clean = _proven_from_driver_rounds()
-    force = [n for n in _FORCE_FIRST if n in REGISTRY]
-
-    def tier(name: str) -> int:
-        if REGISTRY[name].oracle is not None:
-            return 1 if name not in hash_proven else 3
-        return 2 if name not in ran_clean else 3
-
-    rest = [n for n in REGISTRY if n not in set(force)]
-    rest.sort(key=tier)  # stable: registration order within a tier
-    ordered = {n: REGISTRY[n] for n in [*force, *rest]}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_rotate()
 
 __all__ = ["REGISTRY", "register"]

@@ -1169,7 +1169,7 @@ def lpa_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetric=True: co-purchase edges exist in both directions by
     # construction, so superstep 1 skips the identity state join.
     labels = label_propagation(
-        edges, n_iter=3, pre_partitioned=True, ckpt_every=1, symmetric=True
+        edges, n_iter=3, ckpt_every=1, symmetric=True
     )
     return (
         labels.groupBy(F.col("lbl").alias("community"))
@@ -1240,7 +1240,7 @@ def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_edges(
         li, "l_orderkey", "l_partkey", weighted=False, partition_on="src"
     )
-    dist = bfs_hops(edges, None, n_iter=4, pre_partitioned=True)
+    dist = bfs_hops(edges, None, n_iter=4)
     return dist.groupBy(F.col("d").alias("hops")).agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.min("id").alias("min_part"),

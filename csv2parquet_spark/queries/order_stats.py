@@ -83,7 +83,7 @@ def skyline_parts_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     withprev = global_running_max(
         best, keys=["price_cents"], value_col="best_size",
-        out_col="prev_best", exclusive=True,
+        out_col="prev_best",
     )
     return withprev.filter(
         F.col("prev_best").isNull() | (F.col("best_size") > F.col("prev_best"))

@@ -387,7 +387,7 @@ def _ingest_root(name: str = "v1", digest: str | None = None) -> str:
     return os.path.join(base, f"{name}-{digest}")
 
 
-def build_incremental_ingest_fixture(spark: SparkSession) -> str:
+def build_ingest_fixture(spark: SparkSession, compacted: bool) -> str:
     """Materialize a 3-run ``convert_incremental`` dataset once
     (write-once + atomic rename, the write_day_partitioned_events
     pattern): run 1 drops a.csv + b.csv (batch=0), run 2 adds c.csv
@@ -397,113 +397,15 @@ def build_incremental_ingest_fixture(spark: SparkSession) -> str:
     converter/incremental.py; a.csv's rows exist in BOTH batch 0 and
     batch 2, which is exactly what last-batch-wins readers must
     resolve. Content is fixed (not SF-derived) so the oracle SQL can
-    carry the absolute path."""
+    carry the absolute path.
+
+    ``compacted`` builds the ``v2_compacted`` root instead of ``v1``:
+    after the three runs ``compact_incremental`` folds batches 0–2
+    into batch=3 (the reconciled latest state, one dir) and
+    ``gc_batches`` deletes the superseded dirs."""
     import shutil
 
-    root = _ingest_root()
-    done = os.path.join(root, "_DONE")
-    if os.path.exists(done):
-        st = os.stat(root)
-        if st.st_uid != os.getuid():
-            raise RuntimeError(
-                f"ingest fixture {root} exists but is owned by uid "
-                f"{st.st_uid}, not {os.getuid()} — refusing to trust a "
-                "foreign _DONE marker"
-            )
-        return root
-    from csv2parquet_spark.converter.incremental import convert_incremental
-
-    staging = f"{root}.staging.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
-    src = os.path.join(staging, "in")
-    out = os.path.join(staging, "out")
-    manifest = os.path.join(staging, "manifest.json")
-    os.makedirs(src, exist_ok=True)
-
-    def drop(name: str, rows: list[tuple[int, int]]) -> None:
-        with open(os.path.join(src, name), "w") as f:
-            f.write("k,v\n" + "".join(f"{k},{v}\n" for k, v in rows))
-
-    drop("a.csv", [(1, 10), (2, 20), (3, 30)])
-    drop("b.csv", [(4, 40), (5, 50)])
-    convert_incremental(spark, src, out, manifest)          # batch 0
-    drop("c.csv", [(6, 60), (7, 70)])
-    convert_incremental(spark, src, out, manifest)          # batch 1
-    drop("a.csv", [(1, 11), (2, 22), (3, 33), (8, 88)])     # changed
-    convert_incremental(spark, src, out, manifest)          # batch 2
-    with open(os.path.join(staging, "_DONE"), "w") as f:
-        f.write("ok\n")
-    try:
-        os.rename(staging, root)  # base dir created 0o700 by _ingest_root
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # lost an identical race
-    return root
-
-
-@register(
-    "incremental_ingest_latest",
-    # The driver-facing oracle is the INPUT CONTRACT (the three crawl
-    # drops are fixed literals), not a read of the fixture files: the
-    # driver may evaluate oracle SQL in a fresh container BEFORE the
-    # Spark query has built the /tmp fixture, and a read_parquet oracle
-    # would error on the missing path. The Spark side still does the
-    # full real work (three convert_incremental runs + the batch=*/
-    # reconcile) and must land exactly on these rows; the DuckDB
-    # hive-read-back parity over the SAME directories (read_parquet
-    # filename=true + window reconcile) is proven in
-    # tests/test_converter.py::test_incremental_ingest_duckdb_readback.
-    oracle="""
-    SELECT source, CAST(batch AS BIGINT) AS batch,
-           CAST(k AS BIGINT) AS k, CAST(v AS BIGINT) AS v
-    FROM (VALUES
-      ('b', 0, 4, 40), ('b', 0, 5, 50),
-      ('c', 1, 6, 60), ('c', 1, 7, 70),
-      ('a', 2, 1, 11), ('a', 2, 2, 22), ('a', 2, 3, 33), ('a', 2, 8, 88)
-    ) t(source, batch, k, v)
-    """,
-)
-def incremental_ingest_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end continuous ingestion (VERDICT r6 item 7): read the
-    ``--incremental-manifest`` converter's append-only ``batch=n/``
-    output and reconcile to the LATEST state — per input file,
-    last-batch-wins (the documented contract for changed inputs:
-    converter/incremental.py reconverts a changed file into a new
-    batch and readers dedup on input identity). The fixture plants a
-    changed file, so batch 0 and batch 2 both carry ``a``'s rows and
-    the reader must keep only batch 2's.
-
-    Scale shape: (source, batch) identity comes from the file PATH
-    (input_file_name — no data columns needed); the winner per source
-    is a file-count-sized aggregate broadcast back into the scan-sized
-    relation — never a data-wide window. At 100 TB the reconcile costs
-    one pass over the batches plus a broadcast semi-join on file
-    identity; with batch in the path, Spark also prunes dropped
-    batches at plan time when the winner set is static."""
-    root = build_incremental_ingest_fixture(spark)
-    raw = spark.read.parquet(f"{root}/out/batch=*/*.parquet")
-    f = F.input_file_name()
-    parsed = raw.select(
-        F.regexp_extract(f, r"/([^/]+)\.parquet/", 1).alias("source"),
-        F.regexp_extract(f, r"batch=(\d+)", 1).cast("long").alias("batch"),
-        F.col("k").cast("long").alias("k"),
-        F.col("v").cast("long").alias("v"),
-    )
-    latest = parsed.groupBy("source").agg(F.max("batch").alias("batch"))
-    return parsed.join(F.broadcast(latest), ["source", "batch"]).select(
-        "source", "batch", "k", "v"
-    )
-
-
-def build_compacted_ingest_fixture(spark: SparkSession) -> str:
-    """The v1 ingest fixture's crawl history + compaction + GC: the same
-    three convert_incremental runs (a+b → c → changed a), then
-    ``compact_incremental`` folds batches 0–2 into batch=3 (the
-    reconciled latest state, one dir) and ``gc_batches`` deletes the
-    superseded dirs. Write-once + atomic rename, per-uid scoped, like
-    the v1 fixture."""
-    import shutil
-
-    root = _ingest_root("v2_compacted")
+    root = _ingest_root("v2_compacted" if compacted else "v1")
     done = os.path.join(root, "_DONE")
     if os.path.exists(done):
         st = os.stat(root)
@@ -538,9 +440,10 @@ def build_compacted_ingest_fixture(spark: SparkSession) -> str:
     convert_incremental(spark, src, out, manifest)          # batch 1
     drop("a.csv", [(1, 11), (2, 22), (3, 33), (8, 88)])     # changed
     convert_incremental(spark, src, out, manifest)          # batch 2
-    res = compact_incremental(spark, out, manifest)         # batch 3
-    assert res.batch == 3 and res.covers_upto == 2
-    gc_batches(out, manifest)                               # drops 0-2
+    if compacted:
+        res = compact_incremental(spark, out, manifest)     # batch 3
+        assert res.batch == 3 and res.covers_upto == 2
+        gc_batches(out, manifest)                           # drops 0-2
     with open(os.path.join(staging, "_DONE"), "w") as f:
         f.write("ok\n")
     try:
@@ -548,6 +451,67 @@ def build_compacted_ingest_fixture(spark: SparkSession) -> str:
     except OSError:
         shutil.rmtree(staging, ignore_errors=True)  # lost an identical race
     return root
+
+
+def _read_latest_batches(spark: SparkSession, compacted: bool) -> DataFrame:
+    """Read an ingest fixture's append-only ``batch=n/`` output and
+    reconcile it to the LATEST state: per input file, last-batch-wins.
+
+    Scale shape: (source, batch) identity comes from the file PATH
+    (input_file_name — no data columns needed); the winner per source
+    is a file-count-sized aggregate broadcast back into the scan-sized
+    relation — never a data-wide window. At 100 TB the reconcile costs
+    one pass over the batches plus a broadcast semi-join on file
+    identity; with batch in the path, Spark also prunes dropped
+    batches at plan time when the winner set is static."""
+    root = build_ingest_fixture(spark, compacted)
+    raw = spark.read.parquet(f"{root}/out/batch=*/*.parquet")
+    f = F.input_file_name()
+    parsed = raw.select(
+        F.regexp_extract(f, r"/([^/]+)\.parquet/", 1).alias("source"),
+        F.regexp_extract(f, r"batch=(\d+)", 1).cast("long").alias("batch"),
+        F.col("k").cast("long").alias("k"),
+        F.col("v").cast("long").alias("v"),
+    )
+    latest = parsed.groupBy("source").agg(F.max("batch").alias("batch"))
+    return parsed.join(F.broadcast(latest), ["source", "batch"]).select(
+        "source", "batch", "k", "v"
+    )
+
+
+@register(
+    "incremental_ingest_latest",
+    # The driver-facing oracle is the INPUT CONTRACT (the three crawl
+    # drops are fixed literals), not a read of the fixture files: the
+    # driver may evaluate oracle SQL in a fresh container BEFORE the
+    # Spark query has built the /tmp fixture, and a read_parquet oracle
+    # would error on the missing path. The Spark side still does the
+    # full real work (three convert_incremental runs + the batch=*/
+    # reconcile) and must land exactly on these rows; the DuckDB
+    # hive-read-back parity over the SAME directories (read_parquet
+    # filename=true + window reconcile) is proven in
+    # tests/test_converter.py::test_incremental_ingest_duckdb_readback.
+    oracle="""
+    SELECT source, CAST(batch AS BIGINT) AS batch,
+           CAST(k AS BIGINT) AS k, CAST(v AS BIGINT) AS v
+    FROM (VALUES
+      ('b', 0, 4, 40), ('b', 0, 5, 50),
+      ('c', 1, 6, 60), ('c', 1, 7, 70),
+      ('a', 2, 1, 11), ('a', 2, 2, 22), ('a', 2, 3, 33), ('a', 2, 8, 88)
+    ) t(source, batch, k, v)
+    """,
+)
+def incremental_ingest_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end continuous ingestion (VERDICT r6 item 7): read the
+    ``--incremental-manifest`` converter's append-only ``batch=n/``
+    output and reconcile to the LATEST state — per input file,
+    last-batch-wins (the documented contract for changed inputs:
+    converter/incremental.py reconverts a changed file into a new
+    batch and readers dedup on input identity). The fixture plants a
+    changed file, so batch 0 and batch 2 both carry ``a``'s rows and
+    the reader must keep only batch 2's (see
+    :func:`_read_latest_batches` for the scale shape)."""
+    return _read_latest_batches(spark, compacted=False)
 
 
 @register(
@@ -586,18 +550,5 @@ def incremental_ingest_after_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics). At 100 TB this is the difference between a bounded
     store and one that keeps every superseded byte forever.
 
-    Scale shape: identical to incremental_ingest_latest — path-derived
-    identity, file-count-sized winner aggregate broadcast back."""
-    root = build_compacted_ingest_fixture(spark)
-    raw = spark.read.parquet(f"{root}/out/batch=*/*.parquet")
-    f = F.input_file_name()
-    parsed = raw.select(
-        F.regexp_extract(f, r"/([^/]+)\.parquet/", 1).alias("source"),
-        F.regexp_extract(f, r"batch=(\d+)", 1).cast("long").alias("batch"),
-        F.col("k").cast("long").alias("k"),
-        F.col("v").cast("long").alias("v"),
-    )
-    latest = parsed.groupBy("source").agg(F.max("batch").alias("batch"))
-    return parsed.join(F.broadcast(latest), ["source", "batch"]).select(
-        "source", "batch", "k", "v"
-    )
+    Scale shape: identical to incremental_ingest_latest."""
+    return _read_latest_batches(spark, compacted=True)

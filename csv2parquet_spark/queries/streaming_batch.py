@@ -1,8 +1,9 @@
 """Windowed event aggregations (SURVEY.md §2.6) — the batch-replay side.
 
-These use the exact operators Structured Streaming runs (``F.window``,
-``F.session_window``); ``csv2parquet_spark.streaming`` wires the same
-transformations onto ``readStream`` and the pytest suite asserts
+The window twins call the operators of ``csv2parquet_spark.streaming``
+(``F.window``, ``F.session_window``) on the static events table, where
+the analyzer drops their ``withWatermark``; the streaming side wires the
+same functions onto ``readStream`` and the pytest suite asserts
 stream-vs-batch equality. Oracles via DuckDB ``time_bucket`` (10-minute
 buckets align across engines: both origins are midnight-aligned).
 """
@@ -32,17 +33,9 @@ from csv2parquet_spark.tables import table
 )
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute tumbling windows over events (batch twin of the stream)."""
-    e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value"), "total_value"))
-        .select(
-            F.unix_millis("w.start").alias("window_start_ms"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+    from csv2parquet_spark.streaming.windows import tumbling_counts
+
+    return tumbling_counts(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -60,16 +53,9 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5 — each event lands in exactly
     two windows (the two 5-minute-aligned starts covering it)."""
-    e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n"), dsum(F.col("value"), "total_value"))
-        .select(
-            F.unix_millis("w.start").alias("window_start_ms"),
-            "n",
-            "total_value",
-        )
-    )
+    from csv2parquet_spark.streaming.windows import sliding_counts
+
+    return sliding_counts(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -124,17 +110,9 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-minute gap) per user via F.session_window —
     the same operator Structured Streaming uses for stateful sessions.
     Oracle replays the classic gaps-and-islands SQL."""
-    e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
-        .select(
-            "user_id",
-            F.unix_millis("w.start").alias("session_start_ms"),
-            F.unix_millis("last_ts").alias("session_end_ms"),
-            "n_events",
-        )
-    )
+    from csv2parquet_spark.streaming.windows import session_counts
+
+    return session_counts(table(spark, sf_dir, "events"))
 
 
 @register(

@@ -2,11 +2,12 @@
 §2.6): file-source readStream, tumbling/sliding/session windows,
 watermark late-data handling, stateful dedup, continuous CSV→Parquet.
 
-Each transformation is the SAME DataFrame expression the batch queries
-in ``queries/streaming_batch.py`` use — the pytest suite replays the
-parquet through ``readStream`` and asserts stream == batch (SURVEY §5.2
-item 5). Watermarks bound the state store per key; at scale the state
-is sharded by the groupBy key across executors.
+The batch queries in ``queries/streaming_batch.py`` call the window
+functions here on the static table (``withWatermark`` is a no-op in a
+batch plan) — the pytest suite replays the parquet through
+``readStream`` and asserts stream == batch (SURVEY §5.2 item 5).
+Watermarks bound the state store per key; at scale the state is
+sharded by the groupBy key across executors.
 """
 
 from __future__ import annotations

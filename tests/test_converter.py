@@ -1393,9 +1393,9 @@ def test_incremental_ingest_duckdb_readback(spark):
     import duckdb
 
     from csv2parquet_spark.queries import REGISTRY
-    from csv2parquet_spark.queries.scanopt import build_incremental_ingest_fixture
+    from csv2parquet_spark.queries.scanopt import build_ingest_fixture
 
-    root = build_incremental_ingest_fixture(spark)
+    root = build_ingest_fixture(spark, compacted=False)
     got = {
         (r.source, r.batch, r.k, r.v)
         for r in REGISTRY["incremental_ingest_latest"]

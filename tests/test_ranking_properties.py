@@ -73,6 +73,6 @@ def test_two_pass_ranking_machinery_matches_python(spark, case):
     }
     best, want_rm = None, {}
     for k in want_order:
+        want_rm[k] = best  # max over the strictly preceding keys
         best = wmap[k] if best is None else max(best, wmap[k])
-        want_rm[k] = best
     assert rm == want_rm

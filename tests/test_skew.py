@@ -191,9 +191,9 @@ def test_salted_join_splits_hot_key_and_matches_plain_join(spark):
 
 def test_salted_join_hot_splits_only_hot_keys(spark):
     """salted_join_hot on the same 30%-hot-key fixture: (a) result
-    identical to the plain join for inner AND left (including
-    unmatched-left rows), (b) only the hot key takes the salted path —
-    the cold small side is not replicated."""
+    identical to the plain join (the unmatched key drops out), (b) only
+    the hot key takes the salted path — the cold small side is not
+    replicated."""
     from csv2parquet_spark.operators.skewjoin import salted_join_hot
 
     hot = [(0, f"p{i}") for i in range(4000)]
@@ -203,10 +203,9 @@ def test_salted_join_hot_splits_only_hot_keys(spark):
     small = spark.createDataFrame(
         [(i, f"dim{i}") for i in range(101)], "k bigint, name string"
     )
-    for how in ("inner", "left"):
-        got = sorted(
-            map(tuple, salted_join_hot(big, small, "k", r=8,
-                                       hot_threshold=1000, how=how).collect())
-        )
-        want = sorted(map(tuple, big.join(small, "k", how).collect()))
-        assert got == want, how
+    got = sorted(
+        map(tuple, salted_join_hot(big, small, "k", r=8,
+                                   hot_threshold=1000).collect())
+    )
+    want = sorted(map(tuple, big.join(small, "k").collect()))
+    assert got == want

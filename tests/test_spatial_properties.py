@@ -2,7 +2,7 @@
 on ARBITRARY integer point sets (negative coordinates, points on exact
 cell edges, pairs at exactly radius distance) the blocked join must
 return exactly the brute-force pair set — the 3×3 neighbor replication
-is provably complete for cell >= radius, and these examples hunt the
+of radius-sized cells is provably complete, and these examples hunt the
 boundary cases a fixture never exercises.
 """
 
@@ -17,8 +17,8 @@ SETTINGS = settings(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 
-# Small coordinate range relative to cell=10 so cells are densely hit
-# and edges/negatives occur constantly.
+# Small coordinate range relative to the cell (= radius <= 10) so cells
+# are densely hit and edges/negatives occur constantly.
 POINTS = st.lists(
     st.tuples(
         st.integers(min_value=-35, max_value=35),
@@ -44,7 +44,7 @@ def test_grid_radius_join_matches_bruteforce(spark, lpts, rpts, radius):
     )
     got = {
         (r.id_l, r.id_r, r.dist2)
-        for r in grid_radius_join(left, right, radius=radius, cell=10).collect()
+        for r in grid_radius_join(left, right, radius=radius).collect()
     }
     want = {
         (i, j, (xa - xb) ** 2 + (ya - yb) ** 2)
@@ -53,13 +53,3 @@ def test_grid_radius_join_matches_bruteforce(spark, lpts, rpts, radius):
         if (xa - xb) ** 2 + (ya - yb) ** 2 <= radius * radius
     }
     assert got == want
-
-
-def test_grid_radius_join_rejects_undersized_cell(spark):
-    import pytest
-
-    from csv2parquet_spark.operators.spatial import grid_radius_join
-
-    df = spark.range(1).selectExpr("id AS id_l", "id AS xl", "id AS yl")
-    with pytest.raises(ValueError, match="must be >= radius"):
-        grid_radius_join(df, df, radius=100, cell=10)
